@@ -31,25 +31,6 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Run INDEPENDENT driver-side fit protocols concurrently (guide §2.6:
-    * Spark actions are only sequential because the driver calls them
-    * sequentially; concurrent jobs back-fill executors freed by each
-    * other's scheduling gaps and stragglers). Results come back in input
-    * order. Each thunk must be deterministic in isolation — job overlap
-    * changes only WHEN tasks run, never any fit's input partitioning or
-    * per-partition row order, so every result is bit-identical to the
-    * sequential run. */
-  private def inParallel[A](thunks: Seq[() => A]): Seq[A] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, thunks.size))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence(thunks.toList.map(th => Future(th()))), Duration.Inf)
-    finally pool.shutdown()
-  }
-
   /** Cent-long derivation for a 2-decimal money/value column — integral
     * doubles keep Summarize sums exact across engines (the q10 doctrine). */
   private def centsOf(c: Column): Column =
@@ -2894,7 +2875,7 @@ object SparkEntry {
       // Pinned: the bare fitTreeSpec evaluates its input RDD 2-3× inside
       // one fit (findSplits sample + treePoint conversion) and the test
       // scan re-reads it again — the m21/m22 pin doctrine (fit-safe:
-      // partitions and row order preserved; Scratch SPEC-EQUAL).
+      // partitions and row order preserved; PinnedFitSpec).
       val o = t(s, dir, "orders").select(
         ((col("o_totalprice") > 250000) =!= (col("o_orderpriority") === "1-URGENT"))
           .cast("double").as("label"),
@@ -2926,8 +2907,8 @@ object SparkEntry {
       // pin it so the scan + md5 gating runs once (guide §2.4). The pin
       // is fit-safe: localCheckpoint materializes the SAME partitions in
       // the SAME row order, and MLlib's findSplits sampling is a pure
-      // function of (seed, partitionIndex, row order) — Scratch
-      // SPEC-EQUAL pins all three trees bit-identical pinned vs not.
+      // function of (seed, partitionIndex, row order) — PinnedFitSpec
+      // pins all three trees bit-identical pinned vs not.
       val o = t(s, dir, "orders").select(
         ((col("o_totalprice") > 250000) =!= (col("o_orderpriority") === "1-URGENT"))
           .cast("double").as("label"),
@@ -2944,7 +2925,7 @@ object SparkEntry {
       // as concurrent jobs (guide §2.6). Each fit's input lineage and
       // partitioning are untouched, so all three trees are bit-identical
       // to the sequential run; only the wall-clock overlaps.
-      val fits = inParallel(fractions.map { case (pct, gate) => () =>
+      val fits = Tables.concurrently(fractions.map { case (pct, gate) => () =>
         (pct, gate, graft.ml.CohortClassifier.fitTreeSpec(
           o.where(!isTest && gate),
           Seq("o_totalprice", "is_urgent", "order_year"), "label",
@@ -3045,8 +3026,8 @@ object SparkEntry {
     "m23_ensemble" -> ((s, dir) => {
       // o feeds THREE consumers (two concurrent fits via train, test
       // scoring) — pin like m21; fit-safe for the same reason (the
-      // checkpoint preserves partitions and row order; Scratch
-      // SPEC-EQUAL pins the tree, and the IRLS cells are aggregates)
+      // checkpoint preserves partitions and row order; PinnedFitSpec
+      // pins the tree, and the IRLS cells are aggregates)
       val o = t(s, dir, "orders").select(
         ((col("o_totalprice") > 250000) =!= (col("o_orderpriority") === "1-URGENT"))
           .cast("double").as("label"),
@@ -3063,7 +3044,7 @@ object SparkEntry {
       // tree fit and logistic IRLS are independent protocols over the
       // same (re-scanned) train frame — concurrent jobs (guide §2.6),
       // bit-identical results (neither touches the other's partitioning)
-      val (tree, logit) = inParallel(Seq(
+      val (tree, logit) = Tables.concurrently(Seq(
         () => Left(graft.ml.CohortClassifier.fitTreeSpec(train,
           Seq("o_totalprice", "is_urgent", "order_year"), "label",
           maxDepth = 4)),
@@ -5851,8 +5832,9 @@ object SparkEntry {
     // oversized-basket guard, integer counts, one final divide. ----------
     "n19_cooccurrence" -> ((s, dir) =>
       // broadcastTotals: the item vocabulary is partkeys — catalog-sized
-      // (|part| rows), bounded at any corpus scale, so the totals side
-      // broadcasts safely into both back-joins
+      // (|part| = 200k × SF rows), so it grows with scale and is NOT
+      // bounded; the totals side broadcasts into both back-joins only
+      // while |part| fits the broadcast budget (no runtime guard yet)
       graft.sim.Cooccurrence.itemPairs(t(s, dir, "lineitem"),
         "l_orderkey", "l_partkey", minCount = 2L, maxBasketSize = 100,
         broadcastTotals = true)),

@@ -27,21 +27,25 @@ object Tables {
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Partition count `df` would execute with. For a NARROW chain of
-    * Project/Filter over ONE file-source relation — the shape of every
-    * spread-helper call site — that count is the scan's split count, a
-    * pure function of (files, split confs, parallelism), so it is probed
-    * ONCE per distinct (session, paths, confs) and cached. The old
-    * per-call `df.rdd.getNumPartitions` planned AND code-generated the
+    * Project/Filter over ONE unpartitioned file-source relation — the shape
+    * of every spread-helper call site — that count is the scan's split
+    * count, a pure function of (files, split confs, parallelism), so it is
+    * probed ONCE per distinct (paths, confs) per session and cached. The
+    * old per-call `df.rdd.getNumPartitions` planned AND code-generated the
     * whole projection on every call (~70 ms warm), a pure planning tax
     * paid ~10 call sites × (warmup + 3 timed passes) per bench run.
-    * Anything not scan-rooted falls back to the exact probe — which also
+    * Anything else falls back to the exact probe: a partitioned relation
+    * (a pushed partition filter prunes files, so the split count depends
+    * on the plan, not just the paths), and any non-scan input — which also
     * keeps the documented precondition honest (ADVICE r12): under AQE, a
     * probe on an exchange-containing plan executes the upstream stages;
-    * the narrow-chain check guarantees the cached path is scan-only, and
-    * callers passing non-scan inputs simply keep the old behavior. */
-  private val scanParts =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Integer]
-  private def inputPartitions(df: DataFrame): Int = {
+    * the narrow-chain check guarantees the cached path is scan-only.
+    * Sessions key the cache weakly, so a stopped session's entries go
+    * with it. */
+  private val scanParts = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, Integer]])
+  private[graft] def inputPartitions(df: DataFrame): Int = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     def narrow(p: LogicalPlan): Boolean = p match {
@@ -55,14 +59,15 @@ object Tables {
     val cached: Option[Int] =
       if (narrow(plan)) plan.collectLeaves() match {
         case Seq(l: LogicalRelation) => l.relation match {
-          case h: HadoopFsRelation =>
+          case h: HadoopFsRelation if h.partitionSchema.isEmpty =>
             val conf = df.sparkSession.sessionState.conf
-            val key = (df.sparkSession,
-              h.location.rootPaths.mkString(",") +
-                s"|${conf.filesMaxPartitionBytes}|${conf.filesOpenCostInBytes}" +
-                s"|${conf.filesMinPartitionNum}" +
-                s"|${df.sparkSession.sparkContext.defaultParallelism}")
-            Some(scanParts.computeIfAbsent(key,
+            val key = h.location.rootPaths.mkString(",") +
+              s"|${conf.filesMaxPartitionBytes}|${conf.filesOpenCostInBytes}" +
+              s"|${conf.filesMinPartitionNum}" +
+              s"|${df.sparkSession.sparkContext.defaultParallelism}"
+            val perSession = scanParts.computeIfAbsent(df.sparkSession,
+              _ => new java.util.concurrent.ConcurrentHashMap[String, Integer])
+            Some(perSession.computeIfAbsent(key,
               _ => Integer.valueOf(df.rdd.getNumPartitions)).intValue())
           case _ => None
         }

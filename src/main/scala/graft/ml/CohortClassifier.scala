@@ -304,6 +304,8 @@ object CohortClassifier {
     } yield (d, m, g)).toIndexedSeq
     val rng = new scala.util.Random(seed)
     val warm = rng.shuffle(space).take(math.min(nWarmup, budget))
+    // own pool, not Tables.concurrently: width is `parallelism`, so the
+    // warmup batch never fans out wider than the caller asked for
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     def evalBatch(ps: Seq[(Int, Int, Double)]) =

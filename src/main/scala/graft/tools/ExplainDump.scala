@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` for named `SparkEntry` queries to files,
@@ -10,9 +9,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * Usage:
   *   sbt "runMain graft.tools.ExplainDump <sfDir> <outDir> <tag> <q>[,<q>...]"
   *
-  * The session mirrors Bench's confs (shuffle partitions = cpus, AQE on,
-  * non-ANSI, nanos-as-long, no NTZ inference) so the captured plan is the
-  * one the bench actually runs.
+  * The session is Bench's own ([[graft.Sessions.local]]), so the captured
+  * plan is the one the bench actually runs.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -21,21 +19,7 @@ object ExplainDump {
     val tag = args.lift(2).getOrElse("before")
     val names = args.lift(3).map(_.split(",").toSeq)
       .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.codegen.maxFields", "1024")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     try names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

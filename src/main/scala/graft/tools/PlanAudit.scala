@@ -1,16 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.window.WindowExec
-
-/** Whole-surface plan audit: for every `SparkEntry` query, count loop
-  * joins, hash exchanges, and partition-less window nodes, so a regression
-  * anywhere in the 90+-query surface shows up as one changed line instead
-  * of a slow bench entry three rounds later.
-  *
-  * Usage: `sbt "runMain graft.tools.PlanAudit [sfDir]"` — prints one line
-  * per query plus a summary of queries carrying loop joins or global
-  * windows (each of which should be on the documented deliberate list).
+/** Registries of the deliberate global-window queries. The whole-surface
+  * plan audit (loop joins, hash exchanges, partition-less windows for every
+  * `SparkEntry` query) is `PlanAuditSpec`, the gate; Bench reads the same
+  * registries to attribute its runtime window WARNs.
   */
 object PlanAudit {
   /** Queries whose executed plan carries a partition-less `WindowExec` ON
@@ -91,39 +84,4 @@ object PlanAudit {
     "m22_perm_importance",
     // m23: one m4-shaped tree-fit sub-job behind the ensemble scan
     "m23_ensemble")
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val loops = scala.collection.mutable.ArrayBuffer[String]()
-    val globals = scala.collection.mutable.ArrayBuffer[String]()
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val qe = fn(spark, sfDir).queryExecution
-        val p = qe.executedPlan.toString
-        val nLoop = "BroadcastNestedLoopJoin".r.findAllIn(p).length +
-          "CartesianProduct".r.findAllIn(p).length
-        val nHash = "Exchange hashpartitioning".r.findAllIn(p).length
-        val nGlobalWin = qe.sparkPlan.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w
-        }.length
-        if (nLoop > 0) loops += name
-        if (nGlobalWin > 0) globals += name
-        println(f"AUDIT $name%-26s loops=$nLoop hashEx=$nHash globalWin=$nGlobalWin")
-      } catch {
-        case t: Throwable => println(s"AUDIT $name ERROR: ${t.getClass.getSimpleName}")
-      }
-    }
-    println(s"AUDIT-SUMMARY loop_joins=[${loops.mkString(",")}]")
-    println(s"AUDIT-SUMMARY global_windows=[${globals.mkString(",")}]")
-    spark.stop()
-  }
 }

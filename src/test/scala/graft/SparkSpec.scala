@@ -10,27 +10,6 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // fresh warehouse per JVM: saveAsTable(Overwrite) fails on orphaned
-      // locations left by a previous session's in-memory catalog
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the regenerated testdata stores timestamps as MICROS with
-      // isAdjustedToUTC=false; read them as plain TimestampType (the
-      // round-9 types) instead of TIMESTAMP_NTZ so every plan, pushdown,
-      // and oracle comparison is unchanged
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // reference semantics: Spark-3/Databricks non-ANSI (bad cast → NULL)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Bench's own session posture ([[Sessions.local]]), at 4 cores. */
+  lazy val session: SparkSession = Sessions.local(4)
 }

@@ -49,4 +49,18 @@ class TablesSpec extends SparkSpec {
       if (exact * 2 < target) target else exact
     assert(out.rdd.getNumPartitions == expect)
   }
+
+  test("a partition-filtered scan reports its own, pruned split count") {
+    val dir = java.nio.file.Files.createTempDirectory("tables-spec").toString
+    // one file per g directory: several splits unfiltered, one after pruning
+    spark.range(7000).selectExpr("id", "id % 7 AS g").repartition(1)
+      .write.partitionBy("g").parquet(s"$dir/p.parquet")
+    val all = spark.read.parquet(s"$dir/p.parquet").select(col("id"))
+    val pruned = spark.read.parquet(s"$dir/p.parquet")
+      .where(col("g") === 3).select(col("id"))
+    // probe the unfiltered scan first so a paths-keyed cache would be warm
+    assert(Tables.inputPartitions(all) == all.rdd.getNumPartitions)
+    assert(Tables.inputPartitions(pruned) == pruned.rdd.getNumPartitions)
+    assert(pruned.rdd.getNumPartitions < all.rdd.getNumPartitions)
+  }
 }

@@ -97,7 +97,7 @@ class ApproxDedupQualitySpec extends SparkSpec {
 
   // ---------------- adversarial 10-clique density (the sf1 rehearsal shape)
 
-  /** Every base doc becomes a 10-member near-dup clique (ScaleRehearsal's
+  /** Every base doc becomes a 10-member near-dup clique (tools.ScaleUp's
     * replica perturbation: a short suffix), so band buckets see clique
     * pileups ~10× denser than a neutral corpus — the density the bucket
     * caps were designed for. Intra-clique pairs are the high-Jaccard truth
