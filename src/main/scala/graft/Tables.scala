@@ -17,15 +17,6 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Spread a scan across all cores for CPU-bound per-row work. A single
-    * small parquet file arrives as ONE input split, serializing e.g. a
-    * 64-hash MinHash signature pass onto one thread; at real scale inputs
-    * come pre-split, but compute-heavy stages must never inherit accidental
-    * single-partition layouts. The shuffle this inserts moves only the
-    * scanned columns and is amortized by the downstream per-row work. */
-  def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
   /** Partition count `df` would execute with. For a NARROW chain of
     * Project/Filter over ONE unpartitioned file-source relation — the shape
     * of every spread-helper call site — that count is the scan's split
@@ -42,7 +33,7 @@ object Tables {
     * the narrow-chain check guarantees the cached path is scan-only.
     * Sessions key the cache weakly, so a stopped session's entries go
     * with it. */
-  private val scanParts = java.util.Collections.synchronizedMap(
+  private[graft] val scanParts = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, Integer]])
   private[graft] def inputPartitions(df: DataFrame): Int = {
@@ -55,7 +46,9 @@ object Tables {
       case a: SubqueryAlias => narrow(a.child)
       case _ => false
     }
-    val plan = df.queryExecution.logical
+    // analyzed, not logical: a bare `spark.read.parquet` frame's logical
+    // plan is an unresolved data source, which would always miss the cache
+    val plan = df.queryExecution.analyzed
     val cached: Option[Int] =
       if (narrow(plan)) plan.collectLeaves() match {
         case Seq(l: LogicalRelation) => l.relation match {
@@ -76,17 +69,17 @@ object Tables {
     cached.getOrElse(df.rdd.getNumPartitions)
   }
 
-  /** [[spread]] only when the plan would otherwise run on materially fewer
-    * partitions than the session parallelism — the scale-adaptive form: a
-    * single-file local scan (1 split) gets fanned out, while a pre-split
-    * production input (partitions ≥ cores) passes through untouched, so
-    * the repartition can never become a pointless full-data shuffle at
-    * scale. Use on a NARROW projection so the inserted shuffle moves only
-    * the columns the downstream aggregate needs (guide: project before
-    * the exchange). PRECONDITION: the input should be scan-rooted
-    * (Project/Filter over one table) — that is what makes the partition
-    * probe cacheable and cheap; see [[inputPartitions]]. */
-  def spreadIfNarrow(df: DataFrame): DataFrame = {
+  /** Spread a scan across all cores for CPU-bound per-row work, but only
+    * when the plan would otherwise run on materially fewer partitions than
+    * the session parallelism. A single small parquet file arrives as ONE
+    * input split, serializing e.g. a 64-hash MinHash signature pass onto
+    * one thread, so it gets fanned out; a pre-split production input
+    * (partitions × 2 ≥ cores) passes through untouched, so the repartition
+    * never becomes a pointless full-data shuffle at scale. Use on a scan or
+    * a NARROW projection of one, so the inserted shuffle moves only the
+    * columns the downstream work needs and the partition probe is cached;
+    * see [[inputPartitions]]. */
+  def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (inputPartitions(df) * 2 < target) df.repartition(target) else df
   }
@@ -109,13 +102,6 @@ object Tables {
     else df
   }
 
-  def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
-  def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
-  def customer(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "customer")
-  def supplier(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "supplier")
-  def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")
-  def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
-  def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   /** Normalize the events `ts` column to plain TimestampType whatever the
     * parquet generation stored:
     *  - TIMESTAMP(NANOS) reads as a raw long under
@@ -140,8 +126,6 @@ object Tables {
       case _ => raw
     }
   }
-  def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
-  def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
   /** Run INDEPENDENT eager driver-side protocols as concurrent Spark jobs
     * (guide §2.6: actions are only sequential because the driver calls

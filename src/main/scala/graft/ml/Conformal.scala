@@ -114,7 +114,7 @@ object Conformal {
     // split otherwise hashes on one core; no-op on pre-split inputs), and
     // pin the hashed base: train/cal/test and the ks total all read it, so
     // the corpus is scanned and hashed ONCE instead of per consumer
-    val base = graft.Tables.spreadIfNarrow(
+    val base = graft.Tables.spread(
         df.where(xCol.isNotNull && yCol.isNotNull)
           .select(keyCol.cast("string").as("k"), x.as("xd"), y.as("yd")))
       .select(substring(md5(col("k")), 1, 1).as("h"), col("xd"), col("yd"))

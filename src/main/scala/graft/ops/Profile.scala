@@ -229,7 +229,7 @@ object Profile {
     // one cent cast per column per row, shared by every pair arm; fan a
     // single-split local scan out over the cores (scale-adaptive no-op on
     // pre-split inputs) — the k²·3 cross-product sums are the CPU cost
-    val cents = graft.Tables.spreadIfNarrow(df.select(cols.map(c =>
+    val cents = graft.Tables.spread(df.select(cols.map(c =>
       (col(c).cast("decimal(12,2)") * 100).cast("long").as(c)): _*))
     val aggs = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
       val both = col(a).isNotNull && col(b).isNotNull

@@ -153,7 +153,7 @@ object Regression {
       ((yCol.cast("decimal(12,2)") * 100).cast("long").as("_yc")) +:
         xs.indices.map(i =>
           (xs(i)._2.cast("decimal(12,2)") * 100).cast("long").as(s"_xc$i")): _*)
-    val w = graft.Tables.spreadIfNarrow(cents)
+    val w = graft.Tables.spread(cents)
     val xc = xs.indices.map(i => col(s"_xc$i"))
     val yc = col("_yc")
     def s1(c: Column) = sum(c.cast("decimal(18,0)")).cast("decimal(28,0)")

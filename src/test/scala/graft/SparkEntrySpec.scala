@@ -8,6 +8,25 @@ class SparkEntrySpec extends SparkSpec {
     assert(stray.isEmpty, s"oracle entries without queries: $stray")
   }
 
+  private def registered = SparkEntry.families.flatMap(_.queries)
+
+  test("the rows-only queries are exactly the five declared ones") {
+    val rowsOnly = registered.filter(_.oracle == queries.Oracle.RowsOnly).map(_.name)
+    assert(rowsOnly.toSet == Set("d2_minhash_neardup", "d3_simhash_neardup",
+      "r1_perm_test", "r3_fdr", "r7_permanova"))
+  }
+
+  test("no query name is registered twice across families") {
+    val twice = registered.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(twice.isEmpty, s"registered twice: $twice")
+  }
+
+  test("every family registers only names with its own prefix") {
+    val strays = SparkEntry.families.flatMap(f =>
+      f.queries.map(_.name).filterNot(_.matches(s"${f.prefix}\\d+_.*")))
+    assert(strays.isEmpty, s"names outside their family prefix: $strays")
+  }
+
   test("entry() returns rows on sf0.001 (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** The spread helpers' partition probe: the cached scan-rooted path must
@@ -15,13 +17,13 @@ class TablesSpec extends SparkSpec {
     s"$dir/t.parquet"
   }
 
-  test("spreadIfNarrow decides like the exact probe on scan-rooted input") {
+  test("spread decides like the exact probe on scan-rooted input") {
     val path = writeTable(rows = 10000, parts = 1)
     val df = spark.read.parquet(path)
       .where(col("v").isNotNull).select((col("v") * 2).as("w"))
     val exact = df.rdd.getNumPartitions
     val target = spark.sparkContext.defaultParallelism
-    val out = Tables.spreadIfNarrow(df)
+    val out = Tables.spread(df)
     if (exact * 2 < target)
       assert(out.rdd.getNumPartitions == target, "should have spread")
     else
@@ -44,10 +46,26 @@ class TablesSpec extends SparkSpec {
     val agg = spark.read.parquet(path).groupBy(col("g")).agg(sum(col("v")).as("s"))
     val exact = agg.rdd.getNumPartitions
     val target = spark.sparkContext.defaultParallelism
-    val out = Tables.spreadIfNarrow(agg)
+    val out = Tables.spread(agg)
     val expect =
       if (exact * 2 < target) target else exact
     assert(out.rdd.getNumPartitions == expect)
+  }
+
+  test("a pre-split scan passes through spread unchanged") {
+    // one file per partition, each its own split: 2 × splits ≥ parallelism
+    val target = spark.sparkContext.defaultParallelism
+    val df = spark.read.parquet(writeTable(rows = 1000, parts = target))
+    assert(df.rdd.getNumPartitions * 2 >= target)
+    assert(Tables.spread(df) eq df)
+  }
+
+  test("a bare read is answered from the per-session cache") {
+    val path = writeTable(rows = 1000, parts = 1)
+    val bare = spark.read.parquet(path)
+    assert(Tables.inputPartitions(bare) == bare.rdd.getNumPartitions)
+    val keys = Option(Tables.scanParts.get(spark)).map(_.keySet.asScala).getOrElse(Set.empty)
+    assert(keys.exists(_.contains(path)), s"no cache entry for $path in $keys")
   }
 
   test("a partition-filtered scan reports its own, pruned split count") {

@@ -63,7 +63,7 @@ class WindowDistinctToAggregateSpec extends SparkSpec {
   }
 
   test("w1-style query over real data: rewrite ≡ original") {
-    val li = Tables.lineitem(spark, "/root/testdata/sf0.001")
+    val li = graft.Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
     val q = li.select($"l_returnflag",
         sum($"l_quantity").over(Window.partitionBy($"l_returnflag")).as("qty_total"))
       .distinct()
@@ -71,10 +71,5 @@ class WindowDistinctToAggregateSpec extends SparkSpec {
     assert(rewritten)
     assert(Bridge.ofRows(spark, plan).collect().map(_.toSeq).toSet ==
       q.collect().map(_.toSeq).toSet)
-  }
-
-  private object Tables {
-    def lineitem(s: org.apache.spark.sql.SparkSession, dir: String) =
-      graft.Tables.load(s, dir, "lineitem")
   }
 }

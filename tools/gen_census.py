@@ -18,7 +18,7 @@ import os
 import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ENTRY = os.path.join(ROOT, "src/main/scala/graft/SparkEntry.scala")
+QUERIES = os.path.join(ROOT, "src/main/scala/graft/queries")
 MAIN = os.path.join(ROOT, "src/main/scala")
 TEST = os.path.join(ROOT, "src/test/scala")
 
@@ -29,14 +29,12 @@ def newest_correctness():
 
 
 def query_blocks(src):
-    """(name, body) for each top-level `"name" -> ((s, dir) =>` entry."""
-    pat = re.compile(r'^    "([a-z]\w+)" -> \(\(', re.M)
-    starts = [(m.group(1), m.start()) for m in pat.finditer(src)]
-    out = []
-    for i, (name, pos) in enumerate(starts):
-        end = starts[i + 1][1] if i + 1 < len(starts) else len(src)
-        out.append((name, src[pos:end]))
-    return out
+    """(name, body) for each `Query("name", (s, dir) =>` entry of a family
+    file: the Spark body, up to the line that declares its oracle."""
+    pat = re.compile(r'^    Query\("([a-z]\w+)", ', re.M)
+    oracle = re.compile(r'^\s*(Sql\b|Fitted\(|RowsOnly\b)', re.M)
+    return [(m.group(1), src[m.start():oracle.search(src, m.end()).start()])
+            for m in pat.finditer(src)]
 
 
 def object_files():
@@ -62,7 +60,8 @@ def spec_index():
 
 
 def main():
-    src = open(ENTRY, encoding="utf-8").read()
+    src = "".join(open(p, encoding="utf-8").read()
+                  for p in sorted(glob.glob(os.path.join(QUERIES, "*.scala"))))
     correctness = newest_correctness()
     files = object_files()
     specs = spec_index()
