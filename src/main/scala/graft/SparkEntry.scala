@@ -33,8 +33,11 @@ object SparkEntry {
 
   private def registry: Seq[Query] = families.flatMap(_.queries)
 
+  /** Each query's frame as its body builds it, with a small final sort done
+    * in one partition ([[Tables.sortSmallInOnePartition]]). */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.run).toMap
+    registry.map(q => q.name -> ((spark: SparkSession, dir: String) =>
+      Tables.sortSmallInOnePartition(q.run(spark, dir)))).toMap
 
   /** Read after the queries ran: a fitted query's replay exists only once it
     * has run in this JVM. */

@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Oracle.Sql
@@ -8,6 +9,37 @@ import Shared._
 
 /** a-family: approximate sketches, their error bounds and heavy hitters. */
 object SketchQueries extends Family("a") {
+
+  /** a9/a10 per return flag: the exact distinct counts, and whether the HLL
+    * and ACD distinct estimates and the approximate p95 land inside their
+    * bands (named by the three column arguments). The exact counts and the
+    * sketches are two aggregations joined on the flag: in one `agg`,
+    * `countDistinct` makes Spark's distinct rewrite expand every row once
+    * per distinct column and carry every sketch buffer through it. */
+  private def sketchBands(s: SparkSession, dir: String, hllBand: String,
+      acdBand: String, p95Band: String): DataFrame = {
+    val lineitem = t(s, dir, "lineitem")
+    val exact = lineitem.groupBy(col("l_returnflag")).agg(
+      countDistinct(col("l_orderkey")).as("exact_orders"),
+      countDistinct(col("l_partkey")).as("exact_parts"))
+    val sketches = lineitem.groupBy(col("l_returnflag")).agg(
+      hll_sketch_estimate(hll_sketch_agg(col("l_orderkey"))).as("__hll"),
+      approx_count_distinct(col("l_partkey"), 0.02).as("__acd"),
+      percentile_approx(col("l_extendedprice"), lit(0.95), lit(1000)).as("__p95a"),
+      percentile(col("l_extendedprice"), lit(0.94)).as("__p94x"),
+      percentile(col("l_extendedprice"), lit(0.96)).as("__p96x"))
+    // both sides come out hash-partitioned on the flag, so a shuffled join
+    // needs no exchange; a broadcast would cost a job of its own
+    exact.join(sketches.hint("shuffle_hash"), Seq("l_returnflag"))
+      .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
+        (abs(col("__hll") - col("exact_orders")) <=
+          col("exact_orders") * 0.05).as(hllBand),
+        (abs(col("__acd") - col("exact_parts")) <=
+          col("exact_parts") * 0.06).as(acdBand),
+        (col("__p95a") >= col("__p94x") && col("__p95a") <= col("__p96x"))
+          .as(p95Band))
+      .orderBy(col("l_returnflag"))
+  }
 
   val queries: Seq[Query] = Seq(
     // ---- sketch aggregates: HLL distinct + t-digest percentile ----------
@@ -20,26 +52,8 @@ object SketchQueries extends Family("a") {
     // same published tolerance bands — the hash match certifies both
     // engines' estimators landed inside the guarantees, no literal TRUEs
     // (a10 keeps the literal-TRUE twin for the Spark-only sketch set) ------
-    Query("a9_sketches", (s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          countDistinct(col("l_orderkey")).as("exact_orders"),
-          countDistinct(col("l_partkey")).as("exact_parts"),
-          hll_sketch_estimate(hll_sketch_agg(col("l_orderkey"))).as("__hll"),
-          approx_count_distinct(col("l_partkey"), 0.02).as("__acd"),
-          percentile_approx(col("l_extendedprice"), lit(0.95), lit(1000)).as("__p95a"),
-          percentile(col("l_extendedprice"), lit(0.94)).as("__p94x"),
-          percentile(col("l_extendedprice"), lit(0.96)).as("__p96x"))
-        .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
-          (abs(col("__hll") - col("exact_orders")) <=
-            col("exact_orders") * 0.05).as("hll_in_band"),
-          (abs(col("__acd") - col("exact_parts")) <=
-            col("exact_parts") * 0.06).as("acd_in_band"),
-          (col("__p95a") >= col("__p94x") && col("__p95a") <= col("__p96x"))
-            .as("p95_in_band"))
-        .orderBy(col("l_returnflag"))
-    },
+    Query("a9_sketches", (s, dir) =>
+      sketchBands(s, dir, "hll_in_band", "acd_in_band", "p95_in_band"),
       // exact distinct counts replay in DuckDB; the booleans are asserted
       // literally TRUE — Spark computes them from the sketch guarantees, so a
       // hash match certifies the estimates landed inside their bounds
@@ -64,26 +78,8 @@ object SketchQueries extends Family("a") {
     // by the exact 0.94/0.96 quantiles). The oracle replays the exact side
     // and asserts the booleans literally TRUE — a hash match certifies every
     // sketch landed inside its bound. SketchAccuracySpec keeps tighter ones.
-    Query("a10_sketch_bounds", (s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          countDistinct(col("l_orderkey")).as("exact_orders"),
-          countDistinct(col("l_partkey")).as("exact_parts"),
-          hll_sketch_estimate(hll_sketch_agg(col("l_orderkey"))).as("__hll"),
-          approx_count_distinct(col("l_partkey"), 0.02).as("__acd"),
-          percentile_approx(col("l_extendedprice"), lit(0.95), lit(1000)).as("__p95a"),
-          percentile(col("l_extendedprice"), lit(0.94)).as("__p94x"),
-          percentile(col("l_extendedprice"), lit(0.96)).as("__p96x"))
-        .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
-          (abs(col("__hll") - col("exact_orders")) <=
-            col("exact_orders") * 0.05).as("hll_within_eps"),
-          (abs(col("__acd") - col("exact_parts")) <=
-            col("exact_parts") * 0.06).as("acd_within_eps"),
-          (col("__p95a") >= col("__p94x") && col("__p95a") <= col("__p96x"))
-            .as("p95_within_bounds"))
-        .orderBy(col("l_returnflag"))
-    },
+    Query("a10_sketch_bounds", (s, dir) =>
+      sketchBands(s, dir, "hll_within_eps", "acd_within_eps", "p95_within_bounds"),
       Sql("""SELECT l_returnflag,
            count(DISTINCT l_orderkey) AS exact_orders,
            count(DISTINCT l_partkey) AS exact_parts,

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 /** Contract guards for the driver interface. */
 class SparkEntrySpec extends SparkSpec {
 
@@ -25,6 +28,24 @@ class SparkEntrySpec extends SparkSpec {
     val strays = SparkEntry.families.flatMap(f =>
       f.queries.map(_.name).filterNot(_.matches(s"${f.prefix}\\d+_.*")))
     assert(strays.isEmpty, s"names outside their family prefix: $strays")
+  }
+
+  test("query files read the vendored tables only through Tables.load") {
+    // Tables.load caches each input's schema per session; a bare parquet read
+    // would infer it again on every call
+    val dir = Paths.get(sys.props("user.dir"), "src/main/scala/graft/queries")
+    assert(Files.isDirectory(dir), s"no query sources at $dir")
+    val reads = Files.list(dir).iterator().asScala.toSeq.sortBy(_.toString)
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(".read.parquet(") =>
+          s"${p.getFileName}:${i + 1}: ${line.trim}"
+      })
+    // p7 and p8 read back the layouts they wrote themselves
+    val ownLayouts = reads.filter(r => r.startsWith("ProjectionQueries.scala:") &&
+      r.endsWith(".read.parquet(root)"))
+    assert(ownLayouts.size == 2, s"$ownLayouts")
+    assert(reads.diff(ownLayouts).isEmpty,
+      s"bare parquet reads: ${reads.diff(ownLayouts).mkString("; ")}")
   }
 
   test("entry() returns rows on sf0.001 (driver smoke contract)") {
