@@ -606,11 +606,8 @@ object EventQueries extends Family("e") {
     // replays relationally; the in-query require additionally pins
     // summary == fresh batch recompute engine-side. --------------------
     Query("e10_stream_rollup", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-e10-$pid/base_$sfx"
-      val sroot = sys.props("java.io.tmpdir") + s"/graft-e10-$pid/sum_$sfx"
+      val root = scratch("e10", "base", dir)
+      val sroot = scratch("e10", "sum", dir)
       val S = graft.sources.SnapshotTable
       val IA = graft.sources.IncrementalAgg
       val ev = Tables.events(s, dir)
@@ -680,10 +677,7 @@ object EventQueries extends Family("e") {
     // pins the version accounting of both defenses. The oracle assigns
     // each day its final owner relationally via dense_rank. -------------
     Query("e12_stream_replace", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-e12-$pid/days_$sfx"
+      val root = scratch("e12", "days", dir)
       val S = graft.sources.SnapshotTable
       val ES = graft.streaming.EventStream
       val ev = Tables.events(s, dir)
@@ -746,12 +740,9 @@ object EventQueries extends Family("e") {
     // user's newest event changes type, so distinct counts move in both
     // directions; the in-query require pins summary == batch recompute.
     Query("e11_stream_distinct", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-e11-$pid/base_$sfx"
-      val sroot = sys.props("java.io.tmpdir") + s"/graft-e11-$pid/sum_$sfx"
-      val droot = sys.props("java.io.tmpdir") + s"/graft-e11-$pid/det_$sfx"
+      val root = scratch("e11", "base", dir)
+      val sroot = scratch("e11", "sum", dir)
+      val droot = scratch("e11", "det", dir)
       val S = graft.sources.SnapshotTable
       val IA = graft.sources.IncrementalAgg
       val dc = ("cohort", "cohorts")

@@ -221,13 +221,10 @@ object JoinQueries extends Family("j") {
     // task writes exactly one bucket file and scans stay sorted.
     Query("j5_bucketed_join", (s, dir) => {
       // layout tables are per-(session, sfDir): write once, reuse on
-      // re-invocation. The dir suffix is a collision-resistant md5 (a
-      // 32-bit String.hashCode collision between two dirs in one session
-      // would silently serve stale data); both tables are checked so a
-      // half-completed first write is retried, not half-reused.
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString.take(16)
+      // re-invocation. The dir suffix is [[Shared.dirDigest]]; both tables
+      // are checked so a half-completed first write is retried, not
+      // half-reused.
+      val sfx = dirDigest(dir, 16)
       val (liTable, oTable) = (s"graft_j5_lineitem_$sfx", s"graft_j5_orders_$sfx")
       if (!s.catalog.tableExists(liTable) || !s.catalog.tableExists(oTable)) {
         val li = t(s, dir, "lineitem")

@@ -67,8 +67,7 @@ object ProjectionQueries extends Family("p") {
     // DPP reuses the broadcast dim to prune fact partitions before the scan.
     Query("p7_partition_prune", (s, dir) => {
       val ev = Tables.events(s, dir)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-p7-${ProcessHandle.current().pid()}/events_by_day"
+      val root = scratch("p7", "events_by_day", dir)
       // reuse is gated on the _SUCCESS marker, not bare dir existence: a
       // write that died partway leaves a directory but no marker, and must
       // be rewritten (mode=overwrite), never silently read as complete
@@ -113,10 +112,7 @@ object ProjectionQueries extends Family("p") {
     // replays the box filter + aggregate on the RAW table, so the hash
     // match proves the re-layout changed bytes-on-disk, not content. ------
     Query("p8_zorder_scan", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-p8-${ProcessHandle.current().pid()}/li_z_$sfx"
+      val root = scratch("p8", "li_z", dir)
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_SUCCESS")))
         graft.ops.Layout.zorder(
             t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"),

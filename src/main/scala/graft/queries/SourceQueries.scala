@@ -15,11 +15,8 @@ object SourceQueries extends Family("s") {
     Query("s1_tsv_roundtrip", (s, dir) => {
       import org.apache.spark.sql.types._
       val sample = t(s, dir, "region")
-      // per-process fixed path (writeTsv overwrites): repeated invocations in
-      // one JVM reuse a directory instead of leaking one per run, while
-      // concurrent Verify/Bench processes never race on the same files
-      val tmp = sys.props("java.io.tmpdir") +
-        s"/graft-s1-${ProcessHandle.current().pid()}/region_tsv"
+      // writeTsv overwrites, so repeated invocations reuse the scratch dir
+      val tmp = scratch("s1", "region_tsv", dir)
       graft.sources.Sources.writeTsv(sample, tmp)
       graft.sources.Sources.readTsv(s, tmp, Some(StructType(Seq(
           StructField("r_regionkey", IntegerType), StructField("r_name", StringType)))))
@@ -31,10 +28,7 @@ object SourceQueries extends Family("s") {
     // doc_id order via the sharded prefix (no global sort); the append's
     // start comes from fastStats' metadata-only MAX — no high-water scan.
     Query("s33_identity", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s33-$pid/doc_ids_$sfx"
+      val root = scratch("s33", "doc_ids", dir)
       val S = graft.sources.SnapshotTable
       val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
       if (S.latestVersion(root) == 0) {
@@ -177,10 +171,7 @@ object SourceQueries extends Family("s") {
     // the whole lifecycle relationally; the rename itself is invisible to
     // it, which is exactly the contract (same data, new logical name). --
     Query("s31_column_mapping", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s31-$pid/cust_cm_$sfx"
+      val root = scratch("s31", "cust_cm", dir)
       val S = graft.sources.SnapshotTable
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
@@ -243,10 +234,7 @@ object SourceQueries extends Family("s") {
     // replays the expression relationally over the same slices; the
     // invariant "stored ≡ formula" is what makes them identical. ---------
     Query("s32_generated_cols", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s32-$pid/ord_gen_$sfx"
+      val root = scratch("s32", "ord_gen", dir)
       val S = graft.sources.SnapshotTable
       val bucketExpr =
         "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) DIV 5000000"
@@ -288,8 +276,7 @@ object SourceQueries extends Family("s") {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
-      val tmp = sys.props("java.io.tmpdir") +
-        s"/graft-s21-${ProcessHandle.current().pid()}/lineitem_orc"
+      val tmp = scratch("s21", "lineitem_orc", dir)
       graft.sources.Sources.writeOrc(li, tmp, singleFile = false)
       graft.sources.Sources.readOrc(s, tmp)
         .groupBy(col("l_returnflag"))
@@ -312,8 +299,7 @@ object SourceQueries extends Family("s") {
     Query("s2_json_roundtrip", (s, dir) => {
       import org.apache.spark.sql.types._
       val sample = t(s, dir, "region")
-      val tmp = sys.props("java.io.tmpdir") +
-        s"/graft-s2-${ProcessHandle.current().pid()}/region_jsonl"
+      val tmp = scratch("s2", "region_jsonl", dir)
       graft.sources.Sources.writeJsonl(sample, tmp)
       graft.sources.Sources.readJsonl(s, tmp, Some(StructType(Seq(
           StructField("r_regionkey", IntegerType), StructField("r_name", StringType)))))
@@ -327,8 +313,7 @@ object SourceQueries extends Family("s") {
     Query("s4_excel_roundtrip", (s, dir) => {
       val sample = t(s, dir, "region")
         .select(col("r_regionkey").cast("string").as("r_regionkey"), col("r_name"))
-      val tmp = sys.props("java.io.tmpdir") +
-        s"/graft-s4-${ProcessHandle.current().pid()}/region.xlsx"
+      val tmp = scratch("s4", "region", dir) + ".xlsx"
       graft.sources.Xlsx.write(sample, tmp, sheetName = "Liczba odpowiedzi 1")
       graft.sources.Xlsx.read(s, tmp, "Liczba odpowiedzi 1", firstRowAsHeader = true)
         .select(col("r_regionkey").cast("int").as("r_regionkey"), col("r_name"))
@@ -346,10 +331,7 @@ object SourceQueries extends Family("s") {
     // untouched. The oracle replays the slice swap relationally; row-level
     // output so every kept/replaced/dropped row value is in the hash. ------
     Query("s24_replace_where", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s24-$pid/ord_rw_$sfx"
+      val root = scratch("s24", "ord_rw", dir)
       val S = graft.sources.SnapshotTable
       val ord = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -394,11 +376,8 @@ object SourceQueries extends Family("s") {
     // it and this query would error — the hard-link contract keeps both
     // lineages independent. The oracle replays both heads relationally. --
     Query("s27_clone", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val src = sys.props("java.io.tmpdir") + s"/graft-s27-$pid/src_$sfx"
-      val cln = sys.props("java.io.tmpdir") + s"/graft-s27-$pid/cln_$sfx"
+      val src = scratch("s27", "src", dir)
+      val cln = scratch("s27", "cln", dir)
       val S = graft.sources.SnapshotTable
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -449,10 +428,7 @@ object SourceQueries extends Family("s") {
     // pruned delete, restore) pins version, operation, and live-file
     // count against a literal replay. -------------------------------------
     Query("s28_history", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s28-$pid/hist_$sfx"
+      val root = scratch("s28", "hist", dir)
       val S = graft.sources.SnapshotTable
       val ord = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -482,10 +458,7 @@ object SourceQueries extends Family("s") {
     // the rewrite re-derived its envelopes. The hash match certifies the
     // metadata arithmetic against the relational truth. -------------------
     Query("s29_metadata_agg", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s29-$pid/meta_$sfx"
+      val root = scratch("s29", "meta", dir)
       val S = graft.sources.SnapshotTable
       val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
       if (S.latestVersion(root) == 0) {
@@ -525,10 +498,7 @@ object SourceQueries extends Family("s") {
     // explicit NULL literal, so the hash match certifies evolution + NULL
     // backfill row-for-row. ------------------------------------------------
     Query("s26_schema_evolution", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s26-$pid/ord_ev_$sfx"
+      val root = scratch("s26", "ord_ev", dir)
       val S = graft.sources.SnapshotTable
       val ord = t(s, dir, "orders")
       if (S.latestVersion(root) == 0) {
@@ -560,10 +530,7 @@ object SourceQueries extends Family("s") {
     // relationally; row-level output so every kept/updated/deleted/
     // inserted value is in the hash. ---------------------------------------
     Query("s22_merge_conditional", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s22-$pid/ord_cm_$sfx"
+      val root = scratch("s22", "ord_cm", dir)
       val S = graft.sources.SnapshotTable
       val ord = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -614,10 +581,7 @@ object SourceQueries extends Family("s") {
     // v1 relational definition: a hash match proves the rollback is
     // bit-faithful. ------------------------------------------------------
     Query("s23_restore", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s23-$pid/ord_rs_$sfx"
+      val root = scratch("s23", "ord_rs", dir)
       val S = graft.sources.SnapshotTable
       val ord = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -647,10 +611,7 @@ object SourceQueries extends Family("s") {
     // mutations; the oracle replays each version's relational definition
     // and a hash match certifies snapshot isolation, not just row counts.
     Query("s20_time_travel", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s20-$pid/ord_tt_$sfx"
+      val root = scratch("s20", "ord_tt", dir)
       val S = graft.sources.SnapshotTable
       val ord = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -703,8 +664,7 @@ object SourceQueries extends Family("s") {
 
     Query("s5_snapshot_roundtrip", (s, dir) => {
       val region = t(s, dir, "region").select(col("r_regionkey"), col("r_name"))
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s5-${ProcessHandle.current().pid()}/region_snap"
+      val root = scratch("s5", "region_snap", dir)
       graft.sources.SnapshotTable.write(
         region.where(col("r_regionkey") < 2), root, mode = "overwrite")
       graft.sources.SnapshotTable.write(
@@ -722,8 +682,7 @@ object SourceQueries extends Family("s") {
     Query("s8_merge_upsert", (s, dir) => {
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s8-${ProcessHandle.current().pid()}/cust_merge"
+      val root = scratch("s8", "cust_merge", dir)
       graft.sources.SnapshotTable.write(
         cust.where(col("c_custkey") <= 300), root, mode = "overwrite")
       graft.sources.SnapshotTable.merge(
@@ -757,8 +716,7 @@ object SourceQueries extends Family("s") {
     Query("s35_version_diff", (s, dir) => {
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s35-${ProcessHandle.current().pid()}/cust_diff"
+      val root = scratch("s35", "cust_diff", dir)
       // scale-free slices (digit-of-key, not absolute ranges): digits 4–5
       // update, 6–7 insert, at EVERY scale factor — an absolute key range
       // merges nothing at sf0.001 and the diff comes back empty
@@ -819,10 +777,7 @@ object SourceQueries extends Family("s") {
     // Iceberg/Delta file-skipping loop closed inside the engine's own
     // table format. Oracle = the raw-table relational replay. ------------
     Query("s9_stats_pruned_scan", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s9-${ProcessHandle.current().pid()}/li_snap_$sfx"
+      val root = scratch("s9", "li_snap", dir)
       if (graft.sources.SnapshotTable.latestVersion(root) == 0)
         graft.sources.SnapshotTable.write(
           graft.ops.Layout.zorder(
@@ -856,10 +811,7 @@ object SourceQueries extends Family("s") {
     // IN-BAND that pruning really bit (kept < total), so a silently
     // envelope-less write cannot hash-match. Oracle = relational replay. --
     Query("s25_lang_pruned_scan", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s25-${ProcessHandle.current().pid()}/docs_lang_$sfx"
+      val root = scratch("s25", "docs_lang", dir)
       val S = graft.sources.SnapshotTable
       if (S.latestVersion(root) == 0)
         S.write(
@@ -887,10 +839,7 @@ object SourceQueries extends Family("s") {
     // append*-compact-read round trip, and the query itself asserts the
     // layout actually shrank (a no-op compact would still hash-match). --
     Query("s10_compacted_scan", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s10-${ProcessHandle.current().pid()}/cust_compact_$sfx"
+      val root = scratch("s10", "cust_compact", dir)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
         .where(col("c_custkey") <= 800)
@@ -925,10 +874,7 @@ object SourceQueries extends Family("s") {
     // replays every insert/delete event relationally, so the hash match
     // certifies the whole write→delete→compact→changes round trip. ------
     Query("s11_changes_read", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s11-${ProcessHandle.current().pid()}/nation_cdc_$sfx"
+      val root = scratch("s11", "nation_cdc", dir)
       val nat = t(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       val S = graft.sources.SnapshotTable
@@ -983,10 +929,7 @@ object SourceQueries extends Family("s") {
     // relationally, so the hash match certifies the captured rows, their
     // change types, and their version stamps all at once. --------------
     Query("s12_cdc_rowlevel", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s12-${ProcessHandle.current().pid()}/cust_cdc_$sfx"
+      val root = scratch("s12", "cust_cdc", dir)
       val S = graft.sources.SnapshotTable
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -1048,10 +991,7 @@ object SourceQueries extends Family("s") {
     // input (total/4 → 4 packed files) so the shape is scale-proof.
     // Oracle = the raw-table relational replay (content identical). ------
     Query("s13_zorder_compact", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s13-${ProcessHandle.current().pid()}/li_zcompact_$sfx"
+      val root = scratch("s13", "li_zcompact", dir)
       val S = graft.sources.SnapshotTable
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
@@ -1096,10 +1036,7 @@ object SourceQueries extends Family("s") {
     // applied transparently. Oracle = the relational remainder, so the
     // hash match certifies position capture + masked read end to end. --
     Query("s14_mor_delete", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s14-${ProcessHandle.current().pid()}/orders_mor_$sfx"
+      val root = scratch("s14", "orders_mor", dir)
       val S = graft.sources.SnapshotTable
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -1140,10 +1077,7 @@ object SourceQueries extends Family("s") {
     // exactly 2×matched events. Oracle = the relational CASE over the
     // base table. ------------------------------------------------------
     Query("s16_mor_update", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s16-${ProcessHandle.current().pid()}/orders_morupd_$sfx"
+      val root = scratch("s16", "orders_morupd", dir)
       val S = graft.sources.SnapshotTable
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -1193,11 +1127,8 @@ object SourceQueries extends Family("s") {
     // from the mutated base — a hash match certifies the whole chain:
     // capture, delta fold, merge, empty-group deletion. ------------------
     Query("s17_incremental_agg", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s17-$pid/ord_base_$sfx"
-      val sroot = sys.props("java.io.tmpdir") + s"/graft-s17-$pid/ord_sum_$sfx"
+      val root = scratch("s17", "ord_base", dir)
+      val sroot = scratch("s17", "ord_sum", dir)
       val S = graft.sources.SnapshotTable
       val IA = graft.sources.IncrementalAgg
       val ord = t(s, dir, "orders")
@@ -1263,12 +1194,9 @@ object SourceQueries extends Family("s") {
     // whose only orders die, so both distinct transitions run; the
     // in-query require pins incremental == fresh batch recompute. ------
     Query("s19_incremental_distinct", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s19-$pid/ord_base_$sfx"
-      val sroot = sys.props("java.io.tmpdir") + s"/graft-s19-$pid/ord_sum_$sfx"
-      val droot = sys.props("java.io.tmpdir") + s"/graft-s19-$pid/ord_det_$sfx"
+      val root = scratch("s19", "ord_base", dir)
+      val sroot = scratch("s19", "ord_sum", dir)
+      val droot = scratch("s19", "ord_det", dir)
       val S = graft.sources.SnapshotTable
       val IA = graft.sources.IncrementalAgg
       val dc = ("o_custkey", "custs")
@@ -1335,11 +1263,8 @@ object SourceQueries extends Family("s") {
     // ARE retracted and the rescan path runs for real; the in-query
     // require pins incremental == fresh batch recompute. ----------------
     Query("s18_incremental_minmax", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val pid = ProcessHandle.current().pid()
-      val root = sys.props("java.io.tmpdir") + s"/graft-s18-$pid/ord_base_$sfx"
-      val sroot = sys.props("java.io.tmpdir") + s"/graft-s18-$pid/ord_sum_$sfx"
+      val root = scratch("s18", "ord_base", dir)
+      val sroot = scratch("s18", "ord_sum", dir)
       val S = graft.sources.SnapshotTable
       val IA = graft.sources.IncrementalAgg
       val mm = Seq(("o_totalprice", "tp_min", "tp_max"))
@@ -1404,10 +1329,7 @@ object SourceQueries extends Family("s") {
     // postimage rows with the assignments applied. Oracle = the
     // relational replay of both event classes. --------------------------
     Query("s15_cow_update", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s15-${ProcessHandle.current().pid()}/orders_upd_$sfx"
+      val root = scratch("s15", "orders_upd", dir)
       val S = graft.sources.SnapshotTable
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -1462,10 +1384,7 @@ object SourceQueries extends Family("s") {
     // folds into (key, valid_from, valid_to, is_current) intervals; the
     // oracle rebuilds every interval relationally from the base table. ---
     Query("s34_scd2", (s, dir) => {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s34-${ProcessHandle.current().pid()}/cust_scd2_$sfx"
+      val root = scratch("s34", "cust_scd2", dir)
       val S = graft.sources.SnapshotTable
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -1516,8 +1435,7 @@ object SourceQueries extends Family("s") {
     Query("s36_check_enforced", (s, dir) => {
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-s36-${ProcessHandle.current().pid()}/cust_checks"
+      val root = scratch("s36", "cust_checks", dir)
       graft.sources.SnapshotTable.write(
         cust.where(col("c_acctbal") >= 0), root, mode = "overwrite")
       graft.sources.SnapshotTable.addCheckConstraint(

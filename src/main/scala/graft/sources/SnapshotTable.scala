@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.UUID
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.jdk.CollectionConverters._
@@ -35,7 +36,10 @@ import scala.jdk.CollectionConverters._
   * concurrent committer gets FileAlreadyExists, re-resolves the new head,
   * rebuilds its delta (append re-reads ONE raw manifest; overwrite needs
   * nothing) and retries — optimistic concurrency, winner decided by the
-  * filesystem's atomic create.
+  * filesystem's atomic create. The row-level writers (compact, the
+  * copy-on-write and merge-on-read delete/update, replaceWhere) share one
+  * rule for when a change computed from an older snapshot may still
+  * commit: [[commitOrStale]].
   *
   * Scale note: on a local/HDFS filesystem `Files.move` is a rename; the
   * manifest lists RELATIVE paths so the table directory is relocatable. A
@@ -345,6 +349,14 @@ object SnapshotTable {
     Manifest(head.version, head.op, head.schema, files, stats, dvs, head.colmap)
   }
 
+  /** Resolved live state of `version`, or of the head when None; an
+    * empty table (version 0) is an error. */
+  private def snapshot(root: String, version: Option[Int] = None): Manifest = {
+    val v = version.getOrElse(latestVersion(root))
+    require(v > 0, s"snapshot table at $root has no committed version")
+    readManifest(root, v)
+  }
+
   /** Write `df` into the table. `mode` ∈ {"overwrite", "append"}. Returns
     * the committed version.
     *
@@ -532,9 +544,7 @@ object SnapshotTable {
     * arithmetic on the driver. */
   def fastStats(root: String, cols: Seq[String],
       version: Option[Int] = None): Option[(Long, Map[String, (Double, Double)])] = {
-    val v = version.getOrElse(latestVersion(root))
-    require(v > 0, s"snapshot table at $root has no committed version")
-    val m = readManifest(root, v)
+    val m = snapshot(root, version)
     cols.foreach { c =>
       val f = m.schema.fields.find(_.name == c)
       require(f.exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]),
@@ -588,19 +598,27 @@ object SnapshotTable {
     * pruned frame plus (filesKept, filesTotal) for observability. */
   def readPruned(spark: SparkSession, root: String, col: String,
       lo: Double, hi: Double, version: Option[Int] = None): (DataFrame, (Int, Int)) = {
-    val v = version.getOrElse(latestVersion(root))
-    require(v > 0, s"snapshot table at $root has no committed version")
-    val m = readManifest(root, v)
-    val kept = m.files.filter { f =>
-      m.stats.get(f).flatMap(_.get(physName(m.colmap, col))) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
+    val m = snapshot(root, version)
+    val kept = pruned(m, Some((col, lo, hi)))
     // envelopes are over-approximations after a merge-on-read delete (the
     // vector can only shrink a file's live range) — pruning stays safe
     (readFiles(spark, root, m, kept), (kept.size, m.files.size))
   }
+
+  /** Live files of `m` whose [min, max] envelope on the hint's column
+    * meets its [lo, hi] — every live file without a hint. A file with no
+    * envelope on the column cannot be skipped, so it is kept. */
+  private def pruned(m: Manifest, hint: Option[(String, Double, Double)]): Seq[String] =
+    hint.fold(m.files) { case (c, lo, hi) =>
+      m.files.filter(f => m.stats.get(f).flatMap(_.get(physName(m.colmap, c)))
+        .forall { case (mn, mx) => mx >= lo && mn <= hi })
+    }
+
+  /** Sorted column set the live files of `m` carry envelopes on, plus
+    * `extra`: a writer that rewrites files re-derives footer stats over the
+    * same set, so [[readPruned]] skipping survives the rewrite. */
+  private def statsColumns(m: Manifest, extra: Seq[String] = Nil): Seq[String] =
+    (m.stats.valuesIterator.flatMap(_.keysIterator).toSet ++ extra).toSeq.sorted
 
   /** Delta-style MERGE (upsert): rows of `updates` REPLACE current rows
     * sharing the same `keyCols` values; unmatched update rows insert. One
@@ -630,10 +648,10 @@ object SnapshotTable {
     var committed = -1
     while (committed < 0) {
       val base = latestVersion(root)
-      val (merged, baseStatsCols, changes) =
-        if (base == 0) (updates, Set.empty[String], None)
-        else {
-          val m = readManifest(root, base)
+      val head = if (base == 0) None else Some(readManifest(root, base))
+      val (merged, changes) = head match {
+        case None => (updates, None)
+        case Some(m) =>
           // same evolution contract as append: field drift is refused
           // unless flagged, then the union schema applies and unionByName
           // backfills NULL on either side
@@ -659,26 +677,31 @@ object SnapshotTable {
               Some(pre.unionByName(post, allowMissingColumns = mergeSchema)
                 .unionByName(ins, allowMissingColumns = mergeSchema))
             }
-          (keep.unionByName(updates, allowMissingColumns = mergeSchema),
-            // a merge rewrites every file, so the base's envelopes can't
-            // carry over by file name — re-derive them for the staged
-            // files over the SAME column set, so a stats-pruned table
-            // keeps its readPruned skipping across upserts
-            m.stats.valuesIterator.flatMap(_.keysIterator).toSet,
-            changeDf)
-        }
-      val cols = (baseStatsCols ++ statsCols).toSeq.sorted
-      val staged = stage(merged, root)
-      val cdcStaged = changes.map(stageChanges(_, root)).getOrElse(Nil)
-      val cm = if (base == 0) Map.empty[String, String]
-        else readRaw(root, base).colmap
-      committed = tryCommit(root, base, "merge", merged.schema.json, staged,
-        footerStats(root, staged, cols, cm), cdcStaged, txn = txn, colmap = cm)
+          (keep.unionByName(updates, allowMissingColumns = mergeSchema), changeDf)
+      }
+      committed = commitMerged(root, head, merged, changes, statsCols, txn)
       // lost the race: the staged files stay orphaned in data/ (and
       // _changes/) until [[vacuum]] — no manifest references them, same
       // as any aborted commit in the open formats
     }
     committed
+  }
+
+  /** The tail of [[merge]] and [[mergeConditional]]: stage the merged
+    * snapshot and its change rows, then try to commit them as a checkpoint
+    * at `base` + 1 (version 1 on an empty table). A merge rewrites every
+    * file, so the base's envelopes cannot carry over by file name; they
+    * are re-derived for the staged files over the base's column set plus
+    * `statsCols`. Returns the version, or -1 on a lost race. */
+  private def commitMerged(root: String, base: Option[Manifest], merged: DataFrame,
+      changes: Option[DataFrame], statsCols: Seq[String],
+      txn: Map[String, String]): Int = {
+    val staged = stage(merged, root)
+    val cdcStaged = changes.map(stageChanges(_, root)).getOrElse(Nil)
+    val cm = base.fold(Map.empty[String, String])(_.colmap)
+    val cols = base.fold(statsCols.distinct.sorted)(statsColumns(_, statsCols))
+    tryCommit(root, base.fold(0)(_.version), "merge", merged.schema.json, staged,
+      footerStats(root, staged, cols, cm), cdcStaged, txn = txn, colmap = cm)
   }
 
   /** Delta RESTORE: commit a NEW version whose live state (files, stats,
@@ -805,14 +828,14 @@ object SnapshotTable {
     var committed = -1
     while (committed < 0) {
       val base = latestVersion(root)
-      val (merged, baseStatsCols, changes) =
-        if (base == 0) {
+      val head = if (base == 0) None else Some(readManifest(root, base))
+      val (merged, changes) = head match {
+        case None =>
           val ins = if (insertUnmatched) updates else updates.limit(0)
-          (ins, Set.empty[String],
+          (ins,
             if (changeCapture) Some(ins.withColumn("_change_type", lit("insert")))
             else None)
-        } else {
-          val m = readManifest(root, base)
+        case Some(m) =>
           require(m.schema.fieldNames.sorted.sameElements(
             updates.schema.fieldNames.sorted),
             "mergeConditional refuses schema drift — align the update " +
@@ -849,16 +872,9 @@ object SnapshotTable {
               Some(deleted.unionByName(pre).unionByName(post).unionByName(
                 inserts.withColumn("_change_type", lit("insert"))))
             }
-          (kept.unionByName(inserts),
-            m.stats.valuesIterator.flatMap(_.keysIterator).toSet, changeDf)
-        }
-      val cols = (baseStatsCols ++ statsCols).toSeq.sorted
-      val staged = stage(merged, root)
-      val cdcStaged = changes.map(stageChanges(_, root)).getOrElse(Nil)
-      val cm = if (base == 0) Map.empty[String, String]
-        else readRaw(root, base).colmap
-      committed = tryCommit(root, base, "merge", merged.schema.json, staged,
-        footerStats(root, staged, cols, cm), cdcStaged, txn = txn, colmap = cm)
+          (kept.unionByName(inserts), changeDf)
+      }
+      committed = commitMerged(root, head, merged, changes, statsCols, txn)
     }
     committed
   }
@@ -877,12 +893,9 @@ object SnapshotTable {
     * get fresh footer-derived envelopes over the SAME column set, so
     * [[readPruned]] skipping survives compaction.
     *
-    * Concurrency (optimistic, same [[tryCommit]] contract as merge): on a
-    * lost race, if the new head still lists every input file (a concurrent
-    * APPEND landed), the packed data is still exact — re-base the file
-    * list and retry without rewriting; if any input vanished (concurrent
-    * overwrite/merge/compact), the packed files are stale — abandon them
-    * as vacuum-able orphans and re-select from the new head.
+    * Concurrency: [[commitOrStale]] — the packed files replace their
+    * inputs, so a concurrent append re-bases and a concurrent rewrite of
+    * an input re-packs from the new head.
     *
     * `zorderBy` (OPTIMIZE ZORDER BY): instead of name-order bin-packing —
     * which preserves EXISTING clustering bin-locally but cannot create
@@ -904,16 +917,11 @@ object SnapshotTable {
       zorderBy: Seq[String] = Nil, zorderBits: Int = 12): Int = {
     require(targetBytes > 0 && smallFraction > 0 && smallFraction <= 1)
     val cutoff = (targetBytes * smallFraction).toLong
-    var committed = -1
-    var result = -1
-    while (committed < 0 && result < 0) {
-      val base = latestVersion(root)
-      require(base > 0, s"snapshot table at $root has no committed version")
-      val m = readManifest(root, base)
+    fromHead(root) { m =>
       val sized = m.files.sorted.map { f =>
         f -> Files.size(dataDir(root).resolve(f)) }
       val small = sized.filter(_._2 < cutoff)
-      if (small.size < 2) result = base // nothing to gain
+      if (small.size < 2) Some(m.version) // nothing to gain
       else {
         // first-fit over name order: consecutive files share a bin until
         // the target would overflow (parquet re-encoding changes sizes a
@@ -924,8 +932,6 @@ object SnapshotTable {
           case (acc, (f, fsz)) => (List(f), fsz) :: acc
         }.map(_._1.reverse).reverse
         val inputs = small.map(_._1).toSet
-        val statsCols = (m.stats.valuesIterator.flatMap(_.keysIterator).toSet
-          ++ zorderBy).toSeq.sorted
         // one packed file per bin (each bin reads in name order, lands as
         // a single part), or one globally re-clustered rewrite when
         // z-ordering; stage() moves parts under a commit-unique prefix
@@ -943,28 +949,10 @@ object SnapshotTable {
           } else bins.flatMap { bin =>
             stage(readFiles(spark, root, m, bin).coalesce(1), root)
           }
-        val stagedStats = footerStats(root, staged, statsCols)
-        // commit loop for THIS packing (a DELTA: remove inputs, add packed
-        // files): re-base over appends, bail to re-pack when an input was
-        // rewritten (or re-deleted — its vector changed) underneath us
-        var stale = false
-        var attemptRaw = readRaw(root, base)
-        while (committed < 0 && !stale) {
-          committed = commitChange(root, attemptRaw, "compact",
-            attemptRaw.schema.json, adds = staged, removes = inputs,
-            addStats = stagedStats)
-          if (committed < 0) {
-            val head = latestVersion(root)
-            val hm = readManifest(root, head)
-            if (inputs.forall(f => hm.files.contains(f) &&
-                hm.dvs.get(f) == m.dvs.get(f)))
-              attemptRaw = readRaw(root, head)
-            else stale = true // packed content no longer matches — restart
-          }
-        }
+        commitOrStale(root, m, "compact", inputs, adds = staged,
+          removes = inputs, footerStats(root, staged, statsColumns(m, zorderBy)))
       }
     }
-    if (committed > 0) committed else result
   }
 
   /** Copy-on-write DELETE: removes rows matching `condition` by rewriting
@@ -981,87 +969,19 @@ object SnapshotTable {
     * Hit files rewrite as a group (filter keeps rows where the condition
     * is false OR NULL — SQL DELETE semantics) and commit as a DELTA
     * (remove hits, add rewrites), so commit cost is O(changed files).
-    * Concurrency mirrors [[compact]]: a lost race re-bases over appends
-    * (file-local rewrites stay exact — appends only add files) and
-    * restarts from scratch when an input file vanished (concurrent
-    * overwrite/merge/compact). Returns (version, filesRewritten,
+    * Concurrency: [[commitOrStale]]. Returns (version, filesRewritten,
     * filesSkipped); an all-skip delete commits nothing and returns the
     * current version. */
   def deleteWhere(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column,
       pruneHint: Option[(String, Double, Double)] = None,
       changeCapture: Boolean = false): (Int, Int, Int) = {
-    import org.apache.spark.sql.functions.{col => fcol, input_file_name, coalesce, lit}
-    var done: Option[(Int, Int, Int)] = None
-    while (done.isEmpty) {
-      val base = latestVersion(root)
-      require(base > 0, s"snapshot table at $root has no committed version")
-      val m = readManifest(root, base)
-      val candidates = pruneHint match {
-        case Some((c, lo, hi)) => m.files.filter { f =>
-          m.stats.get(f).flatMap(_.get(physName(m.colmap, c))) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true // no envelope: cannot skip
-          }
-        }
-        case None => m.files
-      }
-      if (candidates.isEmpty) done = Some((base, 0, m.files.size))
-      else {
-        // ONE job over the candidates to find files with real LIVE matches
-        // (deletion vectors applied — a file whose only matches are
-        // already dv-deleted keeps its bytes untouched); the distinct is
-        // file-count-sized, never row-sized
-        val hitNames = readFiles(spark, root, m, candidates, keepFilePos = true)
-          .where(condition).select(fcol("__file")).distinct()
-          .collect().map(_.getString(0)).toSet
-        val hits = candidates.filter(hitNames)
-        if (hits.isEmpty) done = Some((base, 0, m.files.size))
-        else {
-          val statsCols =
-            m.stats.valuesIterator.flatMap(_.keysIterator).toSet.toSeq.sorted
-          // the rewrite reads THROUGH the vectors: kept = live ∧ ¬cond,
-          // and the rewritten files' dv entries die with the removes
-          val hitFrame = readFiles(spark, root, m, hits)
-          val kept = hitFrame
-            .where(!coalesce(condition, lit(false)))
-            .coalesce(math.max(1, hits.size))
-          val staged = stage(kept, root)
-          // row-level change capture: exactly the rows the condition
-          // removes, from exactly the files being rewritten — one more
-          // scan of the HIT files only (never the skipped ones)
-          val cdcStaged =
-            if (!changeCapture) Nil
-            else stageChanges(hitFrame
-              .where(coalesce(condition, lit(false)))
-              .withColumn("_change_type", lit("delete")), root)
-          val stagedStats = footerStats(root, staged, statsCols)
-          val inputs = hits.toSet
-          var committed = -1
-          var stale = false
-          var attemptRaw = readRaw(root, base)
-          while (committed < 0 && !stale) {
-            committed = commitChange(root, attemptRaw, "delete",
-              attemptRaw.schema.json, adds = staged, removes = inputs,
-              addStats = stagedStats, cdc = cdcStaged)
-            if (committed < 0) {
-              val head = latestVersion(root)
-              val hm = readManifest(root, head)
-              // an input that vanished OR grew a different deletion vector
-              // was rewritten/re-deleted underneath us — restart
-              if (inputs.forall(f => hm.files.contains(f) &&
-                  hm.dvs.get(f) == m.dvs.get(f)))
-                attemptRaw = readRaw(root, head)
-              else stale = true
-            }
-          }
-          if (committed > 0)
-            done = Some((committed, hits.size, m.files.size - hits.size))
-          // else stale: abandoned staged files become vacuum-able orphans
-        }
-      }
-    }
-    done.get
+    val matched = coalesce(condition, lit(false))
+    copyOnWrite(spark, root, "delete", condition, pruneHint, changeCapture)(
+      (_, rows) => rows.where(!matched),
+      // row-level change capture: exactly the rows the condition removes,
+      // from exactly the files being rewritten
+      (_, rows) => rows.where(matched).withColumn("_change_type", lit("delete")))
   }
 
   /** Delta's `INSERT OVERWRITE ... replaceWhere` — the dynamic-partition-
@@ -1089,91 +1009,30 @@ object SnapshotTable {
     *    `delete` events and `data` as `insert` events (Delta-CDF).
     *
     * Returns (version, filesRewritten, filesSkipped). Incoming files are
-    * staged once; a commit-race loser re-reads the head and re-stages only
-    * the kept-rows rewrite (its abandoned files are vacuum-able orphans,
-    * like any loser's). */
+    * staged once; a stale attempt ([[commitOrStale]]) re-reads the head
+    * and re-stages only the kept-rows rewrite (its abandoned files are
+    * vacuum-able orphans, like any loser's). */
   def replaceWhere(data: DataFrame, root: String,
       condition: org.apache.spark.sql.Column,
       pruneHint: Option[(String, Double, Double)] = None,
       changeCapture: Boolean = false,
       txn: Map[String, String] = Map.empty): (Int, Int, Int) = {
-    import org.apache.spark.sql.functions.{col => fcol, coalesce, lit}
-    val spark = data.sparkSession
+    val matched = coalesce(condition, lit(false))
     validateChecks(data, root)
-    require(data.where(!coalesce(condition, lit(false))).isEmpty,
+    require(data.where(!matched).isEmpty,
       "replaceWhere: incoming rows must all satisfy the replace condition " +
         "(Delta semantics) — a non-matching row would silently survive the " +
         "next replace of the same slice")
-    val incomingStaged = stage(data, root)
-    var done: Option[(Int, Int, Int)] = None
-    while (done.isEmpty) {
-      val base = latestVersion(root)
-      require(base > 0, s"snapshot table at $root has no committed version")
-      val m = readManifest(root, base)
+    copyOnWrite(data.sparkSession, root, "replace", condition, pruneHint,
+      changeCapture, incoming = stage(data, root), txn = txn,
       // same no-drift contract as append: the slice replaces rows, not the
       // table's shape
-      require(unionSchema(m.schema, data.schema, allowEvolution = false)
+      check = m => require(unionSchema(m.schema, data.schema, allowEvolution = false)
         .fieldNames.sameElements(m.schema.fieldNames),
-        "replaceWhere data schema must match the table schema")
-      val candidates = pruneHint match {
-        case Some((c, lo, hi)) => m.files.filter { f =>
-          m.stats.get(f).flatMap(_.get(physName(m.colmap, c))) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true // no envelope: cannot skip
-          }
-        }
-        case None => m.files
-      }
-      val hitNames =
-        if (candidates.isEmpty) Set.empty[String]
-        else readFiles(spark, root, m, candidates, keepFilePos = true)
-          .where(condition).select(fcol("__file")).distinct()
-          .collect().map(_.getString(0)).toSet
-      val hits = candidates.filter(hitNames)
-      val statsCols =
-        m.stats.valuesIterator.flatMap(_.keysIterator).toSet.toSeq.sorted
-      val hitFrame = readFiles(spark, root, m, hits)
-      val keptStaged =
-        if (hits.isEmpty) Nil
-        else stage(hitFrame.where(!coalesce(condition, lit(false)))
-          .coalesce(math.max(1, hits.size)), root)
-      val cdcStaged =
-        if (!changeCapture) Nil
-        else {
-          val deletes = hitFrame.where(coalesce(condition, lit(false)))
-            .withColumn("_change_type", lit("delete"))
-          stageChanges(
-            deletes.unionByName(data.withColumn("_change_type", lit("insert"))),
-            root)
-        }
-      val adds = keptStaged ++ incomingStaged
-      val stagedStats = footerStats(root, adds, statsCols)
-      val inputs = hits.toSet
-      var committed = -1
-      var stale = false
-      var attemptRaw = readRaw(root, base)
-      while (committed < 0 && !stale) {
-        committed = commitChange(root, attemptRaw, "replace",
-          attemptRaw.schema.json, adds = adds, removes = inputs,
-          addStats = stagedStats, cdc = cdcStaged, txn = txn)
-        if (committed < 0) {
-          val head = latestVersion(root)
-          val hm = readManifest(root, head)
-          // an input that vanished OR grew a different deletion vector was
-          // rewritten underneath us: the kept-rows rewrite (and the hit
-          // set itself) is stale — restart from the new head
-          if (inputs.forall(f => hm.files.contains(f) &&
-              hm.dvs.get(f) == m.dvs.get(f)))
-            attemptRaw = readRaw(root, head)
-          else stale = true
-        }
-      }
-      if (committed > 0)
-        done = Some((committed, hits.size, m.files.size - hits.size))
-      // else stale: loop re-reads the head; abandoned kept/cdc staged
-      // files become vacuum-able orphans (incoming files are reused)
-    }
-    done.get
+        "replaceWhere data schema must match the table schema"))(
+      (_, rows) => rows.where(!matched),
+      (_, rows) => rows.where(matched).withColumn("_change_type", lit("delete"))
+        .unionByName(data.withColumn("_change_type", lit("insert"))))
   }
 
   /** Copy-on-write UPDATE ... SET: rows matching `condition` get
@@ -1190,96 +1049,29 @@ object SnapshotTable {
       assignments: Map[String, org.apache.spark.sql.Column],
       pruneHint: Option[(String, Double, Double)] = None,
       changeCapture: Boolean = false): (Int, Int, Int) = {
-    import org.apache.spark.sql.functions.{col => fcol, coalesce, lit, when}
     require(assignments.nonEmpty, "update needs at least one assignment")
-    var done: Option[(Int, Int, Int)] = None
-    while (done.isEmpty) {
-      val base = latestVersion(root)
-      require(base > 0, s"snapshot table at $root has no committed version")
-      val m = readManifest(root, base)
-      val unknown = assignments.keySet -- m.schema.fieldNames
-      require(unknown.isEmpty, s"update assigns unknown columns: $unknown")
-      val candidates = pruneHint match {
-        case Some((c, lo, hi)) => m.files.filter { f =>
-          m.stats.get(f).flatMap(_.get(physName(m.colmap, c))) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true
+    val matched = coalesce(condition, lit(false))
+    copyOnWrite(spark, root, "update", condition, pruneHint, changeCapture,
+      check = checkAssignments(_, assignments))(
+      (m, rows) => {
+        // validate post-assignment values of the rows the PRE-assignment
+        // condition matched (the condition may reference the very column
+        // being updated, so re-filtering the rewritten frame would miss)
+        validateChecks(rows.where(matched).select(assigned(m, assignments): _*), root)
+        // assigned columns switch on the row's own match flag; every
+        // other column (and every non-matching row) passes through
+        rows.select(m.schema.fields.toSeq.map { f =>
+          assignments.get(f.name) match {
+            case Some(a) =>
+              when(matched, a.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+            case None => col(f.name)
           }
-        }
-        case None => m.files
-      }
-      if (candidates.isEmpty) done = Some((base, 0, m.files.size))
-      else {
-        val hitNames = readFiles(spark, root, m, candidates, keepFilePos = true)
-          .where(condition).select(fcol("__file")).distinct()
-          .collect().map(_.getString(0)).toSet
-        val hits = candidates.filter(hitNames)
-        if (hits.isEmpty) done = Some((base, 0, m.files.size))
-        else {
-          val statsCols =
-            m.stats.valuesIterator.flatMap(_.keysIterator).toSet.toSeq.sorted
-          val hitFrame = readFiles(spark, root, m, hits)
-          val matched = coalesce(condition, lit(false))
-          // assigned columns switch on the row's own match flag; every
-          // other column (and every non-matching row) passes through
-          val updatedCols = m.schema.fields.map { f =>
-            assignments.get(f.name) match {
-              case Some(a) =>
-                when(matched, a.cast(f.dataType)).otherwise(fcol(f.name))
-                  .as(f.name)
-              case None => fcol(f.name)
-            }
-          }
-          val rewritten = hitFrame.select(updatedCols.toSeq: _*)
-            .coalesce(math.max(1, hits.size))
-          // validate post-assignment values of the rows the PRE-assignment
-          // condition matched (the condition may reference the very column
-          // being updated, so re-filtering the rewritten frame would miss)
-          validateChecks(hitFrame.where(matched)
-            .select(m.schema.fields.map { f =>
-              assignments.get(f.name)
-                .map(_.cast(f.dataType).as(f.name))
-                .getOrElse(fcol(f.name))
-            }.toSeq: _*), root)
-          val staged = stage(rewritten, root)
-          val cdcStaged =
-            if (!changeCapture) Nil
-            else {
-              val pre = hitFrame.where(matched)
-                .withColumn("_change_type", lit("update_preimage"))
-              val post = hitFrame.where(matched)
-                .select(m.schema.fields.map { f =>
-                  assignments.get(f.name)
-                    .map(_.cast(f.dataType).as(f.name))
-                    .getOrElse(fcol(f.name))
-                }.toSeq: _*)
-                .withColumn("_change_type", lit("update_postimage"))
-              stageChanges(pre.unionByName(post), root)
-            }
-          val stagedStats = footerStats(root, staged, statsCols)
-          val inputs = hits.toSet
-          var committed = -1
-          var stale = false
-          var attemptRaw = readRaw(root, base)
-          while (committed < 0 && !stale) {
-            committed = commitChange(root, attemptRaw, "update",
-              attemptRaw.schema.json, adds = staged, removes = inputs,
-              addStats = stagedStats, cdc = cdcStaged)
-            if (committed < 0) {
-              val head = latestVersion(root)
-              val hm = readManifest(root, head)
-              if (inputs.forall(f => hm.files.contains(f) &&
-                  hm.dvs.get(f) == m.dvs.get(f)))
-                attemptRaw = readRaw(root, head)
-              else stale = true
-            }
-          }
-          if (committed > 0)
-            done = Some((committed, hits.size, m.files.size - hits.size))
-        }
-      }
-    }
-    done.get
+        }: _*)
+      },
+      (m, rows) => rows.where(matched)
+        .withColumn("_change_type", lit("update_preimage"))
+        .unionByName(rows.where(matched).select(assigned(m, assignments): _*)
+          .withColumn("_change_type", lit("update_postimage"))))
   }
 
   /** MERGE-ON-READ DELETE via deletion vectors — the modern alternative
@@ -1305,72 +1097,16 @@ object SnapshotTable {
     * A writer extending a file's vector unions the prior positions into
     * the new sidecar (replacement semantics keep resolution O(lines)).
     *
-    * Concurrency: mirrors [[deleteWhere]] — a lost race re-bases over
-    * appends; it restarts when a touched file vanished (rewritten) or its
-    * vector changed (concurrent MoR delete), so vector updates serialize.
+    * Concurrency: [[commitOrStale]] — a touched file whose vector changed
+    * underneath (a concurrent MoR delete) makes the attempt stale, so
+    * vector updates serialize.
     *
     * Returns (version, filesTouched, rowsDeleted); a no-match delete
     * commits nothing and returns the current version. */
   def deleteWhereMoR(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column,
-      pruneHint: Option[(String, Double, Double)] = None): (Int, Int, Long) = {
-    import org.apache.spark.sql.functions.{col => fcol}
-    var done: Option[(Int, Int, Long)] = None
-    while (done.isEmpty) {
-      val base = latestVersion(root)
-      require(base > 0, s"snapshot table at $root has no committed version")
-      val m = readManifest(root, base)
-      val candidates = pruneHint match {
-        case Some((c, lo, hi)) => m.files.filter { f =>
-          m.stats.get(f).flatMap(_.get(physName(m.colmap, c))) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true
-          }
-        }
-        case None => m.files
-      }
-      if (candidates.isEmpty) done = Some((base, 0, 0L))
-      else {
-        // live matches with their (file, position) addresses — one scan
-        val matches = readFiles(spark, root, m, candidates, keepFilePos = true)
-          .where(condition)
-          .select(fcol("__file").as("file_name"), fcol("__pos").as("pos"))
-          .localCheckpoint() // pin: the sidecar write and the count reuse it
-        val hitFiles = matches.select("file_name").distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-        if (hitFiles.isEmpty) done = Some((base, 0, 0L))
-        else {
-          val rowsDeleted = matches.count()
-          // new sidecar = new positions ∪ the touched files' PRIOR
-          // positions (replacement semantics); live matches are disjoint
-          // from prior positions by construction, no dedup needed
-          val allPos = matches.unionByName(
-            dvPositions(spark, root, m, hitFiles))
-          val staged = stageInto(allPos, root, deletesDir(root))
-          val dvSet = hitFiles.map(f => f -> staged).toMap
-          var committed = -1
-          var stale = false
-          var attemptRaw = readRaw(root, base)
-          while (committed < 0 && !stale) {
-            committed = commitChange(root, attemptRaw, "delete_mor",
-              attemptRaw.schema.json, adds = Nil, removes = Set.empty,
-              addStats = Map.empty, dvSet = dvSet)
-            if (committed < 0) {
-              val head = latestVersion(root)
-              val hm = readManifest(root, head)
-              if (hitFiles.forall(f => hm.files.contains(f) &&
-                  hm.dvs.get(f) == m.dvs.get(f)))
-                attemptRaw = readRaw(root, head)
-              else stale = true // touched file rewritten or re-deleted
-            }
-          }
-          if (committed > 0) done = Some((committed, hitFiles.size, rowsDeleted))
-          // else stale: staged sidecars become vacuum-able orphans
-        }
-      }
-    }
-    done.get
-  }
+      pruneHint: Option[(String, Double, Double)] = None): (Int, Int, Long) =
+    mergeOnRead(spark, root, "delete_mor", condition, pruneHint)
 
   /** MERGE-ON-READ UPDATE via deletion vectors — completes the
     * CoW/MoR × delete/update DML matrix: matched rows' old positions
@@ -1390,92 +1126,168 @@ object SnapshotTable {
     * appended files — exact, just typed delete+insert rather than
     * update pairs.
     *
-    * Concurrency mirrors [[deleteWhereMoR]]: lost races re-base over
-    * appends and restart when a touched file vanished or its vector
-    * changed. Returns (version, filesTouched, rowsUpdated); a no-match
-    * update commits nothing. */
+    * Concurrency: [[commitOrStale]], as for [[deleteWhereMoR]]. Returns
+    * (version, filesTouched, rowsUpdated); a no-match update commits
+    * nothing. */
   def updateWhereMoR(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
       pruneHint: Option[(String, Double, Double)] = None,
       changeCapture: Boolean = false): (Int, Int, Long) = {
-    import org.apache.spark.sql.functions.{col => fcol, lit}
     require(assignments.nonEmpty, "update needs at least one assignment")
-    var done: Option[(Int, Int, Long)] = None
-    while (done.isEmpty) {
-      val base = latestVersion(root)
-      require(base > 0, s"snapshot table at $root has no committed version")
-      val m = readManifest(root, base)
-      val unknown = assignments.keySet -- m.schema.fieldNames
-      require(unknown.isEmpty, s"update assigns unknown columns: $unknown")
-      val candidates = pruneHint match {
-        case Some((c, lo, hi)) => m.files.filter { f =>
-          m.stats.get(f).flatMap(_.get(physName(m.colmap, c))) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true
-          }
-        }
-        case None => m.files
-      }
-      if (candidates.isEmpty) done = Some((base, 0, 0L))
+    mergeOnRead(spark, root, "update_mor", condition, pruneHint, changeCapture,
+      check = checkAssignments(_, assignments),
+      postimage = Some(assigned(_, assignments)))
+  }
+
+  /** The commit protocol of every row-level writer: [[compact]], the
+    * copy-on-write [[deleteWhere]] / [[updateWhere]] / [[replaceWhere]]
+    * and the merge-on-read [[deleteWhereMoR]] / [[updateWhereMoR]]. The
+    * change was computed from snapshot `m` and depends on the rows of
+    * `inputs`; it commits as a DELTA (adds, removes, vector replacements)
+    * against the head. On a lost race it re-bases over whatever landed
+    * meanwhile, as long as every input is still live with the deletion
+    * vector it had in `m`: an append only adds files, so a file-local
+    * rewrite stays exact. When an input vanished (a concurrent
+    * overwrite, merge, compact or rewrite) or its vector changed (a
+    * concurrent merge-on-read delete), the change is stale: nothing
+    * commits, its staged files become vacuum-able orphans, and the caller
+    * recomputes from the new head. Returns the committed version, or None
+    * when stale. */
+  private[sources] def commitOrStale(root: String, m: Manifest, op: String,
+      inputs: Set[String], adds: Seq[String], removes: Set[String],
+      addStats: Map[String, Map[String, (Double, Double)]],
+      cdc: Seq[String] = Nil, dvSet: Map[String, Seq[String]] = Map.empty,
+      txn: Map[String, String] = Map.empty): Option[Int] = {
+    @annotation.tailrec
+    def attempt(base: RawManifest): Option[Int] = {
+      val v = commitChange(root, base, op, base.schema.json, adds, removes,
+        addStats, cdc, dvSet, txn)
+      if (v > 0) Some(v)
       else {
-        // live matches with their (file, position) addresses AND full row
-        // payload — one scan feeds the vector, the postimages, and capture
-        val matches = readFiles(spark, root, m, candidates, keepFilePos = true)
+        val head = readManifest(root, latestVersion(root))
+        if (inputs.forall(f => head.files.contains(f) && head.dvs.get(f) == m.dvs.get(f)))
+          attempt(readRaw(root, head.version))
+        else None
+      }
+    }
+    attempt(readRaw(root, m.version))
+  }
+
+  /** Run a row-level writer's `attempt` on the head snapshot until it
+    * gives a result; None means its change went stale
+    * ([[commitOrStale]]), and the next round re-reads the head. */
+  private def fromHead[A](root: String)(attempt: Manifest => Option[A]): A =
+    Iterator.continually(attempt(snapshot(root))).flatten.next()
+
+  /** The copy-on-write body of [[deleteWhere]], [[updateWhere]] and
+    * [[replaceWhere]]. `check` vets the head first. Candidate files are the
+    * `pruneHint` survivors ([[pruned]]); ONE job over them finds the files
+    * with real LIVE matches (deletion vectors applied — a file whose only
+    * matches are already dv-deleted keeps its bytes; the distinct is
+    * file-count-sized, never row-sized). Each hit file's rows become
+    * `rewrite(m, rows)`, written as one group; with `changeCapture` the
+    * commit carries `changes(m, rows)` as its row-level feed (one more
+    * scan of the hit files only). Both read THROUGH the vectors, and the
+    * hit files' dv entries die with the removes. `incoming` are data
+    * files the caller staged once (replace's new slice). No hit and
+    * nothing incoming commits nothing. Returns (version, filesRewritten,
+    * filesSkipped). */
+  private def copyOnWrite(spark: SparkSession, root: String, op: String,
+      condition: Column, pruneHint: Option[(String, Double, Double)],
+      changeCapture: Boolean, incoming: Seq[String] = Nil,
+      txn: Map[String, String] = Map.empty, check: Manifest => Unit = _ => ())(
+      rewrite: (Manifest, DataFrame) => DataFrame,
+      changes: (Manifest, DataFrame) => DataFrame): (Int, Int, Int) =
+    fromHead(root) { m =>
+      check(m)
+      val candidates = pruned(m, pruneHint)
+      val hitNames =
+        if (candidates.isEmpty) Set.empty[String]
+        else readFiles(spark, root, m, candidates, keepFilePos = true)
+          .where(condition).select(col("__file")).distinct()
+          .collect().map(_.getString(0)).toSet
+      val hits = candidates.filter(hitNames)
+      if (hits.isEmpty && incoming.isEmpty) Some((m.version, 0, m.files.size))
+      else {
+        val rows = readFiles(spark, root, m, hits)
+        val staged =
+          if (hits.isEmpty) Nil
+          else stage(rewrite(m, rows).coalesce(hits.size), root)
+        val cdc = if (changeCapture) stageChanges(changes(m, rows), root) else Nil
+        val adds = staged ++ incoming
+        commitOrStale(root, m, op, hits.toSet, adds, removes = hits.toSet,
+          footerStats(root, adds, statsColumns(m)), cdc, txn = txn)
+          .map(v => (v, hits.size, m.files.size - hits.size))
+      }
+    }
+
+  /** The merge-on-read body of [[deleteWhereMoR]] and [[updateWhereMoR]]:
+    * no data file is rewritten. `check` vets the head first. One scan of
+    * the `pruneHint` candidates pins the live matches with their (file,
+    * position) addresses, and their full rows when `postimage` is given.
+    * The new positions plus the touched files' PRIOR positions land in
+    * one sidecar under `_deletes/` that replaces each touched file's
+    * vector (live matches are disjoint from prior positions, so no
+    * dedup). An update's postimage rows, validated against the CHECK
+    * constraints, land in newly appended files with fresh footer stats;
+    * with `changeCapture` its commit carries pre/postimage rows. A
+    * no-match call commits nothing. Returns (version, filesTouched,
+    * rowsMatched). */
+  private def mergeOnRead(spark: SparkSession, root: String, op: String,
+      condition: Column, pruneHint: Option[(String, Double, Double)],
+      changeCapture: Boolean = false, check: Manifest => Unit = _ => (),
+      postimage: Option[Manifest => Seq[Column]] = None): (Int, Int, Long) =
+    fromHead(root) { m =>
+      check(m)
+      val candidates = pruned(m, pruneHint)
+      if (candidates.isEmpty) Some((m.version, 0, 0L))
+      else {
+        val scan = readFiles(spark, root, m, candidates, keepFilePos = true)
           .where(condition)
-          .localCheckpoint()
+        // pin: the hit list, the count, the sidecar and the postimages reuse it
+        val matches = (if (postimage.isEmpty) scan.select("__file", "__pos")
+          else scan).localCheckpoint()
         val hitFiles = matches.select("__file").distinct()
           .collect().map(_.getString(0)).toSeq.sorted
-        if (hitFiles.isEmpty) done = Some((base, 0, 0L))
+        if (hitFiles.isEmpty) Some((m.version, 0, 0L))
         else {
-          val rowsUpdated = matches.count()
-          val statsCols =
-            m.stats.valuesIterator.flatMap(_.keysIterator).toSet.toSeq.sorted
-          val post = matches.select(m.schema.fields.map { f =>
-            assignments.get(f.name)
-              .map(_.cast(f.dataType).as(f.name))
-              .getOrElse(fcol(f.name))
-          }.toSeq: _*)
-          validateChecks(post, root)
-          val staged = stage(post.coalesce(math.max(1, hitFiles.size)), root)
-          val stagedStats = footerStats(root, staged, statsCols)
-          val allPos = matches
-            .select(fcol("__file").as("file_name"), fcol("__pos").as("pos"))
-            .unionByName(dvPositions(spark, root, m, hitFiles))
-          val dvStaged = stageInto(allPos, root, deletesDir(root))
-          val dvSet = hitFiles.map(f => f -> dvStaged).toMap
-          val cdcStaged =
-            if (!changeCapture) Nil
-            else stageChanges(
+          val rowsMatched = matches.count()
+          val post = postimage.map(p => matches.select(p(m): _*))
+          post.foreach(validateChecks(_, root))
+          val adds = post.fold(Seq.empty[String])(p =>
+            stage(p.coalesce(hitFiles.size), root))
+          val addStats = footerStats(root, adds, statsColumns(m))
+          val sidecar = stageInto(
+            matches.select(col("__file").as("file_name"), col("__pos").as("pos"))
+              .unionByName(dvPositions(spark, root, m, hitFiles)),
+            root, deletesDir(root))
+          val cdc = post match {
+            case Some(p) if changeCapture => stageChanges(
               matches.drop("__file", "__pos")
                 .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(
-                  post.withColumn("_change_type", lit("update_postimage"))),
+                .unionByName(p.withColumn("_change_type", lit("update_postimage"))),
               root)
-          var committed = -1
-          var stale = false
-          var attemptRaw = readRaw(root, base)
-          while (committed < 0 && !stale) {
-            committed = commitChange(root, attemptRaw, "update_mor",
-              attemptRaw.schema.json, adds = staged, removes = Set.empty,
-              addStats = stagedStats, cdc = cdcStaged, dvSet = dvSet)
-            if (committed < 0) {
-              val head = latestVersion(root)
-              val hm = readManifest(root, head)
-              if (hitFiles.forall(f => hm.files.contains(f) &&
-                  hm.dvs.get(f) == m.dvs.get(f)))
-                attemptRaw = readRaw(root, head)
-              else stale = true // touched file rewritten or re-vectored
-            }
+            case _ => Nil
           }
-          if (committed > 0)
-            done = Some((committed, hitFiles.size, rowsUpdated))
-          // else stale: staged files/sidecars become vacuum-able orphans
+          commitOrStale(root, m, op, hitFiles.toSet, adds, removes = Set.empty,
+            addStats, cdc, dvSet = hitFiles.map(_ -> sidecar).toMap)
+            .map(v => (v, hitFiles.size, rowsMatched))
         }
       }
     }
-    done.get
+
+  /** Refuse an update that assigns a column the table does not have. */
+  private def checkAssignments(m: Manifest, assignments: Map[String, Column]): Unit = {
+    val unknown = assignments.keySet -- m.schema.fieldNames
+    require(unknown.isEmpty, s"update assigns unknown columns: $unknown")
   }
+
+  /** The table's columns with `assignments` applied, each cast to its
+    * column's declared type: an update's postimage row. */
+  private def assigned(m: Manifest, assignments: Map[String, Column]): Seq[Column] =
+    m.schema.fields.toSeq.map(f => assignments.get(f.name)
+      .map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name)))
 
   /** CHANGE FEED between two committed versions — the CDC read the open
     * formats expose. Two granularities, chosen per commit:
@@ -1857,9 +1669,7 @@ object SnapshotTable {
     * later schema evolution; deletion vectors apply transparently. An
     * empty table (version 0) is an error. */
   def read(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(latestVersion(root))
-    require(v > 0, s"snapshot table at $root has no committed version")
-    val m = readManifest(root, v)
+    val m = snapshot(root, version)
     readFiles(spark, root, m, m.files)
   }
 
@@ -1882,11 +1692,9 @@ object SnapshotTable {
     * own new files; a rewritten file un-links, never mutates (data files
     * are immutable by protocol, so shared inodes are write-safe). */
   def clone(sourceRoot: String, targetRoot: String): Int = {
-    val v = latestVersion(sourceRoot)
-    require(v > 0, s"snapshot table at $sourceRoot has no committed version")
+    val m = snapshot(sourceRoot)
     require(latestVersion(targetRoot) == 0,
       s"clone target $targetRoot already has commits")
-    val m = readManifest(sourceRoot, v)
     Files.createDirectories(manifestDir(targetRoot))
     Files.createDirectories(dataDir(targetRoot))
     def linkOrCopy(from: Path, to: Path): Unit =

@@ -30,22 +30,36 @@ class SparkEntrySpec extends SparkSpec {
     assert(strays.isEmpty, s"names outside their family prefix: $strays")
   }
 
+  /** "File.scala:line: text" of every line under `queries/` that `hit`
+    * accepts, skipping the files named in `except`. */
+  private def queryLines(hit: String => Boolean, except: Set[String] = Set.empty) = {
+    val dir = Paths.get(sys.props("user.dir"), "src/main/scala/graft/queries")
+    assert(Files.isDirectory(dir), s"no query sources at $dir")
+    Files.list(dir).iterator().asScala.toSeq.sortBy(_.toString)
+      .filterNot(p => except(p.getFileName.toString))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if hit(line) => s"${p.getFileName}:${i + 1}: ${line.trim}"
+      })
+  }
+
   test("query files read the vendored tables only through Tables.load") {
     // Tables.load caches each input's schema per session; a bare parquet read
     // would infer it again on every call
-    val dir = Paths.get(sys.props("user.dir"), "src/main/scala/graft/queries")
-    assert(Files.isDirectory(dir), s"no query sources at $dir")
-    val reads = Files.list(dir).iterator().asScala.toSeq.sortBy(_.toString)
-      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if line.contains(".read.parquet(") =>
-          s"${p.getFileName}:${i + 1}: ${line.trim}"
-      })
+    val reads = queryLines(_.contains(".read.parquet("))
     // p7 and p8 read back the layouts they wrote themselves
     val ownLayouts = reads.filter(r => r.startsWith("ProjectionQueries.scala:") &&
       r.endsWith(".read.parquet(root)"))
     assert(ownLayouts.size == 2, s"$ownLayouts")
     assert(reads.diff(ownLayouts).isEmpty,
       s"bare parquet reads: ${reads.diff(ownLayouts).mkString("; ")}")
+  }
+
+  test("query files build scratch paths only through Shared.scratch") {
+    // a hand-built path keyed by process alone lets one input directory's
+    // persisted layout be read back for another
+    val sites = queryLines(l => l.contains("java.io.tmpdir") || l.contains("ProcessHandle"),
+      except = Set("Shared.scala"))
+    assert(sites.isEmpty, s"hand-built scratch paths: ${sites.mkString("; ")}")
   }
 
   test("entry() returns rows on sf0.001 (driver smoke contract)") {

@@ -183,34 +183,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(v2 == v, "re-compacting a packed table must be a no-op")
   }
 
-  test("compact races a concurrent appender: no lost rows, both commits land") {
-    val root = freshRoot()
-    (1 to 6).foreach { i =>
-      SnapshotTable.write(Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1),
-        root, mode = if (i == 1) "overwrite" else "append")
-    }
-    import java.util.concurrent.{Executors, TimeUnit}
-    val pool = Executors.newFixedThreadPool(2)
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val start = new java.util.concurrent.CountDownLatch(1)
-    pool.submit(new Runnable { def run(): Unit =
-      try { start.await()
-        SnapshotTable.compact(spark, root, targetBytes = 1L << 20): Unit }
-      catch { case t: Throwable => errors.add(t) } })
-    pool.submit(new Runnable { def run(): Unit =
-      try { start.await()
-        (7 to 9).foreach { i =>
-          SnapshotTable.write(Seq((i.toLong, s"r$i")).toDF("id", "v")
-            .coalesce(1), root, mode = "append") } }
-      catch { case t: Throwable => errors.add(t) } })
-    start.countDown(); pool.shutdown()
-    assert(pool.awaitTermination(120, TimeUnit.SECONDS), "racers timed out")
-    assert(errors.isEmpty, s"racer failed: ${errors.peek()}")
-    assert(SnapshotTable.read(spark, root).as[(Long, String)].collect().toSet
-      == (1 to 9).map(i => (i.toLong, s"r$i")).toSet,
-      "a row was lost to the compaction race")
-  }
-
   test("vacuum age-gates never-committed orphans but sweeps dropped-version files now") {
     // the corruption ADVICE warned about: a concurrent writer's staged
     // files (moved into data/, manifest not yet committed) look orphaned —
@@ -716,63 +688,113 @@ class SnapshotTableSpec extends SparkSpec {
       (3, Some(1.0), "insert", 3)), s"evolved change feed mismatch: $rows")
   }
 
-  test("deleteWhere races a concurrent appender: no lost rows, both commits land") {
-    import org.apache.spark.sql.functions.col
-    val root = freshRoot()
-    (1 to 4).foreach { i =>
-      SnapshotTable.write(Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1),
-        root, mode = if (i == 1) "overwrite" else "append")
-    }
-    import java.util.concurrent.{Executors, TimeUnit}
-    val pool = Executors.newFixedThreadPool(2)
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val start = new java.util.concurrent.CountDownLatch(1)
-    pool.submit(new Runnable { def run(): Unit =
-      try { start.await()
-        SnapshotTable.deleteWhere(spark, root, col("id") === 2L): Unit }
-      catch { case t: Throwable => errors.add(t) } })
-    pool.submit(new Runnable { def run(): Unit =
-      try { start.await()
-        (5 to 7).foreach { i =>
-          SnapshotTable.write(Seq((i.toLong, s"r$i")).toDF("id", "v")
-            .coalesce(1), root, mode = "append") } }
-      catch { case t: Throwable => errors.add(t) } })
-    start.countDown(); pool.shutdown()
-    assert(pool.awaitTermination(120, TimeUnit.SECONDS), "racers timed out")
-    assert(errors.isEmpty, s"racer failed: ${errors.peek()}")
-    assert(SnapshotTable.read(spark, root).as[(Long, String)].collect().toSet
-      == ((1 to 7).toSet - 2).map(i => (i.toLong, s"r$i")),
-      "delete/append race lost rows")
+  // Every row-level writer against a concurrent appender. The table
+  // starts as `nFiles` one-row files (id i, "r<i>"); the appender adds ids
+  // nFiles+1 .. nFiles+3 one commit at a time. The writer's change must
+  // land exactly once on top of every appended row: it either re-bases
+  // over the appends or, when its inputs changed, recomputes from the head.
+  private val racers: Seq[(String, Int, String, String => Any,
+      Set[(Long, String)] => Set[(Long, String)])] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val id2 = col("id") === 2L
+    def updated(rows: Set[(Long, String)]) =
+      rows.map { case (i, v) => if (i == 2L) (i, "u2") else (i, v) }
+    Seq(
+      ("compact", 6, "compact",
+        root => SnapshotTable.compact(spark, root, targetBytes = 1L << 20),
+        identity),
+      ("deleteWhere", 4, "delete",
+        root => SnapshotTable.deleteWhere(spark, root, id2),
+        _.filterNot(_._1 == 2L)),
+      ("replaceWhere", 4, "replace",
+        root => SnapshotTable.replaceWhere(Seq((2L, "n2")).toDF("id", "v"), root, id2),
+        _.filterNot(_._1 == 2L) + ((2L, "n2"))),
+      ("updateWhere", 4, "update",
+        root => SnapshotTable.updateWhere(spark, root, id2, Map("v" -> lit("u2"))),
+        updated),
+      ("deleteWhereMoR", 4, "delete_mor",
+        root => SnapshotTable.deleteWhereMoR(spark, root, id2),
+        _.filterNot(_._1 == 2L)),
+      ("updateWhereMoR", 4, "update_mor",
+        root => SnapshotTable.updateWhereMoR(spark, root, id2, Map("v" -> lit("u2"))),
+        updated))
   }
 
-  test("replaceWhere races a concurrent appender: no lost rows, both commits land") {
-    import org.apache.spark.sql.functions.col
-    val root = freshRoot()
-    (1 to 4).foreach { i =>
-      SnapshotTable.write(Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1),
-        root, mode = if (i == 1) "overwrite" else "append")
+  racers.foreach { case (writer, nFiles, op, change, expect) =>
+    test(s"$writer races a concurrent appender: no lost rows, both commits land") {
+      val root = freshRoot()
+      def row(i: Int) = Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1)
+      (1 to nFiles).foreach { i =>
+        SnapshotTable.write(row(i), root, mode = if (i == 1) "overwrite" else "append")
+      }
+      import java.util.concurrent.{Executors, TimeUnit}
+      val pool = Executors.newFixedThreadPool(2)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      pool.submit(new Runnable { def run(): Unit =
+        try { start.await(); change(root): Unit }
+        catch { case t: Throwable => errors.add(t) } })
+      pool.submit(new Runnable { def run(): Unit =
+        try { start.await()
+          (nFiles + 1 to nFiles + 3).foreach(i =>
+            SnapshotTable.write(row(i), root, mode = "append")) }
+        catch { case t: Throwable => errors.add(t) } })
+      start.countDown(); pool.shutdown()
+      assert(pool.awaitTermination(120, TimeUnit.SECONDS), "racers timed out")
+      assert(errors.isEmpty, s"racer failed: ${errors.peek()}")
+      assert(SnapshotTable.read(spark, root).as[(Long, String)].collect().toSet
+        == expect((1 to nFiles + 3).map(i => (i.toLong, s"r$i")).toSet),
+        s"the $writer/append race lost or resurrected rows")
+      val ops = SnapshotTable.history(spark, root).as[(Int, String, Long)]
+        .collect().map(_._2).toSeq
+      assert(ops.count(_ == op) == 1 && ops.count(_ == "append") == nFiles + 2,
+        s"commits: $ops")
     }
-    import java.util.concurrent.{Executors, TimeUnit}
-    val pool = Executors.newFixedThreadPool(2)
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val start = new java.util.concurrent.CountDownLatch(1)
-    pool.submit(new Runnable { def run(): Unit =
-      try { start.await()
-        SnapshotTable.replaceWhere(Seq((2L, "n2")).toDF("id", "v"), root,
-          col("id") === 2L): Unit }
-      catch { case t: Throwable => errors.add(t) } })
-    pool.submit(new Runnable { def run(): Unit =
-      try { start.await()
-        (5 to 7).foreach { i =>
-          SnapshotTable.write(Seq((i.toLong, s"r$i")).toDF("id", "v")
-            .coalesce(1), root, mode = "append") } }
-      catch { case t: Throwable => errors.add(t) } })
-    start.countDown(); pool.shutdown()
-    assert(pool.awaitTermination(120, TimeUnit.SECONDS), "racers timed out")
-    assert(errors.isEmpty, s"racer failed: ${errors.peek()}")
+  }
+
+  // commitOrStale, driven by hand: the change below (drop the file that
+  // holds id 1) is computed from the manifest of v2, then something else
+  // commits v3 before it tries.
+  private def staleFixture(): (String, SnapshotTable.Manifest, String) = {
+    val root = freshRoot()
+    SnapshotTable.write(Seq((1L, "a")).toDF("id", "v").coalesce(1), root)
+    SnapshotTable.write(Seq((2L, "b")).toDF("id", "v").coalesce(1), root,
+      mode = "append")
+    (root, SnapshotTable.readManifest(root, 2),
+      SnapshotTable.readManifest(root, 1).files.head)
+  }
+
+  private def dropFile(root: String, m: SnapshotTable.Manifest, f: String) =
+    SnapshotTable.commitOrStale(root, m, "delete", inputs = Set(f),
+      adds = Nil, removes = Set(f), addStats = Map.empty)
+
+  test("commitOrStale re-bases over a concurrent append and commits at v+2") {
+    val (root, m, f) = staleFixture()
+    SnapshotTable.write(Seq((3L, "c")).toDF("id", "v").coalesce(1), root,
+      mode = "append")                                                  // v3
+    assert(dropFile(root, m, f) == Some(4))
     assert(SnapshotTable.read(spark, root).as[(Long, String)].collect().toSet
-      == (((1 to 7).toSet - 2).map(i => (i.toLong, s"r$i")) + ((2L, "n2"))),
-      "replace/append race lost rows")
+      == Set((2L, "b"), (3L, "c")), "both the append and the drop must show")
+  }
+
+  test("commitOrStale is stale when an overwrite removed an input file") {
+    val (root, m, f) = staleFixture()
+    SnapshotTable.write(Seq((9L, "z")).toDF("id", "v").coalesce(1), root) // v3
+    assert(dropFile(root, m, f).isEmpty)
+    assert(SnapshotTable.latestVersion(root) == 3, "a stale change committed")
+    assert(SnapshotTable.read(spark, root).as[(Long, String)].collect().toSet
+      == Set((9L, "z")))
+  }
+
+  test("commitOrStale is stale when a merge-on-read delete changed an input's vector") {
+    import org.apache.spark.sql.functions.col
+    val (root, m, f) = staleFixture()
+    val (v3, touched, _) = SnapshotTable.deleteWhereMoR(spark, root, col("id") === 1L)
+    assert(v3 == 3 && touched == 1)
+    assert(SnapshotTable.readManifest(root, 3).files.contains(f),
+      "the input is still live; only its vector changed")
+    assert(dropFile(root, m, f).isEmpty)
+    assert(SnapshotTable.latestVersion(root) == 3, "a stale change committed")
   }
 
   test("mergeConditional: update-if-newer guard, conditional delete, " +
