@@ -149,23 +149,19 @@ object Conformal {
 
     // calibration residual cells + inclusive rank via the sharded prefix
     val cells = residCents(cal).groupBy(col("v")).agg(count(lit(1)).as("c"))
-    val ranked = graft.stats.RankTests
-      .withExclusivePrefixCols(cells, Seq("c" -> "cum0"))
-      .withColumn("cum", col("cum0") + col("c"))
-    // ⌈(n_cal+1)(1−α)⌉ as pure integer arithmetic, α = 1/20, 1/10, 1/5 —
-    // the total reads the PINNED sharded frame (withExclusivePrefixCols
-    // pins its input), not `cells`, so the cal groupBy never re-runs
-    val ks = ranked.agg(sum(col("c")).as("n_cal"))
-      .withColumn("k05", expr("((n_cal + 1) * 19 + 19) DIV 20"))
-      .withColumn("k10", expr("((n_cal + 1) * 9 + 9) DIV 10"))
-      .withColumn("k20", expr("((n_cal + 1) * 4 + 4) DIV 5"))
-    val q = ranked.crossJoin(broadcast(ks))
-      .agg(first(col("n_cal")).as("n_cal"),
-        first(col("k05")).as("k05"), first(col("k10")).as("k10"),
-        first(col("k20")).as("k20"),
-        min(when(col("cum") >= col("k05"), col("v"))).as("q05_cents"),
-        min(when(col("cum") >= col("k10"), col("v"))).as("q10_cents"),
-        min(when(col("cum") >= col("k20"), col("v"))).as("q20_cents"))
+    val pref = graft.ops.ShardLookup.exclusivePrefix(cells, Seq(col("v")), Seq("c" -> "cum0"))
+    val ranked = pref.df.withColumn("cum", col("cum0") + col("c"))
+    // ⌈(n_cal+1)(1−α)⌉ as pure integer arithmetic, α = 1/20, 1/10, 1/5,
+    // off the prefix's total — the cal groupBy never re-runs
+    val nCal = pref.totals("c")
+    val Seq(k05, k10, k20) = Seq(20L, 10L, 5L).map(d => ((nCal + 1) * (d - 1) + d - 1) / d)
+    val q = ranked
+      .agg(first(lit(nCal)).as("n_cal"),
+        first(lit(k05)).as("k05"), first(lit(k10)).as("k10"),
+        first(lit(k20)).as("k20"),
+        min(when(col("cum") >= k05, col("v"))).as("q05_cents"),
+        min(when(col("cum") >= k10, col("v"))).as("q10_cents"),
+        min(when(col("cum") >= k20, col("v"))).as("q20_cents"))
 
     // held-out coverage: one scan, three conditional counts
     residCents(test).crossJoin(broadcast(q))

@@ -9,15 +9,14 @@ import org.apache.spark.sql.functions._
   * falling where the data is dense.
   *
   * Exactness: money values scale to cent LONGs, the cumulative rank is
-  * the [[graft.stats.RankTests]] sharded prefix sum over value-level
+  * the [[ShardLookup.exclusivePrefix]] sharded prefix sum over value-level
   * counts, and the bucket of a value is `(cum·k) DIV n` — pure integer
   * floor division, so bucket edges and counts hash-replay exactly. A
   * value with multiplicity > n/k overflows its bucket rather than
   * splitting (values are atomic — the classic equi-depth caveat).
   *
   * Plan: one corpus-sized map-side-combined groupBy to value cells, the
-  * sharded prefix (no global sort), one tiny totals job, one k-row
-  * aggregate. */
+  * sharded prefix and its total (no global sort), one k-row aggregate. */
 object Histogram {
 
   def equiDepth(df: DataFrame, valueCol: String, k: Int): DataFrame = {
@@ -29,10 +28,10 @@ object Histogram {
         .select((col(valueCol).cast("decimal(12,2)") * 100).cast("long").as("v")),
       col("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("c"))
-    val pref = graft.stats.RankTests.withExclusivePrefixCols(cells, Seq("c" -> "cum"))
-    val n = pref.agg(sum(col("c"))).head().getLong(0)
+    val pref = ShardLookup.exclusivePrefix(cells, Seq(col("v")), Seq("c" -> "cum"))
+    val n = pref.totals("c")
     require(n > 0, "equiDepth needs at least one non-null row")
-    pref
+    pref.df
       .withColumn("bucket", expr(s"cum * ${k}L DIV ${n}L"))
       .groupBy(col("bucket"))
       .agg((min(col("v")).cast("double") / lit(100.0)).as("lo"),

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 /** Contiguous IDENTITY assignment (the Delta `GENERATED ALWAYS AS
   * IDENTITY` surface, batch form) — dense sequential ids over a
   * DETERMINISTIC total order, with no global sort and no driver
-  * zipWithIndex: the rank is the [[graft.stats.RankTests]] sharded
-  * prefix sum over per-row unit counts (range shards, per-shard windows,
-  * driver shard bases).
+  * zipWithIndex: the rank is the [[ShardLookup.exclusivePrefix]] sharded
+  * prefix sum over per-row unit counts.
   *
   * Contract: `keyCol` is the total order AND must be unique and non-null
   * — duplicate keys would make intra-tie order layout-dependent (the
@@ -25,7 +24,7 @@ object Identity {
     val cols = df.columns.toSeq
     val base = df.where(col(keyCol).isNotNull)
       .select(cols.map(col) :+ col(keyCol).as("v") :+ lit(1L).as("__one"): _*)
-    graft.stats.RankTests.withExclusivePrefixCols(base, Seq("__one" -> "__rk"))
+    ShardLookup.exclusivePrefix(base, Seq(col("v")), Seq("__one" -> "__rk")).df
       .withColumn(idName, lit(start) + col("__rk"))
       .select((cols :+ idName).map(col): _*)
   }

@@ -38,13 +38,13 @@ object Partitioning {
     val counts = df.where(col(key).isNotNull)
       .groupBy(col(key)).agg(count(lit(1)).as("cnt"))
     val vc = counts.groupBy(col("cnt").as("v")).agg(count(lit(1)).as("k"))
-    val pref = graft.stats.RankTests.withExclusivePrefixCols(vc, Seq("k" -> "cum"))
-    val tw = pref
-      // totals ride a 1-row cross join (value-frame-sized inputs)
-      .crossJoin(broadcast(pref.agg(
-        sum(col("k")).as("n_keys"),
+    val pref = ShardLookup.exclusivePrefix(vc, Seq(col("v")), Seq("k" -> "cum"))
+    val tw = pref.df
+      // row total and max ride a 1-row cross join (value-frame-sized inputs)
+      .crossJoin(broadcast(pref.df.agg(
         sum(col("v") * col("k")).as("n_rows"),
         max(col("v")).as("max_count"))))
+      .withColumn("n_keys", lit(pref.totals("k")))
       .withColumn("k99", expr("((n_keys) * 99 + 99) DIV 100"))
       // keys ABOVE this cell in the descending order = n_keys − cum − k
       .withColumn("keys_above", col("n_keys") - col("cum") - col("k"))

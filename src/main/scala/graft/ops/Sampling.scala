@@ -95,7 +95,7 @@ object Sampling {
     * exact cumulative-weight line in `idCol` order, cut it into `k` equal
     * buckets, and keep each row that COMPLETES a bucket boundary. All
     * arithmetic is LONG (cum·k ≤ W·k), so the selection replays exactly
-    * in any engine; the cumulative line is the [[graft.stats.RankTests]]
+    * in any engine; the cumulative line is the [[ShardLookup.exclusivePrefix]]
     * sharded prefix sum — no global sort, no RNG, layout-independent.
     *
     * Output: `(idCol, w, cum, bucket, picks)` for selected rows only —
@@ -109,12 +109,12 @@ object Sampling {
     require(k >= 1, s"need a positive bucket count, got $k")
     val base = df.where(col(idCol).isNotNull && col(weightCol) > 0)
       .select(col(idCol).as("v"), col(weightCol).cast("long").as("w"))
-    val pref = graft.stats.RankTests.withExclusivePrefixCols(base, Seq("w" -> "cum"))
-    val w0 = pref.agg(sum(col("w"))).head().getLong(0)
+    val pref = ShardLookup.exclusivePrefix(base, Seq(col("v")), Seq("w" -> "cum"))
+    val w0 = pref.totals("w")
     require(w0 >= k, s"total weight $w0 is below the bucket count $k")
     // integral DIV (not `/`, which widens to double and drifts past 2^53);
     // operands are non-negative so truncation ≡ floor in both engines
-    pref
+    pref.df
       .withColumn("bucket", expr(s"cum * ${k}L DIV ${w0}L"))
       .withColumn("picks",
         expr(s"(cum + w) * ${k}L DIV ${w0}L") - col("bucket"))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * events up to `d`. The corpus reduces to the distinct-day frame in ONE
   * map-side-combined groupBy (2 rows emitted per interval), and the
   * running sum rides the repo's sharded two-phase prefix
-  * ([[graft.stats.RankTests.withExclusivePrefixCols]]) — integer-exact,
+  * ([[ShardLookup.exclusivePrefix]]) — integer-exact,
   * no global sort, nothing data-sized after the first shuffle. */
 object Sweep {
 
@@ -29,9 +29,7 @@ object Sweep {
       .groupBy(datediff(col("d"), to_date(lit("1970-01-01"))).cast("long").as("v"))
       .agg(sum(col("s")).as("n_start"), sum(col("e")).as("n_end"))
       .withColumn("net", col("n_start") - col("n_end"))
-    val pref = graft.stats.RankTests.withExclusivePrefixCols(
-      ev, Seq("net" -> "cumn"))
-    pref.select(
+    ShardLookup.exclusivePrefix(ev, Seq(col("v")), Seq("net" -> "cumn")).df.select(
       date_add(to_date(lit("1970-01-01")), col("v").cast("int")).as("day"),
       col("n_start"), col("n_end"),
       (col("cumn") + col("net")).as("open"))

@@ -475,9 +475,10 @@ object SnapshotTable {
   /** Per-file numeric min/max from the parquet footers (row-group
     * statistics folded per file) — metadata reads only. Columns without
     * usable stats are simply absent, which [[readPruned]] treats as
-    * "cannot prune" (safe). */
+    * "cannot prune" (safe). `colmap` is the table's column mapping, so a
+    * logical name in `statsCols0` finds its column in the footers. */
   private def footerStats(root: String, files: Seq[String],
-      statsCols0: Seq[String], colmap: Map[String, String] = Map.empty)
+      statsCols0: Seq[String], colmap: Map[String, String])
       : Map[String, Map[String, (Double, Double)]] = {
     // envelopes live under PHYSICAL names (the names in the footers), so
     // they survive renames; logical requests translate here once
@@ -949,8 +950,8 @@ object SnapshotTable {
           } else bins.flatMap { bin =>
             stage(readFiles(spark, root, m, bin).coalesce(1), root)
           }
-        commitOrStale(root, m, "compact", inputs, adds = staged,
-          removes = inputs, footerStats(root, staged, statsColumns(m, zorderBy)))
+        commitOrStale(root, m, "compact", inputs, adds = staged, removes = inputs,
+          footerStats(root, staged, statsColumns(m, zorderBy), m.colmap))
       }
     }
   }
@@ -1217,7 +1218,7 @@ object SnapshotTable {
         val cdc = if (changeCapture) stageChanges(changes(m, rows), root) else Nil
         val adds = staged ++ incoming
         commitOrStale(root, m, op, hits.toSet, adds, removes = hits.toSet,
-          footerStats(root, adds, statsColumns(m)), cdc, txn = txn)
+          footerStats(root, adds, statsColumns(m), m.colmap), cdc, txn = txn)
           .map(v => (v, hits.size, m.files.size - hits.size))
       }
     }
@@ -1257,7 +1258,7 @@ object SnapshotTable {
           post.foreach(validateChecks(_, root))
           val adds = post.fold(Seq.empty[String])(p =>
             stage(p.coalesce(hitFiles.size), root))
-          val addStats = footerStats(root, adds, statsColumns(m))
+          val addStats = footerStats(root, adds, statsColumns(m), m.colmap)
           val sidecar = stageInto(
             matches.select(col("__file").as("file_name"), col("__pos").as("pos"))
               .unionByName(dvPositions(spark, root, m, hitFiles)),

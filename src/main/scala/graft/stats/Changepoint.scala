@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * t) is exact integer arithmetic; the only doubles are the reported
   * segment means (one division each).
   *
-  * Plan: one corpus-sized groupBy to the day frame, the r17/r18 sharded
-  * exclusive prefix for (cum, index) — no global window — a 1-row
-  * broadcast of (n, total), and a day-frame-sized TakeOrdered(1). */
+  * Plan: one corpus-sized groupBy to the day frame, the sharded exclusive
+  * prefix for (cum, index) whose totals are (total, n) —
+  * [[graft.ops.ShardLookup.exclusivePrefix]], no global window — and a
+  * day-frame-sized TakeOrdered(1). */
 object Changepoint {
 
   /** `(split_day, t, n_days, total, cum_left, d, mean_before, mean_after)`
@@ -29,15 +30,12 @@ object Changepoint {
       .groupBy(to_date(dayCol).as("v"))
       .agg(count(lit(1)).as("c"))
       .withColumn("__one", lit(1L))
-    val pref = RankTests.withExclusivePrefixCols(days,
+    val pref = graft.ops.ShardLookup.exclusivePrefix(days, Seq(col("v")),
       Seq("c" -> "cum_ex", "__one" -> "idx_ex"))
-    val withT = pref.select(col("v").as("split_day"),
-      (col("idx_ex") + 1L).as("t"),
-      (col("cum_ex") + col("c")).as("cum_left"))
-    // totals off the PINNED sharded frame (withExclusivePrefixCols pins
-    // its input), not `days` — the corpus groupBy must not re-run
-    val totals = pref.agg(count(lit(1)).as("n_days"), sum(col("c")).as("total"))
-    val scored = withT.crossJoin(broadcast(totals))
+    val scored = pref.df.select(col("v").as("split_day"),
+        (col("idx_ex") + 1L).as("t"),
+        (col("cum_ex") + col("c")).as("cum_left"),
+        lit(pref.totals("__one")).as("n_days"), lit(pref.totals("c")).as("total"))
       .where(col("t") < col("n_days")) // both segments non-empty
       .withColumn("d", col("n_days") * col("cum_left") - col("t") * col("total"))
     scored.orderBy(abs(col("d")).desc, col("t").asc).limit(1)

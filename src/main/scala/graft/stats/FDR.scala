@@ -3,6 +3,7 @@ package graft.stats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.ShardLookup
 
 /** Multiple-testing FDR corrections (SURVEY §2.8 R3): Benjamini–Hochberg,
   * Storey, and SABHA (structure-adaptive BH) with the block-constant q̂
@@ -48,18 +49,18 @@ object FDR {
     * rule). `tieBreak` makes the rank deterministic for equal p.
     *
     * Scale note: the global rank and running min are computed as a
-    * range-partitioned two-phase pass (the [[graft.text.Corpus.chunkMap]]
-    * idiom), NOT a single global-window sort: hypotheses are range-sharded
-    * on (p, tieBreak), ranks are per-shard `row_number` plus exact shard
-    * base counts, and the step-up suffix min combines each shard's windowed
-    * suffix min with the min over all later shards (driver-side over one
-    * row per shard). No stage is a single-partition sort, and every value
-    * (rank, n·p/rank, the mins) is bit-identical to the global-window form.
+    * range-partitioned two-phase pass, NOT a single global-window sort:
+    * the rank is the exclusive prefix count in (p, tieBreak) order
+    * ([[graft.ops.ShardLookup.exclusivePrefix]]), and the step-up suffix
+    * min combines each shard's windowed suffix min with the min over all
+    * later shards (driver-side over one row per shard). No stage is a
+    * single-partition sort, and every value (rank, n·p/rank, the mins) is
+    * bit-identical to the global-window form.
     *
-    * EAGER: runs Spark jobs at call time (the per-shard stats collects) and
-    * pins the range-sharded input via localCheckpoint — this is not a pure
-    * plan builder. The returned frame reads the pinned materialization, so
-    * downstream actions do not re-run the upstream pipeline. */
+    * EAGER: runs Spark jobs at call time (the prefix's pins and shard
+    * totals, the later-shard min collect) — not a pure plan builder. The
+    * returned frame reads the pinned range-sharded rows, so downstream
+    * actions do not re-run the upstream pipeline. */
   def adjustDF(df: DataFrame, pCol: String, tieBreak: Column,
       lambda: Double = 0.5): DataFrame =
     adjustShardedGlobal(df, pCol, tieBreak, lambda)
@@ -94,63 +95,31 @@ object FDR {
   }
 
   /** Single-family [[adjustDF]] without the single-partition sort: the
-    * global rank is (shard base count) + per-shard `row_number`, and the BH
+    * global rank is the sharded exclusive prefix count + 1, and the BH
     * suffix min is least(per-shard windowed suffix min, min over all later
     * shards). Shards are contiguous (p, tieBreak) ranges, so both
-    * decompositions are exact; n, #{p>λ}, and the per-shard aggregates are
-    * one row per shard on the driver. Costs one extra key-partitioned pass
-    * over the (per-hypothesis) rows vs the windowed form — the price of no
-    * stage being a global sort. */
+    * decompositions are exact; n and #{p>λ} are the prefix's totals. Costs
+    * one extra key-partitioned pass over the (per-hypothesis) rows vs the
+    * windowed form — the price of no stage being a global sort. */
   private def adjustShardedGlobal(df: DataFrame, pCol: String,
       tieBreak: Column, lambda: Double): DataFrame = {
-    // Eager localCheckpoint PINS the range partitioning: the shard stats
-    // below and the returned plan all read this one materialization, so
-    // row-to-shard assignment cannot drift between the stats jobs and the
-    // final pass (the range partitioner samples bounds per execution; a
-    // nondeterministic upstream — any shuffle without a total order — could
-    // otherwise land rows in different shards across jobs and silently
-    // corrupt the rank bases and suffix mins). It also stops downstream
-    // actions from re-running the whole upstream pipeline. Storage is one
-    // row per hypothesis; callers running many adjusts in one session can
-    // free it with [[graft.dedup.Dedup.releaseCheckpoints]].
-    //
-    // The INPUT is pinned first: RangePartitioning samples its child in a
-    // separate job before the shuffle, so an unpinned upstream (often an
-    // expensive aggregation — r9 pays a full orders groupBy) would execute
-    // TWICE, once for the bounds sketch and once for the real exchange.
-    // Both pins are one row per hypothesis — same storage class.
-    val pinned = df.localCheckpoint()
-    val sharded = pinned.repartitionByRange(col(pCol).asc, tieBreak.asc)
-      .withColumn("__shard", spark_partition_id())
-      .localCheckpoint()
-    val stats = sharded.groupBy(col("__shard")).agg(
-        count(lit(1)).as("__cnt"),
-        sum(when(col(pCol) > lambda, 1L).otherwise(0L)).as("__gt"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val n = stats.map(_._2).sum
-    val gt = stats.map(_._3).sum
-    // exclusive prefix count per shard = the shard's global rank base
-    val rankBase: Map[Int, Long] = {
-      var acc = 0L
-      stats.map { case (s, c, _) => val e = (s, acc); acc += c; e }.toMap
-    }
-    val localRankW = Window.partitionBy(col("__shard"))
-      .orderBy(col(pCol).asc, tieBreak.asc)
-    val suffW = Window.partitionBy(col("__shard"))
+    val pref = ShardLookup.exclusivePrefix(
+      df.withColumn("__one", lit(1L))
+        .withColumn("__gt", when(col(pCol) > lambda, 1L).otherwise(0L)),
+      Seq(col(pCol).asc, tieBreak.asc), Seq("__one" -> "__rk0", "__gt" -> "__gtc"))
+    val (n, gt) = (pref.totals("__one"), pref.totals("__gt"))
+    val suffW = Window.partitionBy(col(ShardLookup.ShardCol))
       .orderBy(col(pCol).desc, tieBreak.desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = graft.ops.ShardLookup
-      .attachLong(sharded, col("__shard"), rankBase, "__base", 0L)
-      .withColumn("__rk", col("__base") + row_number().over(localRankW))
+    val ranked = pref.sharded
+      .withColumn("__rk", col("__rk0") + 1L)
       .withColumn("__ratio", lit(n) * col(pCol) / col("__rk"))
-      .drop("__base")
+      .drop("__one", "__gt", "__rk0", "__gtc")
     // min ratio over all LATER shards (every row there has a larger rank):
     // one row per shard, exclusive suffix min on the driver
     val laterMin: Map[Int, Double] = {
       var acc = Double.PositiveInfinity
-      ranked.groupBy(col("__shard")).agg(min(col("__ratio")).as("__m"))
+      ranked.groupBy(col(ShardLookup.ShardCol)).agg(min(col("__ratio")).as("__m"))
         .collect()
         .map(r => (r.getInt(0), if (r.isNullAt(1)) Double.PositiveInfinity
           else r.getDouble(1)))
@@ -158,8 +127,8 @@ object FDR {
         .map { case (s, m) => val e = (s, acc); acc = math.min(acc, m); e }
         .toMap
     }
-    graft.ops.ShardLookup
-      .attachDouble(ranked, col("__shard"), laterMin, "__later",
+    ShardLookup
+      .attachDouble(ranked, col(ShardLookup.ShardCol), laterMin, "__later",
         Double.PositiveInfinity)
       .withColumn("bh_adj",
         least(lit(1.0), least(min(col("__ratio")).over(suffW), col("__later"))))
@@ -167,7 +136,7 @@ object FDR {
       .withColumn("storey_pi0",
         least(lit(1.0), lit(gt) / (lit(1 - lambda) * lit(n))))
       .withColumn("storey_adj", least(lit(1.0), col("storey_pi0") * col("bh_adj")))
-      .drop("__shard", "__rk", "__ratio")
+      .drop(ShardLookup.ShardCol, "__rk", "__ratio")
   }
 
   /** Distributed SABHA select with the clamped feasible block projection:
@@ -187,9 +156,9 @@ object FDR {
     *
     * Adds `qhat`, `qp`, and `rejected` (0/1).
     *
-    * EAGER: runs Spark jobs at call time (shard counts and the step-up k̂)
-    * and pins the range-sharded frame via localCheckpoint; the returned
-    * frame reads that materialization. Not a pure plan builder. */
+    * EAGER: runs Spark jobs at call time (the prefix's pins and shard
+    * counts, the step-up k̂); the returned frame reads the pinned
+    * range-sharded rows. Not a pure plan builder. */
   def sabhaSelectDF(df: DataFrame, pCol: String, blockCol: String,
       tieBreak: Column, alpha: Double = 0.05, tau: Double = 0.5,
       eps: Double = 0.1): DataFrame = {
@@ -202,32 +171,16 @@ object FDR {
             .over(blockW))))
       .withColumn("qp",
         when(col(pCol) > tau, lit(1e300)).otherwise(col("qhat") * col(pCol)))
-    // step-up rule without a global sort (the adjustDF sharding): the global
-    // rank is per-shard row_number + exact shard base counts; n and the
-    // step-up k̂ = max over rows of (rk where qp ≤ α·rk/n) are global
-    // aggregates of row-local values, folded shard-wise then on the driver
-    // (one row per shard crosses). The final rejection test is row-local.
-    // pinned for the same cross-job shard-stability reason as
-    // [[adjustShardedGlobal]], and the input pins FIRST so the range
-    // partitioner's bounds-sampling job reads the pinned rows instead of
-    // re-running the upstream (see comment there)
-    val pinnedQ = withQ.localCheckpoint()
-    val sharded = pinnedQ.repartitionByRange(col("qp").asc, tieBreak.asc)
-      .withColumn("__shard", spark_partition_id())
-      .localCheckpoint()
-    val counts = sharded.groupBy(col("__shard")).agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val n = counts.map(_._2).sum
-    val rankBase: Map[Int, Long] = {
-      var acc = 0L
-      counts.map { case (s, c) => val e = (s, acc); acc += c; e }.toMap
-    }
-    val localRankW = Window.partitionBy(col("__shard"))
-      .orderBy(col("qp").asc, tieBreak.asc)
-    val ranked = graft.ops.ShardLookup
-      .attachLong(sharded, col("__shard"), rankBase, "__base", 0L)
-      .withColumn("__rk", col("__base") + row_number().over(localRankW))
-      .drop("__base")
+    // step-up rule without a global sort: the global rank is the sharded
+    // exclusive prefix count + 1 and n its total; the step-up k̂ = max over
+    // rows of (rk where qp ≤ α·rk/n) is one more aggregate of row-local
+    // values. The final rejection test is row-local.
+    val pref = ShardLookup.exclusivePrefix(withQ.withColumn("__one", lit(1L)),
+      Seq(col("qp").asc, tieBreak.asc), Seq("__one" -> "__rk0"))
+    val n = pref.totals("__one")
+    val ranked = pref.df
+      .withColumn("__rk", col("__rk0") + 1L)
+      .drop("__one", "__rk0")
     val khat =
       if (n == 0L) 0L
       else {
@@ -240,7 +193,7 @@ object FDR {
     ranked
       .withColumn("rejected",
         when(col("qp") <= lit(alpha) * lit(khat) / lit(n), 1).otherwise(0))
-      .drop("__shard", "__rk")
+      .drop("__rk")
   }
 
   /** Storey's method with null-proportion estimate at threshold thr. */

@@ -3,6 +3,7 @@ package graft.stats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.ShardLookup
 
 /** Distributed two-sample RANK statistics (NOT-IN-REFERENCE extension of
   * the §2.8 hypothesis-testing family — the nonparametric siblings of the
@@ -11,72 +12,27 @@ import org.apache.spark.sql.functions._
   * Both tests reduce the data to VALUE-LEVEL counts first (one map-side-
   * combined groupBy — the only corpus-sized shuffle), then need cumulative
   * counts in value order. That prefix sum is the classic global-sort trap;
-  * here it runs as the repo's two-phase sharded-global pattern
-  * ([[FDR.adjustDF]]'s doctrine): contiguous range shards, per-shard
-  * windows, driver-computed exclusive shard bases delivered via
-  * [[graft.ops.ShardLookup]]. Everything cumulative is INTEGER arithmetic
-  * — exactly decomposable across shards, no FP-association drift — and
-  * each statistic leaves integers only in the final closed-form
-  * expression, so a relational replay reproduces it bit-for-bit.
+  * here it is [[graft.ops.ShardLookup.exclusivePrefix]]. Everything
+  * cumulative is INTEGER arithmetic — exactly decomposable across shards,
+  * no FP-association drift — and each statistic leaves integers only in
+  * the final closed-form expression, so a relational replay reproduces it
+  * bit-for-bit.
   */
 object RankTests {
 
   /** Value-level counts: one row per distinct value with group-A and
-    * group-B multiplicities. `isA` must be boolean; NULL values and NULL
-    * group flags drop (SQL two-sample semantics: membership unknown →
-    * excluded). */
-  private def valueCounts(df: DataFrame, valueCol: String, isA: Column): DataFrame =
-    df.where(col(valueCol).isNotNull && isA.isNotNull)
-      .select(col(valueCol).cast("double").as("v"),
-        when(isA, 1L).otherwise(0L).as("g"))
-      .groupBy(col("v"))
-      .agg(sum(col("g")).as("na"), (count(lit(1)) - sum(col("g"))).as("nb"))
-
-  /** Attach EXCLUSIVE cumulative counts `cuma`/`cumb` (rows strictly below
-    * `v`) to the value-level frame — integer-exact two-phase sharded
-    * prefix sum, no global sort. The eager localCheckpoint pins the range
-    * partitioning so shard assignment cannot drift between the base-stats
-    * job and the final pass (the [[FDR]] doctrine). */
-  private def withExclusivePrefix(vc: DataFrame): DataFrame =
-    withExclusivePrefixCols(vc, Seq("na" -> "cuma", "nb" -> "cumb"))
-
-  /** The general form: for each `(countCol, outCol)` pair attach the
-    * EXCLUSIVE cumulative sum of `countCol` in `v` order as `outCol`.
-    * Contiguous range shards + per-shard windows + driver-computed shard
-    * bases via [[graft.ops.ShardLookup]] — one shard-totals job, then a
-    * single final pass; everything LONG so shard decomposition is exact. */
-  private[graft] def withExclusivePrefixCols(
-      vc: DataFrame, cols: Seq[(String, String)]): DataFrame = {
-    // pin the value cells FIRST: RangePartitioning samples its child in a
-    // separate job before the shuffle, so the corpus-sized groupBy feeding
-    // this frame would otherwise execute twice (the FDR doctrine)
-    val pinnedVc = vc.localCheckpoint()
-    val sharded = pinnedVc.repartitionByRange(col("v").asc)
-      .withColumn("__shard", spark_partition_id())
-      .localCheckpoint()
-    val aggs = cols.map { case (c, _) => sum(col(c)).as(s"__s_$c") }
-    val shardTotals = sharded.groupBy(col("__shard"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().map(r => (r.getInt(0), cols.indices.map(i => r.getLong(i + 1)).toArray))
-      .sortBy(_._1)
-    // exclusive prefix over shards: one row per shard, driver arithmetic
-    val zero = Array.fill(cols.size)(0L)
-    val bases = shardTotals.scanLeft((0, zero)) { case ((_, acc), (s, a)) =>
-      (s, acc.zip(a).map { case (x, y) => x + y })
-    }.init.zip(shardTotals).map { case ((_, acc), (s, _)) => (s, acc) }.toMap
-    // scanLeft.init pairs shard s with the sum of all PRIOR shards
-    val w = Window.partitionBy(col("__shard")).orderBy(col("v").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    var out = sharded
-    cols.zipWithIndex.foreach { case ((c, o), i) =>
-      out = out.withColumn(s"__c_$c", coalesce(sum(col(c)).over(w), lit(0L)))
-      out = graft.ops.ShardLookup.attachLong(out, col("__shard"),
-        bases.map { case (s, a) => s -> a(i) }, s"__b_$c", 0L)
-        .withColumn(o, col(s"__b_$c") + col(s"__c_$c"))
-        .drop(s"__c_$c", s"__b_$c")
-    }
-    out.drop("__shard")
-  }
+    * group-B multiplicities `na`/`nb` and their exclusive prefixes
+    * `cuma`/`cumb` (rows strictly below `v`). `isA` must be boolean; NULL
+    * values and NULL group flags drop (SQL two-sample semantics:
+    * membership unknown → excluded). */
+  private def valueCounts(df: DataFrame, valueCol: String, isA: Column): ShardLookup.Prefix =
+    ShardLookup.exclusivePrefix(
+      df.where(col(valueCol).isNotNull && isA.isNotNull)
+        .select(col(valueCol).cast("double").as("v"),
+          when(isA, 1L).otherwise(0L).as("g"))
+        .groupBy(col("v"))
+        .agg(sum(col("g")).as("na"), (count(lit(1)) - sum(col("g"))).as("nb")),
+      Seq(col("v")), Seq("na" -> "cuma", "nb" -> "cumb"))
 
   /** Tie-corrected Mann–Whitney U (normal approximation, no continuity
     * correction — R's `wilcox.test(correct = FALSE)` convention): one row
@@ -86,8 +42,7 @@ object RankTests {
     * `z` is the one double, produced by a fixed left-to-right expression
     * over them so a replay evaluates bit-identically. */
   def mannWhitneyDF(df: DataFrame, valueCol: String, isA: Column): DataFrame = {
-    val pref = withExclusivePrefix(valueCounts(df, valueCol, isA))
-    val agg = pref.agg(
+    val agg = valueCounts(df, valueCol, isA).df.agg(
       sum(col("na")).as("n_a"),
       sum(col("nb")).as("n_b"),
       sum(col("na") * (lit(2L) * col("cumb") + col("nb"))).as("u2"),
@@ -129,12 +84,11 @@ object RankTests {
     * (compare |w_bm| to a t critical at that df). Degenerate one-group
     * input yields NULLs (division by zero group size). */
   def brunnerMunzelDF(df: DataFrame, valueCol: String, isA: Column): DataFrame = {
-    val pref = withExclusivePrefix(valueCounts(df, valueCol, isA))
     val d2a = lit(2L) * col("cumb") + col("nb")
     val d2b = lit(2L) * col("cuma") + col("na")
     val r2 = lit(2L) * (col("cuma") + col("cumb")) +
       (col("na") + col("nb")) + lit(1L)
-    val agg = pref.agg(
+    val agg = valueCounts(df, valueCol, isA).df.agg(
       sum(col("na")).as("n_a"), sum(col("nb")).as("n_b"),
       sum(col("na").cast("decimal(38,0)") * r2).as("sr2a"),
       sum(col("nb").cast("decimal(38,0)") * r2).as("sr2b"),
@@ -187,14 +141,13 @@ object RankTests {
       .groupBy(col("v"), col("grp")).agg(count(lit(1)).as("c"))
       .localCheckpoint()
     val tot = vc.groupBy(col("v")).agg(sum(col("c")).as("t"))
-    val pref = withExclusivePrefixCols(tot, Seq("t" -> "cum"))
-    val perGroup = vc.join(pref, "v")
+    val pref = ShardLookup.exclusivePrefix(tot, Seq(col("v")), Seq("t" -> "cum"))
+    val perGroup = vc.join(pref.df, "v")
       .groupBy(col("grp"))
       .agg(sum(col("c")).as("n_g"),
         sum(col("c") * (lit(2L) * col("cum") + col("t") + lit(1L))).as("r2sum"))
-    val totals = pref.agg(sum(col("t")),
-      sum(col("t") * col("t") * col("t") - col("t"))).head()
-    val (nTot, tieTerm) = (totals.getLong(0), totals.getLong(1))
+    val nTot = pref.totals("t")
+    val tieTerm = pref.df.agg(sum(col("t") * col("t") * col("t") - col("t"))).head().getLong(0)
     val nD = lit(nTot.toDouble)
     // Σ R_g²/n_g with R_g = r2sum/2, accumulated left-to-right in grp order
     val runW = Window.partitionBy().orderBy(col("grp").asc)
@@ -237,7 +190,7 @@ object RankTests {
     def rankMap(c: String): DataFrame = {
       val tot = base.select(col(c).as("v")).groupBy(col("v"))
         .agg(count(lit(1)).as("t"))
-      withExclusivePrefixCols(tot, Seq("t" -> "cum"))
+      ShardLookup.exclusivePrefix(tot, Seq(col("v")), Seq("t" -> "cum")).df
         .select(col("v").as(c),
           (lit(2L) * col("cum") + col("t") + lit(1L)).as(s"d$c"))
     }
@@ -284,8 +237,7 @@ object RankTests {
       .select(abs(col("dd")).as("v"), when(col("dd") > 0.0, 1L).otherwise(0L).as("p"))
     val vc = diffs.groupBy(col("v"))
       .agg(count(lit(1)).as("t"), sum(col("p")).as("pos"))
-    val pref = withExclusivePrefixCols(vc, Seq("t" -> "cum"))
-    val agg = pref.agg(
+    val agg = ShardLookup.exclusivePrefix(vc, Seq(col("v")), Seq("t" -> "cum")).df.agg(
       sum(col("t")).as("n"),
       sum(col("pos") * (lit(2L) * col("cum") + col("t") + lit(1L))).as("w2plus"),
       sum(col("t") * col("t") * col("t") - col("t")).as("tie_term"))
@@ -359,16 +311,14 @@ object RankTests {
     * extremum search, so the statistic hash-replays exactly. One row
     * `(n_a, n_b, d_num, d)`. */
   def ksDF(df: DataFrame, valueCol: String, isA: Column): DataFrame = {
-    val pref = withExclusivePrefix(valueCounts(df, valueCol, isA))
+    val pref = valueCounts(df, valueCol, isA)
+    // the cross-multiplied extremum inlines the totals as literals
+    val (nA, nB) = (pref.totals("na"), pref.totals("nb"))
     // inclusive cumulatives at each value: exclusive prefix + own count
-    val inc = pref
+    pref.df
       .withColumn("__ia", col("cuma") + col("na"))
       .withColumn("__ib", col("cumb") + col("nb"))
-    // the cross-multiplied extremum needs the totals first — one tiny
-    // totals job, then the integer max with the totals inlined as literals
-    val totals = pref.agg(sum(col("na")), sum(col("nb"))).head()
-    val (nA, nB) = (totals.getLong(0), totals.getLong(1))
-    inc.agg(max(abs(col("__ia") * lit(nB) - col("__ib") * lit(nA))).as("d_num"))
+      .agg(max(abs(col("__ia") * lit(nB) - col("__ib") * lit(nA))).as("d_num"))
       .select(lit(nA).as("n_a"), lit(nB).as("n_b"), col("d_num"),
         (col("d_num").cast("double") / lit((nA * nB).toDouble)).as("d"))
   }
@@ -441,16 +391,17 @@ object RankTests {
       .select(((col("b.y") - col("a.y")) / (col("b.x") - col("a.x"))).as("v"),
         (col("a.o") * col("b.o")).as("w"))
       .groupBy(col("v")).agg(sum(col("w")).as("w"))
-    val pref = withExclusivePrefixCols(slopes, Seq("w" -> "cumw"))
+    val pref = ShardLookup.exclusivePrefix(slopes, Seq(col("v")), Seq("w" -> "cumw"))
+    val tw = pref.totals("w")
     val nRow = cells.agg(sum(col("o")).as("n"))
-    pref.crossJoin(pref.agg(sum(col("w")).as("tw")))
+    pref.df
       .withColumn("ci", col("cumw") + col("w"))
-      .groupBy(col("tw"))
+      .groupBy(lit(tw).as("n_pairs"))
       .agg(
-        min(when(col("ci") >= expr("(tw + 1) DIV 2"), col("v"))).as("m1"),
-        min(when(col("ci") >= expr("(tw + 2) DIV 2"), col("v"))).as("m2"))
+        min(when(col("ci") >= lit((tw + 1) / 2), col("v"))).as("m1"),
+        min(when(col("ci") >= lit((tw + 2) / 2), col("v"))).as("m2"))
       .crossJoin(nRow)
-      .select(col("n"), col("tw").as("n_pairs"),
+      .select(col("n"), col("n_pairs"),
         ((col("m1") + col("m2")) / lit(2.0)).as("slope_med"))
   }
 
@@ -530,12 +481,12 @@ object RankTests {
       .select((col(valueCol).cast("decimal(12,2)") * 100).cast("long").as("vc"))
     val cells = graft.Tables.spreadForGroupBy(base, col("vc"))
       .groupBy(col("vc").as("v")).agg(count(lit(1)).as("c"))
-    val pref = withExclusivePrefixCols(cells, Seq("c" -> "cumex"))
-    // totals off the PINNED sharded frame — the corpus groupBy must not
+    val pref = ShardLookup.exclusivePrefix(cells, Seq(col("v")), Seq("c" -> "cumex"))
+    // extrema off the PINNED sharded frame — the corpus groupBy must not
     // re-run (the r63/m17 doctrine)
-    val tot = pref.agg(sum(col("c")).as("n"), min(col("v")).as("lo"),
-      max(col("v")).as("hi"))
-    val scored = pref.crossJoin(broadcast(tot))
+    val tot = pref.df.agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
+      .withColumn("n", lit(pref.totals("c")))
+    val scored = pref.df.crossJoin(broadcast(tot))
       .withColumn("ci", col("cumex") + col("c"))
       .withColumn("span", col("hi") - col("lo"))
       .withColumn("f0num", col("v") - col("lo"))
@@ -574,14 +525,12 @@ object RankTests {
       .localCheckpoint()
     val cells = graft.Tables.spreadForGroupBy(base, col("v2"))
       .groupBy(col("v2").as("v")).agg(count(lit(1)).as("c"))
-    val pref = withExclusivePrefixCols(cells, Seq("c" -> "cumex"))
-    // total off the PINNED sharded frame (withExclusivePrefixCols pins its
-    // input), not off `cells` — the corpus groupBy must not re-run
-    val tot = pref.agg(sum(col("c")).as("n"))
-    val med = pref.crossJoin(broadcast(tot))
+    val pref = ShardLookup.exclusivePrefix(cells, Seq(col("v")), Seq("c" -> "cumex"))
+    val n = pref.totals("c")
+    val med = pref.df
       .withColumn("ci", col("cumex") + col("c"))
-      .withColumn("m1", when(col("ci") >= expr("(n + 1) DIV 2"), col("v")))
-      .withColumn("m2", when(col("ci") >= expr("(n + 2) DIV 2"), col("v")))
+      .withColumn("m1", when(col("ci") >= lit((n + 1) / 2), col("v")))
+      .withColumn("m2", when(col("ci") >= lit((n + 2) / 2), col("v")))
       .agg(((min(col("m1")) + min(col("m2"))) / lit(2)).cast("long").as("med2"))
     val classified = base.crossJoin(broadcast(med))
       .select(col("grp"), (col("v2") > col("med2")).cast("int").as("above"),

@@ -300,8 +300,8 @@ object Roc {
     * score threshold, descending: `(threshold, tp, fp, prec, rec, f1)`.
     *
     * Exactness: TP/FP at each cut are exact LONGs from the sharded
-    * exclusive-prefix machinery ([[RankTests.withExclusivePrefixCols]] —
-    * no global sort, no driver collect beyond 32 shard totals);
+    * exclusive prefix and its totals ([[graft.ops.ShardLookup.exclusivePrefix]]
+    * — no global sort, no driver collect beyond one row per shard);
     * `prec = tp/(tp+fp)`, `rec = tp/P`, `f1 = 2tp/(tp+fp+P)` are each ONE
     * integer→double division (f1's denominator folds fn = P − tp away),
     * rounded to 6.
@@ -312,11 +312,12 @@ object Roc {
     val byScore = df.where(score.isNotNull && label.isNotNull)
       .groupBy(score.cast("double").as("v"))
       .agg(count(when(label, 1)).as("np"), count(when(!label, 1)).as("nn"))
-    val pref = RankTests.withExclusivePrefixCols(byScore,
+    val pref = graft.ops.ShardLookup.exclusivePrefix(byScore, Seq(col("v")),
       Seq("np" -> "cumnp", "nn" -> "cumnn"))
-    pref.crossJoin(pref.agg(sum(col("np")).as("p"), sum(col("nn")).as("nneg")))
+    pref.df
+      .withColumn("p", lit(pref.totals("np")))
       .withColumn("tp", col("p") - col("cumnp"))
-      .withColumn("fp", col("nneg") - col("cumnn"))
+      .withColumn("fp", lit(pref.totals("nn")) - col("cumnn"))
       .select(col("v").as("threshold"), col("tp"), col("fp"),
         round(col("tp").cast("double") /
           (col("tp") + col("fp")).cast("double"), 6).as("prec"),

@@ -3,6 +3,7 @@ package graft.stats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.ShardLookup
 
 /** Time-to-event (survival) analysis at corpus scale (NOT-IN-REFERENCE
   * §2.8 extension — the survival siblings of the reference's hypothesis
@@ -12,13 +13,13 @@ import org.apache.spark.sql.functions._
   * Both estimators reduce the corpus to VALUE-LEVEL (distinct time) counts
   * in one map-side-combined groupBy — the only corpus-sized shuffle — then
   * need the number-at-risk at each time, i.e. `N − (subjects leaving before
-  * t)`: an exclusive prefix sum in time order, run via the repo's sharded
-  * two-phase pattern ([[RankTests.withExclusivePrefixCols]]), no global
-  * sort. Everything cumulative is INTEGER; the per-time expectation /
-  * variance terms are single exact-operand double divisions; the only
-  * accumulated doubles ride RUNNING chains in time order (the r19
-  * fixed-chain doctrine) so a relational replay reproduces them
-  * bit-for-bit. The KM survival curve itself is the one transcendental
+  * t)`: an exclusive prefix sum in time order
+  * ([[graft.ops.ShardLookup.exclusivePrefix]]), no global sort; its totals
+  * give `N` without another job. Everything cumulative is INTEGER; the
+  * per-time expectation / variance terms are single exact-operand double
+  * divisions; the only accumulated doubles ride RUNNING chains in time
+  * order (the r19 fixed-chain doctrine) so a relational replay
+  * reproduces them bit-for-bit. The KM survival curve itself is the one transcendental
   * surface (a running `exp(Σ ln(ratio))` product — the t13-perplexity
   * precedent), rounded to 6 decimals on output.
   */
@@ -26,7 +27,8 @@ object Survival {
 
   /** Distinct-time frame `(t, d, c)` with event deaths `d` and censored
     * losses `c`, plus exclusive prefix `cum` of subjects leaving strictly
-    * before `t`. NULL time/event rows drop. */
+    * before `t`, and `n_risk` = subjects with time ≥ `t`. NULL time/event
+    * rows drop. */
   private def timeCounts(df: DataFrame, timeCol: String, eventCol: Column): DataFrame = {
     val tc = df.where(col(timeCol).isNotNull && eventCol.isNotNull)
       .select(col(timeCol).cast("long").as("v"),
@@ -34,7 +36,8 @@ object Survival {
       .groupBy(col("v"))
       .agg(sum(col("e")).as("d"), (count(lit(1)) - sum(col("e"))).as("c"))
       .withColumn("leave", col("d") + col("c"))
-    RankTests.withExclusivePrefixCols(tc, Seq("leave" -> "cum"))
+    val pref = ShardLookup.exclusivePrefix(tc, Seq(col("v")), Seq("leave" -> "cum"))
+    pref.df.withColumn("n_risk", lit(pref.totals("leave")) - col("cum"))
   }
 
   /** Kaplan–Meier product-limit estimator: one row per distinct time,
@@ -46,16 +49,12 @@ object Survival {
     * time exhausts its risk set (`d = n_risk`) survival pins to exactly
     * 0.0 from that row on — no `ln(0)` is ever evaluated. */
   def kaplanMeierDF(df: DataFrame, timeCol: String, eventCol: Column): DataFrame = {
-    val tc = timeCounts(df, timeCol, eventCol)
-    val total = tc.agg(sum(col("leave"))).head().getLong(0)
     val runW = Window.partitionBy().orderBy(col("v").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // value-level frame: distinct times only — the deliberate
     // dimension-sized global window (the w2/r19 whitelist family)
-    val nRisk = lit(total) - col("cum")
-    val ratio = (nRisk - col("d")).cast("double") / nRisk.cast("double")
-    tc
-      .withColumn("n_risk", nRisk)
+    val ratio = (col("n_risk") - col("d")).cast("double") / col("n_risk").cast("double")
+    timeCounts(df, timeCol, eventCol)
       .withColumn("__lnr", when(col("d") < col("n_risk"), log(ratio)).otherwise(lit(0.0)))
       .withColumn("__dead", min(col("n_risk") - col("d")).over(runW))
       .withColumn("survival",
@@ -76,18 +75,14 @@ object Survival {
     * lo, hi)` ordered by `t`, round-6 (ln/exp per the t13 convention;
     * sqrt is IEEE-exact so the chain replays relationally). */
   def kaplanMeierGreenwoodDF(df: DataFrame, timeCol: String, eventCol: Column): DataFrame = {
-    val tc = timeCounts(df, timeCol, eventCol)
-    val total = tc.agg(sum(col("leave"))).head().getLong(0)
     val runW = Window.partitionBy().orderBy(col("v").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // distinct-time frame — the deliberate dimension-sized global window
-    val nRisk = lit(total) - col("cum")
-    val ratio = (nRisk - col("d")).cast("double") / nRisk.cast("double")
+    val ratio = (col("n_risk") - col("d")).cast("double") / col("n_risk").cast("double")
     val alive = col("d") < col("n_risk")
     val sRaw = exp(sum(col("__lnr")).over(runW))
     val seRaw = col("__sraw") * sqrt(sum(col("__gterm")).over(runW))
-    tc
-      .withColumn("n_risk", nRisk)
+    timeCounts(df, timeCol, eventCol)
       .withColumn("__lnr", when(alive, log(ratio)).otherwise(lit(0.0)))
       .withColumn("__gterm", when(alive,
           col("d").cast("double") /
@@ -162,15 +157,11 @@ object Survival {
   def rmstDF(df: DataFrame, timeCol: String, eventCol: Column,
       tau: Long): DataFrame = {
     require(tau > 0L, "tau must be positive")
-    val tc = timeCounts(df, timeCol, eventCol)
-    val total = tc.agg(sum(col("leave"))).head().getLong(0)
     val ord = Window.partitionBy().orderBy(col("v").asc)
     val runW = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nRisk = lit(total) - col("cum")
-    val ratio = (nRisk - col("d")).cast("double") / nRisk.cast("double")
+    val ratio = (col("n_risk") - col("d")).cast("double") / col("n_risk").cast("double")
     // distinct-time frame — the deliberate dimension-sized global window
-    tc
-      .withColumn("n_risk", nRisk)
+    timeCounts(df, timeCol, eventCol)
       .withColumn("__lnr",
         when(col("d") < col("n_risk"), log(ratio)).otherwise(lit(0.0)))
       .withColumn("__dead", min(col("n_risk") - col("d")).over(runW))
@@ -213,15 +204,14 @@ object Survival {
       .agg(sum(col("e1")).as("d1"), sum(col("e2")).as("d2"),
         (count(lit(1)) - sum(col("e1")) - sum(col("e2"))).as("c"))
       .withColumn("leave", col("d1") + col("d2") + col("c"))
-    val pref = RankTests.withExclusivePrefixCols(tc, Seq("leave" -> "cum"))
-    val total = pref.agg(sum(col("leave"))).head().getLong(0)
+    val pref = ShardLookup.exclusivePrefix(tc, Seq(col("v")), Seq("leave" -> "cum"))
     val ord = Window.partitionBy().orderBy(col("v").asc)
     val runW = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nRisk = lit(total) - col("cum")
+    val nRisk = lit(pref.totals("leave")) - col("cum")
     val d = col("d1") + col("d2")
     val ratio = (col("n_risk") - d).cast("double") / col("n_risk").cast("double")
     // distinct-time frame — the deliberate dimension-sized global window
-    pref
+    pref.df
       .withColumn("n_risk", nRisk)
       .withColumn("__lnr", when(d < col("n_risk"), log(ratio)).otherwise(lit(0.0)))
       .withColumn("__dead", min(col("n_risk") - d).over(runW))
@@ -268,12 +258,11 @@ object Survival {
         sum(col("e") * (lit(1L) - col("g"))).as("d2"),
         sum(col("g")).as("leave1"),
         (count(lit(1)) - sum(col("g"))).as("leave2"))
-    val pref = RankTests.withExclusivePrefixCols(
-      tc, Seq("leave1" -> "cum1", "leave2" -> "cum2"))
-    val totals = pref.agg(sum(col("leave1")), sum(col("leave2"))).head()
-    val (t1, t2) = (totals.getLong(0), totals.getLong(1))
-    pref.select(col("v"), col("d1"), col("d2"),
-      (lit(t1) - col("cum1")).as("n1"), (lit(t2) - col("cum2")).as("n2"))
+    val pref = ShardLookup.exclusivePrefix(
+      tc, Seq(col("v")), Seq("leave1" -> "cum1", "leave2" -> "cum2"))
+    pref.df.select(col("v"), col("d1"), col("d2"),
+      (lit(pref.totals("leave1")) - col("cum1")).as("n1"),
+      (lit(pref.totals("leave2")) - col("cum2")).as("n2"))
   }
 
   def logRankDF(df: DataFrame, timeCol: String, eventCol: Column, isG1: Column): DataFrame = {
@@ -306,15 +295,6 @@ object Survival {
       .orderBy(col("t"))
   }
 
-  /** Nelson–Aalen cumulative-hazard estimator `H(t) = Σ_{t_i ≤ t} d_i/n_i`
-    * with its variance `Σ d_i/n_i²` — the hazard-scale twin of
-    * [[kaplanMeierDF]] that needs NO transcendentals at all: every term is
-    * a single division of exact longs and the accumulations are running
-    * chains in time order (the r27 doctrine), so the replay is bit-exact
-    * before the round-6. One row per distinct time, ordered:
-    * `(t, n_risk, d, c, h_cum, var_cum)`. Same plan shape as KM: one
-    * corpus-sized groupBy, the sharded leave-prefix, a dimension-sized
-    * running window over distinct times. */
   /** A fitted single-binary-covariate Cox model: log hazard ratio `beta`
     * with its model-based SE (1/√I at the optimum). */
   case class CoxFit(beta: Double, se: Double, iters: Int, converged: Boolean)
@@ -490,14 +470,19 @@ object Survival {
       .orderBy(col("t"))
   }
 
+  /** Nelson–Aalen cumulative-hazard estimator `H(t) = Σ_{t_i ≤ t} d_i/n_i`
+    * with its variance `Σ d_i/n_i²` — the hazard-scale twin of
+    * [[kaplanMeierDF]] that needs NO transcendentals at all: every term is
+    * a single division of exact longs and the accumulations are running
+    * chains in time order (the r27 doctrine), so the replay is bit-exact
+    * before the round-6. One row per distinct time, ordered:
+    * `(t, n_risk, d, c, h_cum, var_cum)`. Same plan shape as KM: one
+    * corpus-sized groupBy, the sharded leave-prefix, a dimension-sized
+    * running window over distinct times. */
   def nelsonAalenDF(df: DataFrame, timeCol: String, eventCol: Column): DataFrame = {
-    val tc = timeCounts(df, timeCol, eventCol)
-    val total = tc.agg(sum(col("leave"))).head().getLong(0)
     val runW = Window.partitionBy().orderBy(col("v").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nRisk = lit(total) - col("cum")
-    tc
-      .withColumn("n_risk", nRisk)
+    timeCounts(df, timeCol, eventCol)
       .withColumn("__h", col("d").cast("double") / col("n_risk").cast("double"))
       .withColumn("__v", col("d").cast("double") /
         (col("n_risk").cast("double") * col("n_risk").cast("double")))

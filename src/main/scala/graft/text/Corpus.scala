@@ -18,64 +18,23 @@ object Corpus {
     * chunk ids it lands in — which is what attribution, dedup-audit, and
     * loss-masking downstream need.
     *
-    * Scale: a DISTRIBUTED two-phase cumsum, never a single-partition sort.
-    * Phase 1 range-partitions the doc-metadata rows into contiguous
-    * (`orderCol`, `idCol`) shards and computes the running offset within
-    * each shard (partitioned window). Phase 2 computes each shard's exact
-    * base offset as the exclusive prefix sum of per-shard token totals —
-    * one row per shard, driver-side, bounded by the partition count — and
-    * adds it back as a literal map lookup. The global offsets are exactly
-    * the single-sort values (contiguous shards ⇒ the prefix decomposes),
-    * but every stage is key-partitioned. Range-partitioner sampling is
-    * seeded deterministically, so the totals pass and the window pass see
-    * identical shard assignment.
+    * Scale: a DISTRIBUTED two-phase cumsum, never a single-partition sort:
+    * the offset is the exclusive prefix sum of token counts in
+    * (`orderCol`, `idCol`) order ([[graft.ops.ShardLookup.exclusivePrefix]]).
+    * The `idCol` tie-break makes the order total, so each document is
+    * counted once even when `orderCol` has ties.
     *
-    * EAGER: runs a Spark job at call time (the shard-totals collect) and
-    * pins the range-sharded tokenized rows via localCheckpoint; the
-    * returned frame reads that materialization. Not a pure plan builder. */
+    * EAGER: runs Spark jobs at call time and pins the range-sharded
+    * tokenized rows via localCheckpoint; the returned frame reads that
+    * materialization. Not a pure plan builder. */
   def chunkMap(df: DataFrame, idCol: String, textCol: String,
       budget: Int, orderCol: Option[String] = None): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     val base = df.select(col(idCol), col(orderCol.getOrElse(idCol)).as("__ord"),
         TextOps.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-    // contiguous shards in total (__ord, id) order; idCol tie-break makes
-    // the order total so no peer group straddles a shard boundary ambiguously
-    // Eager localCheckpoint pins the range partitioning: the shard-total
-    // pass below and the returned plan read ONE materialization, so
-    // row-to-shard assignment cannot drift between jobs (the partitioner
-    // re-samples bounds per execution; nondeterministic upstream order
-    // would otherwise corrupt the base offsets), and downstream actions
-    // reuse the tokenized rows instead of recomputing the scan. One row
-    // per document of (id, ord, n_tokens); release via
-    // [[graft.dedup.Dedup.releaseCheckpoints]] in long-lived sessions.
-    // The input pins FIRST: RangePartitioning samples its child in a
-    // separate job before the shuffle, so an unpinned upstream (the
-    // tokenize scan here) would execute twice (the FDR doctrine).
-    val pinned = base.localCheckpoint()
-    val sharded = pinned.repartitionByRange(col("__ord"), col(idCol))
-      .withColumn("__shard", spark_partition_id())
-      .localCheckpoint()
-    // ROWS frame + idCol tie-break: the default RANGE frame sums ALL rows
-    // tied on orderCol into each peer's running offset (overlapping chunks,
-    // silently); a ROWS frame over a total order counts each doc once
-    val w = Window.partitionBy(col("__shard")).orderBy(col("__ord"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // exclusive prefix sum of shard totals: one row per shard on the driver
-    val bases: Map[Int, Long] = {
-      var acc = 0L
-      sharded.groupBy(col("__shard")).agg(sum(col("n_tokens")).as("__tot"))
-        .collect()
-        .map(r => (r.getInt(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-        .sortBy(_._1)
-        .map { case (s, t) => val e = (s, acc); acc += t; e }.toMap
-    }
-    graft.ops.ShardLookup
-      .attachLong(sharded, col("__shard"), bases, "__base", 0L)
-      .withColumn("start_offset",
-        coalesce(col("__base") + sum(col("n_tokens")).over(w) - col("n_tokens"),
-          lit(0L)))
-      .drop("__base")
-      .drop("__ord", "__shard")
+    graft.ops.ShardLookup.exclusivePrefix(base, Seq(col("__ord"), col(idCol)),
+        Seq("n_tokens" -> "start_offset")).df
+      .drop("__ord")
       .withColumn("start_chunk", (col("start_offset") / budget).cast("long"))
       .withColumn("end_chunk",
         (greatest(col("start_offset") + col("n_tokens") - 1, col("start_offset"))

@@ -32,4 +32,21 @@ class SessionsSpec extends SparkSpec {
       .map(p => src.relativize(p).toString).toSeq.sorted
     assert(offenders.isEmpty, s"session built outside Sessions: $offenders")
   }
+
+  test("the benchmark harness builds its session with the Sessions.local confs") {
+    // `.config("key", value)` calls of a source file: key → the string
+    // literal value, or None when the value is computed
+    def configs(rel: String): Map[String, Option[String]] = {
+      val p = Paths.get(sys.props("user.dir"), rel)
+      assert(Files.isRegularFile(p), s"no source at $p")
+      """\.config\("([^"]+)",\s*(?:"([^"]*)"\s*\))?""".r
+        .findAllMatchIn(Files.readString(p)).map(m => m.group(1) -> Option(m.group(2))).toMap
+    }
+    val bench = configs("perfbench/src/perfbench/Main.scala")
+    assert(bench.keySet == configs("src/main/scala/graft/Sessions.scala").keySet)
+    bench.collect { case (k, Some(v)) => k -> v }.foreach { case (k, v) =>
+      val live = spark.conf.getOption(k).orElse(spark.sparkContext.getConf.getOption(k))
+      assert(live.contains(v), s"$k: perfbench sets $v, Sessions.local(4) has $live")
+    }
+  }
 }

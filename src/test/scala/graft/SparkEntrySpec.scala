@@ -32,14 +32,27 @@ class SparkEntrySpec extends SparkSpec {
 
   /** "File.scala:line: text" of every line under `queries/` that `hit`
     * accepts, skipping the files named in `except`. */
-  private def queryLines(hit: String => Boolean, except: Set[String] = Set.empty) = {
-    val dir = Paths.get(sys.props("user.dir"), "src/main/scala/graft/queries")
-    assert(Files.isDirectory(dir), s"no query sources at $dir")
-    Files.list(dir).iterator().asScala.toSeq.sortBy(_.toString)
+  /** `path:line: text` of every line under `under` (recursively) that `hit`
+    * matches, skipping files named in `except`. */
+  private def sourceLines(under: String, hit: String => Boolean,
+      except: Set[String] = Set.empty) = {
+    val dir = Paths.get(sys.props("user.dir"), under)
+    assert(Files.isDirectory(dir), s"no sources at $dir")
+    Files.walk(dir).iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .toSeq.sortBy(_.toString)
       .filterNot(p => except(p.getFileName.toString))
       .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if hit(line) => s"${p.getFileName}:${i + 1}: ${line.trim}"
+        case (line, i) if hit(line) => s"${dir.relativize(p)}:${i + 1}: ${line.trim}"
       })
+  }
+
+  private def queryLines(hit: String => Boolean, except: Set[String] = Set.empty) =
+    sourceLines("src/main/scala/graft/queries", hit, except)
+
+  test("the range-sharded prefix protocol lives only in ops/ShardLookup.scala") {
+    val sites = sourceLines("src/main", _.contains("spark_partition_id"))
+    assert(sites.nonEmpty && sites.forall(_.startsWith("scala/graft/ops/ShardLookup.scala:")),
+      sites.mkString("\n"))
   }
 
   test("query files read the vendored tables only through Tables.load") {

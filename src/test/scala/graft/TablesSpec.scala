@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.graftbridge.Listeners.jobs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -12,29 +12,6 @@ import org.apache.spark.sql.functions._
   * file's schema once per session; a small final sort runs in one
   * partition. */
 class TablesSpec extends SparkSpec {
-
-  /** Spark jobs `body` launches from this thread (tagged by job group, so
-    * jobs of other threads are not counted), and its result. */
-  private def jobs[A](session: SparkSession)(body: => A): (Int, A) = {
-    val tag = s"tables-spec-${java.util.UUID.randomUUID}"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == tag))
-          started.incrementAndGet()
-    }
-    val sc = session.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(tag, tag)
-    try {
-      val a = body
-      org.apache.spark.graftbridge.Listeners.drain(sc)
-      (started.get, a)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def tableDir(): String =
     java.nio.file.Files.createTempDirectory("tables-spec").toString

@@ -1,10 +1,12 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The literal-map and broadcast-join delivery paths of [[ShardLookup]]
-  * must be bit-identical — the threshold is a plan-size knob only. */
+/** [[ShardLookup.exclusivePrefix]] equals a global-window exclusive sum and
+  * returns the column totals; the literal-map and broadcast-join delivery
+  * paths must be bit-identical — the threshold is a plan-size knob only. */
 class ShardLookupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -70,5 +72,35 @@ class ShardLookupSpec extends SparkSpec {
       .select($"id", $"bh_adj").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
     assert(sharded == windowed)
+  }
+
+  test("exclusivePrefix over >= 4 range shards equals a global-window exclusive sum") {
+    // coalescing off, so the small input keeps its range shards
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val r = new scala.util.Random(7)
+    // a has ties (37 values), b breaks them; w has NULLs (they count 0)
+    val rows = r.shuffle((0 until 2000).toList).map { i =>
+      (i % 37, i.toLong, if (i % 11 == 0) None else Some(r.nextInt(100).toLong),
+        r.nextInt(5).toLong) }
+    val df = s2.createDataFrame(rows).toDF("a", "b", "w", "u").repartition(4)
+    val p = ShardLookup.exclusivePrefix(df, Seq(col("a"), col("b")),
+      Seq("w" -> "cw", "u" -> "cu"))
+    assert(p.sharded.select(ShardLookup.ShardCol).distinct().count() >= 4)
+    val gw = Window.orderBy(col("a"), col("b"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    def rowsOf(f: org.apache.spark.sql.DataFrame) =
+      f.select("b", "cw", "cu").collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
+        .sortBy(_._1).toSeq
+    val want = df
+      .withColumn("cw", coalesce(sum(col("w")).over(gw), lit(0L)))
+      .withColumn("cu", coalesce(sum(col("u")).over(gw), lit(0L)))
+    assert(p.df.columns.toSeq == Seq("a", "b", "w", "u", "cw", "cu"))
+    assert(rowsOf(p.df) == rowsOf(want))
+    assert(p.totals == Map("w" -> rows.flatMap(_._3).sum, "u" -> rows.map(_._4).sum))
+    val empty = ShardLookup.exclusivePrefix(df.where(lit(false)), Seq(col("a"), col("b")),
+      Seq("w" -> "cw", "u" -> "cu"))
+    assert(empty.totals == Map("w" -> 0L, "u" -> 0L) && empty.df.isEmpty)
   }
 }

@@ -334,6 +334,24 @@ class SnapshotTableSpec extends SparkSpec {
     assert(out == Set((1, "a", None), (2, "B", Some(1.5))))
   }
 
+  test("zorderBy compaction on a renamed column records its envelope under the physical name") {
+    val root = freshRoot()
+    (1 to 4).foreach { i =>
+      SnapshotTable.write(Seq((i.toLong, i * 10L)).toDF("id", "k").coalesce(1), root,
+        mode = if (i == 1) "overwrite" else "append", statsCols = Seq("id"))
+    }
+    SnapshotTable.renameColumn(root, "k", "key")
+    def bytes = SnapshotTable.readManifest(root, SnapshotTable.latestVersion(root))
+      .files.map(f => Files.size(Paths.get(root, "data", f))).sum
+    SnapshotTable.compact(spark, root, targetBytes = bytes / 3, smallFraction = 1.0,
+      zorderBy = Seq("key", "id"))
+    val m = SnapshotTable.readManifest(root, SnapshotTable.latestVersion(root))
+    assert(m.stats.values.forall(_.contains("k")), m.stats)
+    val (got, (kept, total)) = SnapshotTable.readPruned(spark, root, "key", 20, 20)
+    assert(total >= 2 && kept < total, s"kept $kept of $total files")
+    assert(got.where($"key" === 20L).as[(Long, Long)].collect().toSeq == Seq((2L, 20L)))
+  }
+
   test("file-stats pruning: z-ordered write records envelopes; readPruned skips files") {
     val root = freshRoot()
     val rng = new scala.util.Random(19)

@@ -519,4 +519,28 @@ class SurvivalSpec extends SparkSpec {
       .select("u_run").as[Double].collect()
     assert(math.abs(score.last) < 1e-5)
   }
+
+  test("an all-NULL input gives an empty curve") {
+    val df = Seq.fill(5)((Option.empty[Long], Option.empty[Boolean], Option.empty[Boolean]))
+      .toDF("t", "ev", "g")
+    val curves = Seq(
+      "kaplanMeierDF" -> Survival.kaplanMeierDF(df, "t", col("ev")),
+      "kaplanMeierGreenwoodDF" -> Survival.kaplanMeierGreenwoodDF(df, "t", col("ev")),
+      "rmstDF" -> Survival.rmstDF(df, "t", col("ev"), 10L),
+      "nelsonAalenDF" -> Survival.nelsonAalenDF(df, "t", col("ev")),
+      "logRankDF" -> Survival.logRankDF(df, "t", col("ev"), col("g")),
+      "cumulativeIncidenceDF" -> Survival.cumulativeIncidenceDF(df, "t", col("ev"), col("g")))
+    curves.foreach { case (name, c) => assert(c.collect().isEmpty, name) }
+  }
+
+  test("building a Kaplan-Meier curve runs only the prefix's jobs") {
+    val df = cohort.toDF("t", "ev").repartition(3)
+    val (n, _) = org.apache.spark.graftbridge.Listeners.jobs(spark)(
+      Survival.kaplanMeierDF(df, "t", col("ev")))
+    // first pin (the repartition's and the groupBy's map stages, its
+    // result), the range sampling, the second pin (map stage, result) and
+    // the shard-totals collect (map stage, result); N is a prefix total,
+    // not one more aggregate
+    assert(n == 8, s"$n jobs")
+  }
 }
