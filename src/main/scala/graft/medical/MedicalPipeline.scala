@@ -1,7 +1,8 @@
 package graft.medical
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.ops.{AggSpec, Cleaning, Cohort, Quality, Summarize}
 import graft.stats.{AssociationRules, FDR, Fisher, PermutationTest, Roc}
@@ -14,6 +15,10 @@ import graft.stats.{AssociationRules, FDR, Fisher, PermutationTest, Roc}
   * Column names (Polish diacritics, spaces, parens) are the reference's
   * post-clean names (`data clean/studyGrScalaA.scala:23-46` etc.) —
   * exercising exact-name quoting is part of parity (SURVEY §1.3).
+  *
+  * The two driver-bound stages do one pass per input: [[summaries]] is
+  * three aggregation collects (one per cohort) plus local tables, and
+  * [[statsStage]] is two collects plus driver-side tests.
   */
 object MedicalPipeline {
 
@@ -160,8 +165,10 @@ object MedicalPipeline {
 
   /** The summary-table corpus (SURVEY §2.5 table): every
     * `createTableCategorized` instantiation from `dataSummaries1.scala`,
-    * keyed by the reference's table name. Each is ONE grouping-sets pass
-    * (Summarize) instead of the reference's per-category window+distinct. */
+    * keyed by the reference's table name. Each cohort's tables come from
+    * ONE grouping-sets pass collected once (`Summarize.summarizeAll`):
+    * three collects in all, and 18 local tables of one partition each,
+    * instead of the reference's per-category window+distinct. */
   def summaries(study: DataFrame, control: DataFrame, twoPoint: DataFrame): Map[String, DataFrame] = {
     val s = study
       .withColumn("ageInYearsWhenSurgery",
@@ -169,6 +176,15 @@ object MedicalPipeline {
       .withColumn("monthsFromSurgeryToExam",
         months_between(col("Data badania"), col("Data operacji")))
       .withColumn("Evrybody", lit(1.0))
+      // dataSummaries1.scala:511-519 (chained-when any-finding col)
+      .withColumn("anyCtFinding",
+        when(col("Obszar plynowy w okolicy") === true, 1)
+          .when(col("Naciek zapalny w okolicy") === true, 1)
+          .when(col("PecherzykiGazu") === true, 1)
+          .otherwise(0))
+      // dataSummaries1.scala:145-152 (when/otherwise indicators)
+      .withColumn("isMale", when(col("Płeć") === "Mężczyzna", 1).otherwise(0))
+      .withColumn("isFemale", when(col("Płeć") === "Kobieta", 1).otherwise(0))
     val c = control
       .withColumn("TBR", col("SUV protezy") / col("tło"))
       .withColumn("yearsFromImplantToExam",
@@ -180,136 +196,110 @@ object MedicalPipeline {
       "imageTypeOurClassification" -> "imageTypeOurClassification")
     val scaleCats = Seq("skala5Stopnie" -> "skala5Stopnie",
       "skala3Stopnie" -> "skala3Stopnie")
+    def same(names: String*) = names.map(n => col(n) -> n)
+    def spec(aggs: AggSpec*)(metrics: (Column, String)*)(cats: Seq[(String, String)]) =
+      Summarize.Spec(aggs, metrics, cats)
+    val (median, min, max, sum) = (AggSpec.median, AggSpec.min, AggSpec.max, AggSpec.sum)
 
-    Map(
+    val studyTables = Seq(
       // dataSummaries1.scala:96-107
-      "DatesSummary" -> Summarize.summarize(s,
-        Seq(AggSpec.median, AggSpec.min, AggSpec.max),
-        Seq("ageInYearsWhenSurgery" -> "ageInYearsWhenSurgery",
-          "monthsFromSurgeryToExam" -> "monthsFromSurgeryToExam"),
-        Seq.empty),
+      "DatesSummary" -> spec(median, min, max)(
+        same("ageInYearsWhenSurgery", "monthsFromSurgeryToExam"): _*)(Seq.empty),
       // dataSummaries1.scala:118-128
-      "surgeryCouses" -> Summarize.summarize(s,
-        Seq(AggSpec.sum),
-        Seq("przyczyna - tętniak" -> "przyczyna - tętniak",
-          "przyczyna - niedrożność" -> "przyczyna - niedrożność",
-          "przyczyna - uraz" -> "przyczyna - uraz",
-          "przyczyna - inne" -> "przyczyna - inne"),
-        studyCats3),
+      "surgeryCouses" -> spec(sum)(same("przyczyna - tętniak", "przyczyna - niedrożność",
+        "przyczyna - uraz", "przyczyna - inne"): _*)(studyCats3),
       // dataSummaries1.scala:188-196
-      "OtherRiskFactors" -> Summarize.summarize(s,
-        Seq(AggSpec.countTrues),
-        Seq("cukrzyca" -> "cukrzyca", "Gorączka" -> "Gorączka",
-          "tętniak" -> "tętniak", "Otyłość" -> "Otyłość", "zgon" -> "zgon"),
-        studyCats3),
+      "OtherRiskFactors" -> spec(AggSpec.countTrues)(
+        same("cukrzyca", "Gorączka", "tętniak", "Otyłość", "zgon"): _*)(studyCats3),
       // dataSummaries1.scala:207-214
-      "LabolatoryInflammation" -> Summarize.summarize(s,
-        Seq(AggSpec.median, AggSpec.min, AggSpec.max),
-        Seq("CRP(6 mcy)" -> "CRP", "WBC(6 mcy)" -> "WBC"),
-        studyCats3),
+      "LabolatoryInflammation" -> spec(median, min, max)(
+        col("CRP(6 mcy)") -> "CRP", col("WBC(6 mcy)") -> "WBC")(studyCats3),
       // dataSummaries1.scala:224-236
-      "MicrobiologicDataStudyGroup" -> Summarize.summarize(s,
-        Seq(AggSpec.sum),
-        Seq("proteza dodatni" -> "proteza dodatni", "krew +" -> "krew +"),
-        Seq.empty),
+      "MicrobiologicDataStudyGroup" -> spec(sum)(same("proteza dodatni", "krew +"): _*)(Seq.empty),
       // dataSummaries1.scala:329-342
-      "StudyGroupLoc" -> Summarize.summarize(s,
-        Seq(AggSpec.sum),
-        Seq("lok - aorta brzuszna" -> "lok - aorta brzuszna",
-          "okolica rozwidlenia" -> "okolica rozwidlenia",
-          "lewe ramie" -> "lewe ramie", "prawe ramie" -> "prawe ramie"),
-        studyCats3),
+      "StudyGroupLoc" -> spec(sum)(same("lok - aorta brzuszna", "okolica rozwidlenia",
+        "lewe ramie", "prawe ramie"): _*)(studyCats3),
       // dataSummaries1.scala:360-369
-      "StudyGroupSuv" -> Summarize.summarize(s,
-        Seq(AggSpec.sum, AggSpec.median, AggSpec.min, AggSpec.max),
-        Seq("SUV (max) w miejscu zapalenia" -> "SuvInFocus",
-          "SUV (max) tła" -> "SuvBackground",
-          "tumor to background ratio" -> "TBR",
-          "Evrybody" -> "AllPatients"),
-        scaleCats),
+      "StudyGroupSuv" -> spec(sum, median, min, max)(
+        col("SUV (max) w miejscu zapalenia") -> "SuvInFocus",
+        col("SUV (max) tła") -> "SuvBackground",
+        col("tumor to background ratio") -> "TBR",
+        col("Evrybody") -> "AllPatients")(scaleCats),
       // dataSummaries1.scala:380-400 (bool→int advancedCasting :382-383)
-      "StudyGroupImageCharacteristic" -> Summarize.summarize(
-        Cleaning.advancedCasting(s,
-          Seq("Ogniskowe gromadzenie znacznika", "Nieregularne zarysy",
-            "PecherzykiGazu"), "int"),
-        Seq(AggSpec.sum),
-        Seq("Ogniskowe gromadzenie znacznika" -> "FocalAccumulation",
-          "Nieregularne zarysy" -> "IrregularBorders",
-          "PecherzykiGazu" -> "GasBubbles"),
-        studyCats3),
+      "StudyGroupImageCharacteristic" -> spec(sum)(
+        col("Ogniskowe gromadzenie znacznika").cast("int") -> "FocalAccumulation",
+        col("Nieregularne zarysy").cast("int") -> "IrregularBorders",
+        col("PecherzykiGazu").cast("int") -> "GasBubbles")(studyCats3),
       // dataSummaries1.scala:411-420
-      "SuvVsVisualScales" -> Summarize.summarize(s,
-        Seq(AggSpec.sum, AggSpec.median),
-        Seq("SUV (max) w miejscu zapalenia" -> "SuvInFocus",
-          "SUV (max) tła" -> "SuvBackground",
-          "tumor to background ratio" -> "TBR",
-          "Evrybody" -> "Evrybody"),
-        scaleCats),
-      // dataSummaries1.scala:507-537 (chained-when any-finding col :511-519)
-      "CtDoneBefore" -> Summarize.summarize(
-        s.withColumn("anyCtFinding",
-          when(col("Obszar plynowy w okolicy") === true, 1)
-            .when(col("Naciek zapalny w okolicy") === true, 1)
-            .when(col("PecherzykiGazu") === true, 1)
-            .otherwise(0)),
-        Seq(AggSpec.sum),
-        Seq("anyCtFinding" -> "anyCtFinding"),
-        Seq.empty),
-      // dataSummaries1.scala:246-260
-      "BasicDataTwoPointStudy" -> Summarize.summarize(
-        twoPoint.withColumn("isEarlierExamHighSuv",
-          when(col("SUV (max) w miejscu zapalenia44") > 4, 1).otherwise(0)),
-        Seq(AggSpec.count),
-        Seq("isEarlierExamHighSuv" -> "isEarlierExamHighSuv"),
-        Seq.empty),
+      "SuvVsVisualScales" -> spec(sum, median)(
+        col("SUV (max) w miejscu zapalenia") -> "SuvInFocus",
+        col("SUV (max) tła") -> "SuvBackground",
+        col("tumor to background ratio") -> "TBR",
+        col("Evrybody") -> "Evrybody")(scaleCats),
+      // dataSummaries1.scala:507-537
+      "CtDoneBefore" -> spec(sum)(same("anyCtFinding"): _*)(Seq.empty),
+      // dataSummaries1.scala:144-171
+      "MaterialEtcPerGender" -> spec(AggSpec.count)(same("isMale", "isFemale"): _*)(
+        Seq("Material" -> "Material") ++ studyCats3))
+    val controlTables = Seq(
       // dataSummaries1.scala:270-284
-      "BasicInControlGroup" -> Summarize.summarize(
-        Cleaning.advancedCasting(c,
-          Seq("cukrzyca", "zarejestrowany zgon", "reoperacje"), "int"),
-        Seq(AggSpec.sum),
-        Seq("cukrzyca" -> "cukrzyca", "zarejestrowany zgon" -> "zgon",
-          "reoperacje" -> "reoperacje"),
+      "BasicInControlGroup" -> spec(sum)(
+        col("cukrzyca").cast("int") -> "cukrzyca",
+        col("zarejestrowany zgon").cast("int") -> "zgon",
+        col("reoperacje").cast("int") -> "reoperacje")(
         Seq("stentgraft czy proteza" -> "prosthesisType", "typ" -> "typ")),
       // dataSummaries1.scala:289-303 (datediff-derived interval :295)
-      "ControlGroupDates" -> Summarize.summarize(c,
-        Seq(AggSpec.median, AggSpec.min, AggSpec.max),
-        Seq("yearsFromImplantToExam" -> "yearsFromImplantToExam"),
+      "ControlGroupDates" -> spec(median, min, max)(same("yearsFromImplantToExam"): _*)(
         Seq("stentgraft czy proteza" -> "prosthesisType", "typ" -> "typ")),
-      // dataSummaries1.scala:434-445
-      "SuvTwoPointStudy" -> Summarize.summarize(twoPoint,
-        Seq(AggSpec.median, AggSpec.min, AggSpec.max),
-        Seq("SUV (max) w miejscu zapalenia44" -> "SuvFocusEarlier",
-          "SUV (max) tła45" -> "SuvBackgroundEarlier",
-          "SUV (max) w miejscu zapalenia71" -> "SuvFocusLater",
-          "SUV (max) tła72" -> "SuvBackgroundLater"),
-        Seq.empty),
       // dataSummaries1.scala:458-469 (derived TBR :461)
-      "SuvVsVisualScalesControlGroup" -> Summarize.summarize(c,
-        Seq(AggSpec.sum, AggSpec.median),
-        Seq("SUV protezy" -> "SuvInFocus", "TBR" -> "TBR"),
-        scaleCats),
-      // dataSummaries1.scala:144-171 (when/otherwise indicators :145-152)
-      "MaterialEtcPerGender" -> Summarize.summarize(
-        s.withColumn("isMale", when(col("Płeć") === "Mężczyzna", 1).otherwise(0))
-          .withColumn("isFemale", when(col("Płeć") === "Kobieta", 1).otherwise(0)),
-        Seq(AggSpec.count),
-        Seq("isMale" -> "isMale", "isFemale" -> "isFemale"),
-        Seq("Material" -> "Material") ++ studyCats3),
-      // dataSummaries1.scala:478-491 — cross-joined cohorts, duplication-
-      // invariant aggs only; engine rewrite: per-side agg then crossJoin (§4)
-      "SuvStudyVsCrontrol" -> Cohort.crossCohortAgg(
-        s, Seq((AggSpec.median, "SUV (max) w miejscu zapalenia", "studySuvMedian"),
-          (AggSpec.min, "SUV (max) w miejscu zapalenia", "studySuvMin"),
-          (AggSpec.max, "SUV (max) w miejscu zapalenia", "studySuvMax")),
-        c, Seq((AggSpec.median, "SUV protezy", "controlSuvMedian"),
-          (AggSpec.min, "SUV protezy", "controlSuvMin"),
-          (AggSpec.max, "SUV protezy", "controlSuvMax"))),
-      // dataSummaries1.scala:547-558
-      "TechnicalDataInStudyAndControlGroup" -> Cohort.crossCohortAgg(
-        s, Seq((AggSpec.median, "Podana Aktywnosc", "studyActivityMedian"),
-          (AggSpec.median, "Glikemia", "studyGlucoseMedian")),
-        c, Seq((AggSpec.median, "aktywnosc w dniu podania [MBq]", "controlActivityMedian"),
-          (AggSpec.median, "glukoza w dniu podania [mg/dl]", "controlGlucoseMedian"))))
+      "SuvVsVisualScalesControlGroup" -> spec(sum, median)(
+        col("SUV protezy") -> "SuvInFocus", col("TBR") -> "TBR")(scaleCats))
+    val twoPointTables = Seq(
+      // dataSummaries1.scala:246-260
+      "BasicDataTwoPointStudy" -> spec(AggSpec.count)(
+        when(col("SUV (max) w miejscu zapalenia44") > 4, 1).otherwise(0) ->
+          "isEarlierExamHighSuv")(Seq.empty),
+      // dataSummaries1.scala:434-445
+      "SuvTwoPointStudy" -> spec(median, min, max)(
+        col("SUV (max) w miejscu zapalenia44") -> "SuvFocusEarlier",
+        col("SUV (max) tła45") -> "SuvBackgroundEarlier",
+        col("SUV (max) w miejscu zapalenia71") -> "SuvFocusLater",
+        col("SUV (max) tła72") -> "SuvBackgroundLater")(Seq.empty))
+
+    // dataSummaries1.scala:478-491 and :547-558 cross-join the two cohorts
+    // to aggregate columns of both; every aggregate there is a median, min
+    // or max (duplication-invariant), so each side's All-row total is the
+    // cross join's value (Cohort.crossCohortAgg's rewrite, §4)
+    val crossCohort = Seq(
+      "SuvStudyVsCrontrol" -> (
+        Seq((median, "SUV (max) w miejscu zapalenia", "studySuvMedian"),
+          (min, "SUV (max) w miejscu zapalenia", "studySuvMin"),
+          (max, "SUV (max) w miejscu zapalenia", "studySuvMax")),
+        Seq((median, "SUV protezy", "controlSuvMedian"),
+          (min, "SUV protezy", "controlSuvMin"),
+          (max, "SUV protezy", "controlSuvMax"))),
+      "TechnicalDataInStudyAndControlGroup" -> (
+        Seq((median, "Podana Aktywnosc", "studyActivityMedian"),
+          (median, "Glikemia", "studyGlucoseMedian")),
+        Seq((median, "aktywnosc w dniu podania [MBq]", "controlActivityMedian"),
+          (median, "glukoza w dniu podania [mg/dl]", "controlGlucoseMedian"))))
+    val studyTotals = crossCohort.flatMap(_._2._1).map { case (a, in, out) => (a, col(in), out) }
+    val controlTotals = crossCohort.flatMap(_._2._2).map { case (a, in, out) => (a, col(in), out) }
+
+    val studyAll = Summarize.summarizeAll(s, studyTables.map(_._2), studyTotals)
+    val controlAll = Summarize.summarizeAll(c, controlTables.map(_._2), controlTotals)
+    val twoPointAll = Summarize.summarizeAll(twoPoint, twoPointTables.map(_._2))
+    val cross = crossCohort.map { case (name, (left, right)) =>
+      val names = (left ++ right).map(_._3)
+      val values = left.map(t => studyAll.all.getAs[Any](t._3)) ++
+        right.map(t => controlAll.all.getAs[Any](t._3))
+      name -> study.sparkSession.createDataFrame(
+        java.util.List.of(Row.fromSeq(values)),
+        StructType(names.map(StructField(_, DoubleType))))
+    }
+    (studyTables.map(_._1).zip(studyAll.tables) ++
+      controlTables.map(_._1).zip(controlAll.tables) ++
+      twoPointTables.map(_._1).zip(twoPointAll.tables) ++ cross).toMap
   }
 
   // --------------------------------------------------------- cohort prep
@@ -370,7 +360,10 @@ object MedicalPipeline {
   /** The hypothesis-testing stage (`Hypothesis testing R.r:439-478,543-574`):
     * permutation tests of every imaging bool vs SuvInFocus and TBR, SABHA
     * selection over the pooled p-values, Fisher tests on cohort contrasts,
-    * ROC thresholds for SUV/TBR. */
+    * ROC thresholds for SUV/TBR. Two collects in all — `imaging`'s tested
+    * columns and `numbs`' — then driver-side math over those rows, equal to
+    * the per-column protocol (`PermutationTest.onColumns`, `Fisher.test`,
+    * one collect per ROC vector) bit for bit. */
   final case class StatsResults(
       imagingPValues: Seq[(String, Double, Double)], // (characteristic, pSuv, pTbr)
       sabhaSignificant: Seq[String],
@@ -386,37 +379,46 @@ object MedicalPipeline {
     // R :438-445: all bool cols except the excluded set
     val excluded = Set("SuvInFocus", "TBR", "Fluid", "IrregularBorders",
       "FocalAccumulation")
-    val boolCols = imaging.columns.filterNot(excluded)
-    val pvals = boolCols.map { c =>
+    val boolCols = imaging.columns.filterNot(excluded).toSeq
+    // one collect per input; every test below reads the collected rows in
+    // their collect order, the order each per-column collect would give
+    val img = imaging.select(boolCols.map(col(_).cast("boolean")) ++
+      Seq(col("SuvInFocus").cast("double"), col("TBR").cast("double")): _*).collect()
+    val (suv, tbr) = (boolCols.size, boolCols.size + 1)
+    val pvals = boolCols.zipWithIndex.map { case (c, i) =>
       (c,
-        PermutationTest.onColumns(imaging, c, "SuvInFocus", nPerm, seed),
-        PermutationTest.onColumns(imaging, c, "TBR", nPerm, seed))
-    }.toSeq
+        PermutationTest.onRows(img, i, suv, nPerm, seed),
+        PermutationTest.onRows(img, i, tbr, nPerm, seed))
+    }
     // R :472-478: labels duplicated (cols for Suv, cols for TBR), pooled ps
     val labels = (pvals.map(_._1) ++ pvals.map(_._1)).toArray
     val pooled = (pvals.map(_._2) ++ pvals.map(_._3)).toArray
     val sabhaSig = FDR.sabhaSelect(pooled, labels).distinct
 
+    val (isStudy, age, stent, cls, suvN, tbrN) = (0, 1, 2, 3, 4, 5)
+    val nb = numbs.select(col("isStudy").cast("boolean"),
+      col("ageInYearsWhenSurgery").cast("double"),
+      col("prosthesisType") === "stentgraft", col("simplifiedClassification"),
+      col("SuvInFocus").cast("double"), col("TBR").cast("double")).collect()
+    def known(r: Row, i: Int*) = i.forall(!r.isNullAt(_))
     // R :543-556
-    val ageP = PermutationTest.onColumns(numbs, "isStudy", "ageInYearsWhenSurgery", nPerm, seed)
-    val prosthesisP = Fisher.test(
-      numbs.select((col("prosthesisType") === "stentgraft").as("x"),
-        col("isStudy").cast("boolean").as("y")), "x", "y")._5
-    val locFrame = numbs.where(col("simplifiedClassification") === "Y" ||
-      col("simplifiedClassification") === "B")
-    val locP = Fisher.test(
-      locFrame.select((col("simplifiedClassification") === "Y").as("x"),
-        col("isStudy").cast("boolean").as("y")), "x", "y")._5
+    val ageP = PermutationTest.onRows(nb, isStudy, age, nPerm, seed)
+    val prosthesisP = Fisher.testPairs(nb.collect {
+      case r if known(r, stent, isStudy) => (r.getBoolean(stent), r.getBoolean(isStudy))
+    })._5
+    val locP = Fisher.testPairs(nb.collect {
+      case r if known(r, cls, isStudy) && Set("Y", "B")(r.getString(cls)) =>
+        (r.getString(cls) == "Y", r.getBoolean(isStudy))
+    })._5
     val svc = FDR.sabhaSelect(Array(ageP, prosthesisP, locP),
       Array("ageTest", "prosthesisTypeTest", "locTest"))
 
     // R :566-574 (reference passes (study, control) positionally)
-    import numbs.sparkSession.implicits._
-    def vec(colName: String, study: Boolean): Array[Double] = numbs
-      .where(col("isStudy") === (if (study) 1 else 0) && col(colName).isNotNull)
-      .select(col(colName).cast("double")).as[Double].collect()
-    val thresholdSuv = Roc.thres2Equal(vec("SuvInFocus", true), vec("SuvInFocus", false), 0.01)
-    val thresholdTbr = Roc.thres2Equal(vec("TBR", true), vec("TBR", false), 0.01)
+    def vec(i: Int, study: Boolean): Array[Double] = nb.collect {
+      case r if known(r, isStudy, i) && r.getBoolean(isStudy) == study => r.getDouble(i)
+    }
+    val thresholdSuv = Roc.thres2Equal(vec(suvN, true), vec(suvN, false), 0.01)
+    val thresholdTbr = Roc.thres2Equal(vec(tbrN, true), vec(tbrN, false), 0.01)
 
     StatsResults(pvals, sabhaSig, ageP, prosthesisP, locP, svc,
       thresholdSuv, thresholdTbr)

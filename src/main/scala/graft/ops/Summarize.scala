@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions.{array, col, explode, grouping, lit, struct, when}
 
 /** Named aggregation functions for the summary engine (SURVEY §2.5 A1-A6).
@@ -48,60 +51,123 @@ object AggSpec {
   * shuffle over the input computes every aggregation × metric at once (partial
   * aggregation map-side, so the shuffle carries only group states, not rows),
   * and the aggregation-name dimension is unpivoted afterwards on the tiny
-  * aggregated result. `cube`/`rollup` would be wrong — the reference never
-  * produces cross-category combinations, only single-category sets.
+  * aggregated result. [[summarizeAll]] goes one step further for a cohort
+  * with many tables: one pass and one collect for all of them, each table
+  * then the same unpivot over its own local rows.
   */
 object Summarize {
 
-  /** @param metrics (inputColumn, outputName) pairs
+  /** One summary table: every aggregation × metric cell over `{All} ++ cats`.
+    *
+    * @param metrics (cell input, outputName) pairs; the input is any column
+    *                expression over the frame (a cast, a derived flag)
     * @param cats    (categoryColumn, divisionLabel) pairs; the label is what
     *                the reference passes as the human-readable division name
+    */
+  final case class Spec(aggs: Seq[AggSpec], metrics: Seq[(Column, String)],
+      cats: Seq[(String, String)] = Seq.empty) {
+    require(aggs.nonEmpty && metrics.nonEmpty, "need at least one aggregation and metric")
+  }
+
+  /** The tables of [[summarizeAll]] in spec order, and the aggregate's All
+    * row, which carries the `totals` cells under their own names. */
+  final case class Summaries(tables: Seq[DataFrame], all: Row)
+
+  /** One table as a lazy plan.
+    *
+    * @param metrics (inputColumn, outputName) pairs
     */
   def summarize(
       df: DataFrame,
       aggs: Seq[AggSpec],
       metrics: Seq[(String, String)],
       cats: Seq[(String, String)]): DataFrame = {
-    require(aggs.nonEmpty && metrics.nonEmpty, "need at least one aggregation and metric")
+    val spec = Spec(aggs, metrics.map { case (m, out) => col(m) -> out }, cats)
+    unpivot(aggregate(df, cats.map(_._1), cells(spec, "")), spec, "")
+  }
 
-    val catCols = cats.map { case (c, _) => col(c) }
+  /** Several tables of ONE cohort from ONE aggregation: a single
+    * `GROUPING SETS` pass over the union of the specs' category sets
+    * computes every spec's cells, plus the `totals` cells (aggregation,
+    * input, name), and is collected once. It has at most Σ category
+    * cardinalities + 1 rows. Each table is then [[summarize]]'s unpivot over
+    * the local rows of its own grouping sets, in one partition. A cell of a
+    * category group depends only on that group's rows, so every table
+    * holds what its own [[summarize]] gives. */
+  def summarizeAll(df: DataFrame, specs: Seq[Spec],
+      totals: Seq[(AggSpec, Column, String)] = Seq.empty): Summaries = {
+    val catNames = specs.flatMap(_.cats.map(_._1)).distinct
+    val cellCols = specs.zipWithIndex.flatMap { case (s, i) => cells(s, s"t${i}__") } ++
+      totals.map { case (a, c, out) => a.fn(c).cast("double").as(out) }
+    val grouped = aggregate(df, catNames, cellCols)
+    val rows = grouped.collect().toSeq
+    def outside(r: Row, c: String) = r.getAs[Number](flag(c)).intValue == 1
+    // an empty input yields no grouping-sets row, but a table without
+    // categories (and the totals) still gets the global aggregate's one
+    // All row, as `summarize` gives it
+    val all = rows.find(r => catNames.forall(outside(r, _))).getOrElse {
+      val cellsOfEmpty = aggregate(df.limit(0), Seq.empty, cellCols).head()
+      new GenericRowWithSchema(grouped.columns.map { n =>
+        if (catNames.contains(n)) null
+        else if (catNames.exists(flag(_) == n)) 1.toByte
+        else cellsOfEmpty.getAs[Any](n)
+      }, grouped.schema)
+    }
+    val spark = df.sparkSession
+    val tables = specs.zipWithIndex.map { case (s, i) =>
+      val own = s.cats.map(_._1)
+      val mine = if (own.isEmpty) Seq(all)
+        else rows.filter(r => catNames.filterNot(own.contains).forall(outside(r, _)))
+      unpivot(spark.createDataFrame(mine.asJava, grouped.schema), s, s"t${i}__").coalesce(1)
+    }
+    Summaries(tables, all)
+  }
+
+  private def flag(c: String) = s"__grouping__$c"
+
+  /** Every (agg, metric) cell of `spec`, cast to double so the unpivot
+    * unions type-uniform columns (count:Long vs sum:Double etc.). */
+  private def cells(spec: Spec, prefix: String): Seq[Column] =
+    for { a <- spec.aggs; (m, out) <- spec.metrics }
+      yield a.fn(m).cast("double").as(s"$prefix${a.name}__$out")
+
+  /** `GROUPING SETS ((), (cat1), (cat2), …)` with a grouping() flag per
+    * category, which tells "category value is NULL" from "column not in
+    * this grouping set". `cube`/`rollup` would be wrong — the reference
+    * never produces cross-category combinations, only single-category
+    * sets. */
+  private def aggregate(df: DataFrame, catNames: Seq[String], cells: Seq[Column]): DataFrame = {
+    val exprs = cells ++ catNames.map(c => grouping(col(c)).as(flag(c)))
     // the empty set = the reference's global "All" branch (utils.scala:211-218)
-    val sets: Seq[Seq[Column]] = Seq.empty[Column] +: cats.map { case (c, _) => Seq(col(c)) }
+    if (catNames.isEmpty) df.agg(exprs.head, exprs.tail: _*)
+    else df.groupingSets(Seq.empty[Column] +: catNames.map(c => Seq(col(c))),
+      catNames.map(col): _*).agg(exprs.head, exprs.tail: _*)
+  }
 
-    // every (agg, metric) cell in one pass; cast to double so the later
-    // unpivot unions type-uniform columns (count:Long vs sum:Double etc.)
-    val cells = for { a <- aggs; (m, out) <- metrics }
-      yield a.fn(col(m)).cast("double").as(s"${a.name}__$out")
-    // grouping() flags disambiguate "category value is NULL" from "column not
-    // in this grouping set"
-    val flags = cats.map { case (c, _) => grouping(col(c)).as(s"__grouping__$c") }
-    val aggExprs = cells ++ flags
-
-    val grouped =
-      if (cats.isEmpty) df.agg(aggExprs.head, aggExprs.tail: _*)
-      else df.groupingSets(sets, catCols: _*).agg(aggExprs.head, aggExprs.tail: _*)
-
+  /** `Division, DivisionCategory, aggregation, <metrics>` over an aggregate
+    * carrying `spec`'s cells under `prefix` and its categories' flags. */
+  private def unpivot(grouped: DataFrame, spec: Spec, prefix: String): DataFrame = {
     val division =
-      cats.foldRight(lit("All")) { case ((c, label), rest) =>
-        when(col(s"__grouping__$c") === 0, lit(label)).otherwise(rest)
+      spec.cats.foldRight(lit("All")) { case ((c, label), rest) =>
+        when(col(flag(c)) === 0, lit(label)).otherwise(rest)
       }.as("Division")
     val divisionCategory =
-      cats.foldRight(lit("All")) { case ((c, _), rest) =>
-        when(col(s"__grouping__$c") === 0, col(c).cast("string")).otherwise(rest)
+      spec.cats.foldRight(lit("All")) { case ((c, _), rest) =>
+        when(col(flag(c)) === 0, col(c).cast("string")).otherwise(rest)
       }.as("DivisionCategory")
 
     // unpivot aggregation names via explode — ONE projection over the
     // aggregated frame (a union of per-agg projections would re-execute the
     // grouping-sets subplan once per aggregation unless exchange reuse
     // happens to kick in)
-    val structs = aggs.map { a =>
+    val structs = spec.aggs.map { a =>
       struct(lit(a.name).as("aggregation") +:
-        metrics.map { case (_, out) => col(s"${a.name}__$out").as(out) }: _*)
+        spec.metrics.map { case (_, out) => col(s"$prefix${a.name}__$out").as(out) }: _*)
     }
     grouped
       .select(division, divisionCategory, explode(array(structs: _*)).as("__r"))
       .select(col("Division") +: col("DivisionCategory") +:
         col("__r.aggregation").as("aggregation") +:
-        metrics.map { case (_, out) => col(s"__r.$out").as(out) }: _*)
+        spec.metrics.map { case (_, out) => col(s"__r.$out").as(out) }: _*)
   }
 }

@@ -9,33 +9,28 @@ import org.apache.spark.sql.functions._
   * time_stamp) row to `myPhdStatisticsMetaData` by reading the metadata
   * table, unioning, and overwriting it *in the same plan* — safe only on
   * Delta snapshots, a corruption hazard on plain parquet
-  * (SURVEY §7.4 "metadata self-overwrite"). The engine materializes the
-  * previous snapshot (collect — the metadata table is rows-per-table tiny)
-  * before the overwrite: same observable behavior, safe mechanism.
+  * (SURVEY §7.4 "metadata self-overwrite"). The engine appends the one new
+  * row instead: the same rows as the reference's, in one write job, and
+  * nothing to lose when several stages register at once.
   */
 class Catalog(spark: SparkSession, metaTable: String = "myPhdStatisticsMetaData") {
   import spark.implicits._
-  import scala.jdk.CollectionConverters._
 
   /** S5 — save `frame` as `tableName` (overwrite, mergeSchema) and register
-    * the metadata row. */
+    * the metadata row. A re-registration adds a second row, as repeated
+    * runs in the reference accumulate (it never dedups). */
   def createTableWithMeta(tableName: String, description: String, frame: DataFrame): Unit = {
     frame.write.mode(SaveMode.Overwrite)
       .option("mergeSchema", "true")
       .saveAsTable(tableName)
     val newRow = Seq((tableName, description)).toDF("tableName", "tableDescription")
       .withColumn("time_stamp", current_timestamp())
-    val prior =
-      if (spark.catalog.tableExists(metaTable))
-        // materialize before overwriting the same table (driver-side; tiny)
-        Some(spark.createDataFrame(
-          spark.table(metaTable).collect().toSeq.asJava,
-          spark.table(metaTable).schema))
-      else None
-    val all = prior.map(_.unionByName(newRow)).getOrElse(newRow)
-      // latest registration wins per table name, like repeated runs in the
-      // reference accumulate (it never dedups; we keep every row for parity)
-    all.write.mode(SaveMode.Overwrite).saveAsTable(metaTable)
+    // appends to one table share its `_temporary` directory, which the
+    // first job to commit deletes, and the first append also creates the
+    // table — so they run one at a time
+    Catalog.metaWrites.synchronized {
+      newRow.write.mode(SaveMode.Append).saveAsTable(metaTable)
+    }
   }
 
   /** S4 — read a registered table. */
@@ -43,4 +38,8 @@ class Catalog(spark: SparkSession, metaTable: String = "myPhdStatisticsMetaData"
 
   /** The metadata frame itself. */
   def metadata: DataFrame = spark.table(metaTable)
+}
+
+object Catalog {
+  private val metaWrites = new Object
 }

@@ -53,14 +53,9 @@ object Fisher {
       .where(col("x").isNotNull && col("y").isNotNull && col("g").isNotNull)
       .groupBy(col("g"), col("x"), col("y")).count()
       .collect()
-      .map(r => (r.getString(0), r.getBoolean(1), r.getBoolean(2)) -> r.getLong(3))
-      .toMap
-    counts.keys.map(_._1).toSeq.distinct.sorted.map { g =>
-      val a = counts.getOrElse((g, true, true), 0L)
-      val b = counts.getOrElse((g, true, false), 0L)
-      val c = counts.getOrElse((g, false, true), 0L)
-      val d = counts.getOrElse((g, false, false), 0L)
-      g -> ((a, b, c, d, exact2x2(a, b, c, d)))
+      .map(r => r.getString(0) -> ((r.getBoolean(1), r.getBoolean(2)) -> r.getLong(3)))
+    counts.groupMap(_._1)(_._2).toSeq.sortBy(_._1).map { case (g, cells) =>
+      g -> fromCounts(cells.toMap)
     }
   }
 
@@ -74,6 +69,14 @@ object Fisher {
       .groupBy(col("x"), col("y")).count()
       .collect()
       .map(r => (r.getBoolean(0), r.getBoolean(1)) -> r.getLong(2)).toMap
+    fromCounts(counts)
+  }
+
+  /** [[test]] over (x, y) pairs already on the driver. */
+  def testPairs(xy: Iterable[(Boolean, Boolean)]): (Long, Long, Long, Long, Double) =
+    fromCounts(xy.groupMapReduce(identity)(_ => 1L)(_ + _))
+
+  private def fromCounts(counts: Map[(Boolean, Boolean), Long]): (Long, Long, Long, Long, Double) = {
     val a = counts.getOrElse((true, true), 0L)
     val b = counts.getOrElse((true, false), 0L)
     val c = counts.getOrElse((false, true), 0L)

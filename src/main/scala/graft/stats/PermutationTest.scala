@@ -70,10 +70,21 @@ object PermutationTest {
     val rows = df.select(col(boolCol).cast("boolean"), col(numCol).cast("double"))
       .where(col(boolCol).isNotNull && col(numCol).isNotNull)
       .collect()
-    val (t, f) = rows.partition(_.getBoolean(0))
-    val trues = t.map(_.getDouble(1)); val falses = f.map(_.getDouble(1))
+    onRows(rows, 0, 1, nPerm, seed)
+  }
+
+  /** The column protocol over collected rows: drop rows with NULL at
+    * `boolIdx` (boolean) or `numIdx` (double), split the values by the flag
+    * in row order, and test them — or the sentinel when the false-group has
+    * ≤ 1 element. Several tests over one collect give what each one's
+    * [[onColumns]] gives, as long as the collect keeps the row order. */
+  def onRows(rows: Array[Row], boolIdx: Int, numIdx: Int,
+      nPerm: Int = 9999, seed: Long = 42L): Double = {
+    val (t, f) = rows.filter(r => !r.isNullAt(boolIdx) && !r.isNullAt(numIdx))
+      .partition(_.getBoolean(boolIdx))
+    val falses = f.map(_.getDouble(numIdx))
     if (falses.length <= 1) DegenerateSentinel
-    else twoSided(trues, falses, nPerm, seed)
+    else twoSided(t.map(_.getDouble(numIdx)), falses, nPerm, seed)
   }
 
   /** Distributed Monte-Carlo resampling: permutations fan out over the

@@ -147,7 +147,10 @@ object RankTests {
       .agg(sum(col("c")).as("n_g"),
         sum(col("c") * (lit(2L) * col("cum") + col("t") + lit(1L))).as("r2sum"))
     val nTot = pref.totals("t")
-    val tieTerm = pref.df.agg(sum(col("t") * col("t") * col("t") - col("t"))).head().getLong(0)
+    // 0 on an input with no usable rows (the sum over no values is NULL),
+    // whose result is then the empty group frame
+    val tieTerm = pref.df.agg(coalesce(sum(col("t") * col("t") * col("t") - col("t")), lit(0L)))
+      .head().getLong(0)
     val nD = lit(nTot.toDouble)
     // Σ R_g²/n_g with R_g = r2sum/2, accumulated left-to-right in grp order
     val runW = Window.partitionBy().orderBy(col("grp").asc)
@@ -277,9 +280,10 @@ object RankTests {
       .withColumn("__r2", lit(2L) * count(lit(1)).over(below) +
         count(lit(1)).over(eq) + lit(1L))
     // per-block tie term: Σ(t³−t) over tied values, summed over blocks —
-    // value-cell counts then one global integer aggregate
+    // value-cell counts then one global integer aggregate (0 when no row
+    // is usable; the result is then the empty treatment frame)
     val tieTerm = base.groupBy(col("blk"), col("v")).agg(count(lit(1)).as("t"))
-      .agg(sum(col("t") * col("t") * col("t") - col("t"))).head().getLong(0)
+      .agg(coalesce(sum(col("t") * col("t") * col("t") - col("t")), lit(0L))).head().getLong(0)
     // k-row frame, pinned: its count() and the output select must not
     // re-run the rank windows
     val perTrt = ranked.groupBy(col("trt"))

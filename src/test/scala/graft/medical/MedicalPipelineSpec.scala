@@ -14,6 +14,16 @@ class MedicalPipelineSpec extends SparkSpec {
   private lazy val study = MedicalPipeline.cleanStudy(MedicalFixtures.studyRaw(spark))
   private lazy val control = MedicalPipeline.cleanControl(MedicalFixtures.controlRaw(spark))
   private lazy val twoPoint = MedicalPipeline.cleanTwoPoint(MedicalFixtures.twoPointRaw(spark))
+  /** The cleaned cohorts read back from Parquet, as the DAG's later stages
+    * read them (a plan over local rows can run without any job). */
+  private lazy val (studyLake, controlLake, twoPointLake) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-med-lake").toString
+    def lake(df: DataFrame, name: String) = {
+      df.write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    (lake(study, "study"), lake(control, "control"), lake(twoPoint, "twoPoint"))
+  }
 
   test("cleaning: types repaired, not-null filters applied") {
     assert(study.count() == 29) // one null-Płeć row dropped
@@ -91,6 +101,50 @@ class MedicalPipelineSpec extends SparkSpec {
     assert(res.prosthesisTypeP > 0 && res.prosthesisTypeP <= 1)
     assert(res.locationP > 0 && res.locationP <= 1)
     assert(!res.thresholdSuv.isNaN && !res.thresholdTbr.isNaN)
+  }
+
+  test("stats stage over two collects equals the per-column protocol bit for bit") {
+    import graft.stats.{FDR, Fisher, PermutationTest, Roc}
+    val imaging = MedicalPipeline.imagingFrame(studyLake)
+    val numbs = MedicalPipeline.cohortNumbsFrame(studyLake, controlLake)
+    val (nPerm, seed) = (199, 7L)
+    val (jobs, got) = org.apache.spark.graftbridge.Listeners.jobs(spark)(
+      MedicalPipeline.statsStage(imaging, numbs, nPerm, seed))
+    assert(jobs == 2, s"$jobs jobs") // one collect per input
+
+    // the per-column protocol: one collect per test and per ROC vector
+    val boolCols = imaging.columns.filterNot(Set("SuvInFocus", "TBR", "Fluid",
+      "IrregularBorders", "FocalAccumulation")).toSeq
+    val pvals = boolCols.map(c => (c,
+      PermutationTest.onColumns(imaging, c, "SuvInFocus", nPerm, seed),
+      PermutationTest.onColumns(imaging, c, "TBR", nPerm, seed)))
+    val ageP = PermutationTest.onColumns(numbs, "isStudy", "ageInYearsWhenSurgery", nPerm, seed)
+    val prosthesisP = Fisher.test(numbs.select(($"prosthesisType" === "stentgraft").as("x"),
+      $"isStudy".cast("boolean").as("y")), "x", "y")._5
+    val locP = Fisher.test(numbs.where($"simplifiedClassification".isin("Y", "B"))
+      .select(($"simplifiedClassification" === "Y").as("x"),
+        $"isStudy".cast("boolean").as("y")), "x", "y")._5
+    def vec(c: String, study: Int) = numbs.where($"isStudy" === study && col(c).isNotNull)
+      .select(col(c).cast("double")).as[Double].collect()
+    val want = MedicalPipeline.StatsResults(pvals,
+      FDR.sabhaSelect((pvals.map(_._2) ++ pvals.map(_._3)).toArray,
+        (boolCols ++ boolCols).toArray).distinct,
+      ageP, prosthesisP, locP,
+      FDR.sabhaSelect(Array(ageP, prosthesisP, locP),
+        Array("ageTest", "prosthesisTypeTest", "locTest")),
+      Roc.thres2Equal(vec("SuvInFocus", 1), vec("SuvInFocus", 0), 0.01),
+      Roc.thres2Equal(vec("TBR", 1), vec("TBR", 0), 0.01))
+    // Double.toString round-trips, so equal strings are equal bits
+    assert(got.toString == want.toString, s"\n got:  $got\n want: $want")
+  }
+
+  test("summaries: one aggregation job per cohort, then local one-partition tables") {
+    val (jobs, sums) = org.apache.spark.graftbridge.Listeners.jobs(spark)(
+      MedicalPipeline.summaries(studyLake, controlLake, twoPointLake))
+    // three aggregations, each run as its exchange's map-stage job (adaptive
+    // execution materializes a shuffle as a job of its own) and its collect
+    assert(jobs == 3 * 2, s"$jobs jobs")
+    sums.foreach { case (name, df) => assert(df.rdd.getNumPartitions == 1, name) }
   }
 
   test("ml stage trains and reports importances for the 6 features") {

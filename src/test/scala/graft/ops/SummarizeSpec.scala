@@ -67,4 +67,37 @@ class SummarizeSpec extends SparkSpec {
     assert(rows.contains(("C", Some("a"), 1.0)))
     assert(rows.contains(("C", None, 2.0))) // real null category ≠ "All"
   }
+
+  test("summarizeAll gives every spec's own summarize table from one collect") {
+    val specs = Seq(
+      (Seq(AggSpec.sum, AggSpec.count), Seq("v" -> "v"), Seq("cat1" -> "C1", "cat2" -> "C2")),
+      (Seq(AggSpec.median), Seq("v" -> "m"), Seq("cat2" -> "C2")),
+      (Seq(AggSpec.countTrues), Seq("flag" -> "f"), Seq("cat1" -> "C1")),
+      (Seq(AggSpec.max), Seq("v" -> "v"), Seq.empty[(String, String)]))
+    val (jobs, all) = org.apache.spark.graftbridge.Listeners.jobs(spark)(
+      Summarize.summarizeAll(df, specs.map { case (a, m, c) =>
+        Summarize.Spec(a, m.map { case (in, out) => col(in) -> out }, c) },
+        totals = Seq((AggSpec.min, $"v", "vMin"))))
+    assert(jobs <= 2, s"$jobs jobs") // the aggregation's shuffle map stage and its collect
+    specs.zip(all.tables).foreach { case ((a, m, c), table) =>
+      val want = Summarize.summarize(df, a, m, c)
+      assert(table.schema == want.schema)
+      assert(table.collect().toSeq.sortBy(_.toString) == want.collect().toSeq.sortBy(_.toString))
+      assert(table.rdd.getNumPartitions == 1)
+    }
+    assert(all.all.getAs[Double]("vMin") == 1.0)
+  }
+
+  test("summarizeAll on an empty input keeps the All row of tables without categories") {
+    val empty = df.limit(0)
+    val specs = Seq(
+      Summarize.Spec(Seq(AggSpec.count, AggSpec.sum), Seq($"v" -> "v")),
+      Summarize.Spec(Seq(AggSpec.count), Seq($"v" -> "v"), Seq("cat1" -> "C1")))
+    val out = Summarize.summarizeAll(empty, specs, totals = Seq((AggSpec.max, $"v", "vMax")))
+    assert(out.tables.map(_.collect().toSeq) == Seq(
+      Summarize.summarize(empty, Seq(AggSpec.count, AggSpec.sum), Seq("v" -> "v"), Seq.empty).collect().toSeq,
+      Summarize.summarize(empty, Seq(AggSpec.count), Seq("v" -> "v"), Seq("cat1" -> "C1")).collect().toSeq))
+    assert(out.tables.map(_.count()) == Seq(2L, 0L))
+    assert(out.all.isNullAt(out.all.fieldIndex("vMax")))
+  }
 }

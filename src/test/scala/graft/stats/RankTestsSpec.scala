@@ -302,4 +302,15 @@ class RankTestsSpec extends SparkSpec {
       .select("d").as[Option[Double]].head()
     assert(rc.isEmpty)
   }
+
+  test("an all-NULL input gives empty Kruskal-Wallis and Friedman frames") {
+    val df = Seq.fill(5)((Option.empty[Double], Option.empty[String], Option.empty[Boolean]))
+      .toDF("x", "g", "a")
+    assert(RankTests.kruskalWallisDF(df, "x", "g").collect().isEmpty)
+    assert(RankTests.friedmanDF(df, "g", "a", "x").collect().isEmpty)
+    // KS over the same input: one row with both sizes 0 and no statistic
+    val ks = RankTests.ksDF(df, "x", col("a")).collect()
+    assert(ks.length == 1 && ks(0).getLong(0) == 0L && ks(0).getLong(1) == 0L &&
+      ks(0).isNullAt(2), ks.mkString)
+  }
 }
