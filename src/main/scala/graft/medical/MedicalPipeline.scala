@@ -425,10 +425,12 @@ object MedicalPipeline {
   }
 
   /** Association rules over imaging booleans (R :496-534: drop SuvInFocus,
-    * TBR, Fluid; supp=.3, conf=.8, minlen=3, maxlen=7, lift>1.2). */
+    * TBR, Fluid; supp=.3, conf=.8, minlen=3, maxlen=7, lift>1.2). The 9
+    * columns fit `mineBoolean`'s one aggregation; `MedicalPipelineSpec`
+    * pins it to FP-Growth's rules. */
   def imagingAssociationRules(imaging: DataFrame): DataFrame = {
     val boolCols = imaging.columns.filterNot(Set("SuvInFocus", "TBR", "Fluid")).toSeq
-    AssociationRules.mine(imaging, boolCols)
+    AssociationRules.mineBoolean(imaging, boolCols)
   }
 
   // ----------------------------------------------------------------- ml

@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -50,10 +52,26 @@ object Cleaning {
     * `lower(cast(col as string)) == trueString`; NULL input stays NULL
     * (SQL equality is null-propagating, matching the generated-SQL original).
     * Covers the reference's "prawda"/"" and "tak"/"nie" encodings.
+    *
+    * The comparison folds only `A-Z` and U+212A KELVIN SIGN (`translate`)
+    * instead of calling `lower()`: Spark's `lower()` uses ICU case mapping,
+    * whose first use in a JVM sets up ICU's tables, seconds of a cold clean
+    * stage's one task. For an ASCII `trueString` the two agree on every string:
+    * the Kelvin sign is the only non-ASCII code point that lowercases to one
+    * ASCII character, and none lowercases to several ASCII-only characters
+    * (`CleaningSpec` checks every code point). A non-ASCII `trueString` is
+    * rejected.
     */
-  def booleanFromString(df: DataFrame, trueString: String, cols: Seq[String]): DataFrame =
+  def booleanFromString(df: DataFrame, trueString: String, cols: Seq[String]): DataFrame = {
+    require(trueString.forall(_ < 0x80),
+      s"booleanFromString needs an ASCII trueString, got '$trueString'")
+    val t = trueString.toLowerCase(Locale.ROOT)
     advancedCasting(df, cols, "boolean",
-      c => lower(col(c).cast("string")) === lit(trueString.toLowerCase))
+      c => translate(col(c).cast("string"), foldFrom, foldTo) === lit(t))
+  }
+
+  /** The characters `booleanFromString` folds, and what each folds to. */
+  private val (foldFrom, foldTo) = (('A' to 'Z').mkString + "\u212A", ('a' to 'z').mkString + "k")
 
   /** 0/1-integer boolean cast (`contrGrScalaA.scala:39-41`). */
   def booleanFromInt(df: DataFrame, cols: Seq[String]): DataFrame =

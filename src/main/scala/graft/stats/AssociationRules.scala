@@ -9,11 +9,11 @@ import org.apache.spark.ml.fpm.FPGrowth
   * conf=0.8, minlen=3, maxlen=7, then keeps rules with lift>1.2 sorted by
   * confidence (`Hypothesis testing R.r:496-534`).
   *
-  * FP-Growth produces the identical frequent-itemset/rule semantics with a
-  * scalable distributed algorithm (`org.apache.spark.ml.fpm.FPGrowth`);
-  * apriori's minlen/maxlen have no FPGrowth equivalent, so rule length
-  * (|antecedent| + |consequent|) is filtered post-hoc, and lift comes from
-  * the `associationRules` output directly.
+  * [[mineBoolean]] is the rules path: one aggregation over basket bitmasks
+  * and driver-side subset enumeration, for up to 16 boolean columns.
+  * [[mine]] runs FP-Growth (`org.apache.spark.ml.fpm.FPGrowth`) over
+  * transactions; apriori's minlen/maxlen have no FP-Growth equivalent, so
+  * rule length (|antecedent| + |consequent|) is filtered post-hoc.
   */
 object AssociationRules {
 
@@ -25,7 +25,8 @@ object AssociationRules {
 
   /** Mine rules with the reference's post-filters. Output:
     * (antecedent, consequent, support, confidence, lift) sorted by
-    * confidence desc. */
+    * confidence desc. Kept as the FP-Growth path for more than 16 columns
+    * and as the oracle that [[mineBoolean]]'s equivalence specs pin. */
   def mine(df: DataFrame, boolCols: Seq[String],
       minSupport: Double = 0.3, minConfidence: Double = 0.8,
       minLen: Int = 3, maxLen: Int = 7, minLift: Double = 1.2): DataFrame = {
@@ -52,7 +53,7 @@ object AssociationRules {
     * arithmetic from the same integer counts). At 100 TB this is strictly
     * more scalable than FP-Growth over row-level transactions: the shuffle
     * carries ≤2^p rows instead of the frequent-pattern tree structures.
-    * Verified ≡ [[mine]] by StatsSpec. */
+    * Verified ≡ [[mine]] by StatsSpec and MedicalPipelineSpec. */
   def mineBoolean(df: DataFrame, boolCols: Seq[String],
       minSupport: Double = 0.3, minConfidence: Double = 0.8,
       minLen: Int = 3, maxLen: Int = 7, minLift: Double = 1.2): DataFrame = {
@@ -90,18 +91,10 @@ object AssociationRules {
       lift = conf / (freq(1 << c).toDouble / n)
       if lift > minLift
     } yield (names(a), items(c), freq(z).toDouble / n, conf, lift)
+    // a local frame: sorted in one partition, so writing it is one job
+    // (a global sort would add a range-sampling job)
     rules.toDF("antecedent", "consequent", "support", "confidence", "lift")
-      .orderBy(col("confidence").desc, col("antecedent"), col("consequent"))
-  }
-
-  /** Frequent itemsets with apriori-style min/max length (R :510-511). */
-  def frequentItemsets(df: DataFrame, boolCols: Seq[String],
-      minSupport: Double, minLen: Int, maxLen: Int): DataFrame = {
-    val model = new FPGrowth().setItemsCol("items").setMinSupport(minSupport)
-      .fit(transactions(df, boolCols))
-    model.freqItemsets
-      .where(size(col("items")).between(minLen, maxLen))
-      .select(concat_ws(",", array_sort(col("items"))).as("itemset"), col("freq"))
-      .orderBy(col("freq").desc, col("itemset"))
+      .coalesce(1)
+      .sortWithinPartitions(col("confidence").desc, col("antecedent"), col("consequent"))
   }
 }

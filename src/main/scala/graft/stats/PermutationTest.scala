@@ -27,15 +27,16 @@ object PermutationTest {
       seed: Long = 42L, exactLimit: Long = 100000L): Double = {
     val n = a.length + b.length
     val pooled = a ++ b
+    // summed once, not once per draw (the same additions in the same order)
+    val sum = pooled.sum
     val obs = math.abs(mean(a) - mean(b))
     val eps = 1e-12 * (1 + obs)
     if (choose(n, a.length) <= exactLimit) {
       var ge = 0L; var total = 0L
       combinations(n, a.length) { idx =>
         total += 1
-        val sa = idx.map(pooled).sum / a.length
-        val sb = (sum(pooled) - idx.map(pooled).sum) / b.length
-        if (math.abs(sa - sb) >= obs - eps) ge += 1
+        val s = idx.map(pooled).sum
+        if (math.abs(s / a.length - (sum - s) / b.length) >= obs - eps) ge += 1
       }
       ge.toDouble / total
     } else {
@@ -53,7 +54,7 @@ object PermutationTest {
         }
         var sa = 0.0; var m = 0
         while (m < a.length) { sa += arr(m); m += 1 }
-        val sb = sum(pooled) - sa
+        val sb = sum - sa
         if (math.abs(sa / a.length - sb / b.length) >= obs - eps) ge += 1
         i += 1
       }
@@ -170,7 +171,6 @@ object PermutationTest {
   }
 
   private def mean(a: Array[Double]): Double = a.sum / a.length
-  private def sum(a: Array[Double]): Double = a.sum
 
   private def choose(n: Int, k: Int): Long = {
     var r = 1.0

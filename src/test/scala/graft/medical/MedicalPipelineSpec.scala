@@ -147,6 +147,38 @@ class MedicalPipelineSpec extends SparkSpec {
     sums.foreach { case (name, df) => assert(df.rdd.getNumPartitions == 1, name) }
   }
 
+  test("association rules: FP-Growth's rules to the bit, from one aggregation") {
+    import graft.stats.AssociationRules
+    // the imaging frame with NULL cells in two mined columns, read back from
+    // Parquet so that every job it costs is counted
+    val dir = java.nio.file.Files.createTempDirectory("graft-med-rules").toString + "/imaging"
+    val img = MedicalPipeline.imagingFrame(studyLake)
+    img.select(img.columns.toSeq.map {
+      case c @ "GasBubbles" => when($"TBR" > 0.6, lit(null)).otherwise(col(c)).as(c)
+      case c @ "Thrombus" => when($"SuvInFocus" < 4, lit(null)).otherwise(col(c)).as(c)
+      case c => col(c)
+    }: _*).write.parquet(dir)
+    val imaging = spark.read.parquet(dir)
+    assert(imaging.where($"GasBubbles".isNull || $"Thrombus".isNull).count() > 0)
+    val boolCols = imaging.columns.filterNot(Set("SuvInFocus", "TBR", "Fluid")).toSeq
+    def rows(df: DataFrame) = df.collect().toSeq
+
+    val (jobs, got) = org.apache.spark.graftbridge.Listeners.jobs(spark)(
+      rows(MedicalPipeline.imagingAssociationRules(imaging)))
+    // the basket aggregation (its exchange's map stage and its collect),
+    // then the one-partition rule frame
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(got == rows(AssociationRules.mine(imaging, boolCols)))
+    // the reference's thresholds leave few or no rules on 29 rows: the same
+    // equality at looser ones, where there are rules to compare
+    val loose = AssociationRules.mineBoolean(imaging, boolCols,
+      minSupport = 0.1, minConfidence = 0.5, minLen = 2, minLift = 1.0)
+    val looseFp = AssociationRules.mine(imaging, boolCols,
+      minSupport = 0.1, minConfidence = 0.5, minLen = 2, minLift = 1.0)
+    assert(rows(loose).nonEmpty)
+    assert(rows(loose) == rows(looseFp)) // Row equality compares doubles exactly
+  }
+
   test("ml stage trains and reports importances for the 6 features") {
     val numbs = MedicalPipeline.cohortNumbsFrame(study, control)
     val res = MedicalPipeline.mlStage(numbs)

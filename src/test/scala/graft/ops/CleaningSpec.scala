@@ -25,6 +25,30 @@ class CleaningSpec extends SparkSpec {
       Seq(Some(true), Some(true), Some(false), Some(false), None))
   }
 
+  test("booleanFromString equals lower(cast(c as string)) = t on every code point") {
+    // every Unicode scalar value as a one-character string (a lone surrogate
+    // has no UTF-8 encoding), a few mixed-case words, "" and NULL
+    val chars = spark.range(0, Character.MAX_CODE_POINT + 1L)
+      .where(!col("id").between(Character.MIN_SURROGATE.toLong, Character.MAX_SURROGATE.toLong))
+      .map(cp => new String(Character.toChars(cp.intValue)))
+    val words = Seq("PRAWDA", "Prawda", "prawdą", "ta\u212A", "İ", "", null).toDF("value")
+    val in = chars.toDF("value").union(words)
+      .select(col("value").as("s"), col("value").as("flag"))
+    for (t <- Seq("prawda", "tak", "o")) {
+      val out = Cleaning.booleanFromString(in, t, Seq("flag"))
+        .withColumn("want", lower(col("s").cast("string")) === lit(t))
+      val diff = out.where(!(col("flag") <=> col("want"))).limit(5).collect()
+      assert(diff.isEmpty, s"$t: ${diff.mkString(", ")}")
+      assert(out.where(col("flag")).count() > 0, t) // some row is true: not vacuous
+    }
+  }
+
+  test("booleanFromString rejects a non-ASCII trueString") {
+    val df = Seq("prawdą").toDF("flag")
+    val e = intercept[IllegalArgumentException](Cleaning.booleanFromString(df, "prawdą", Seq("flag")))
+    assert(e.getMessage.contains("booleanFromString needs an ASCII trueString"), e.getMessage)
+  }
+
   test("booleanFromInt casts 0/1 to boolean") {
     val df = Seq(Some(1), Some(0), None).toDF("b")
     val out = Cleaning.booleanFromInt(df, Seq("b"))
