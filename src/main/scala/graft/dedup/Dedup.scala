@@ -270,8 +270,8 @@ object Dedup {
       }
     // candidate generation carries ids + the band-hash array; a pair
     // colliding in several bands is emitted exactly once, by its OWNING band
-    // (the lowest index where the two band-hash arrays agree — the streaming
-    // twin's contract, StreamingNearDup), band indices restricted to
+    // (the lowest index where the two band-hash arrays agree — the e7
+    // contract, StreamingNearDup), band indices restricted to
     // SURVIVING buckets when the recovery set is available. The row-local
     // filter replaces a full candidate-pair distinct() shuffle.
     val a = banded.alias("a")

@@ -7,8 +7,21 @@ import Oracle.Sql
 import Shared._
 
 /** e-family: event streams — time functions, sessions, as-of and interval
-  * joins, change detection and streaming replays. */
+  * joins, change detection, and the batch forms of streaming patterns
+  * (per-key folds, idempotent per-batch writers) over closed inputs. */
 object EventQueries extends Family("e") {
+
+  /** `n` time-ordered slices of `ev` on fixed-width boundaries of
+    * unix_micros(ts), so equal timestamps never straddle two slices. */
+  private def timeSlices(ev: org.apache.spark.sql.DataFrame,
+      n: Int): Seq[org.apache.spark.sql.DataFrame] = {
+    val mm = ev.agg(min(unix_micros(col("ts"))),
+      max(unix_micros(col("ts")))).head
+    val lo = mm.getLong(0)
+    val step = (mm.getLong(1) - lo) / n + 1
+    (0 until n).map(b =>
+      ev.where(expr(s"(unix_micros(ts) - ${lo}L) div ${step}L") === b))
+  }
 
   val queries: Seq[Query] = Seq(
     // ---- §2.7 date functions + events hourly rollup ---------------------
@@ -23,7 +36,7 @@ object EventQueries extends Family("e") {
                 round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total
          FROM events GROUP BY 1 ORDER BY 1""")),
 
-    // ---- streaming batch-twin: mapGroupsWithState sessionization --------
+    // ---- per-user event count and value sum (EventStream.sessionize) ---
     Query("e2_sessionize", (s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
@@ -285,7 +298,7 @@ object EventQueries extends Family("e") {
                 count(t_purchase) AS reached_purchase
          FROM p""")),
 
-    // ---- streaming batch-twin: stream-stream attribution interval join --
+    // ---- attribution interval join: same user, purchase within 30 min ---
     Query("e5_attributed_join", (s, dir) => {
       val ev = Tables.events(s, dir)
       graft.streaming.EventStream.attributedJoin(
@@ -307,10 +320,8 @@ object EventQueries extends Family("e") {
           AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 30 MINUTE
          ORDER BY l_event_id, r_event_id""")),
 
-    // ---- streaming LEFT-OUTER attribution (e13): unconverted views emit
-    // with null purchase columns — batch form of the watermarked outer
-    // stream-stream join (the live null-emission path is spec'd with
-    // MemoryStream watermark advancement). -------------------------------
+    // ---- LEFT-OUTER attribution (e13): unconverted views emit with null
+    // purchase columns. ---------------------------------------------------
     Query("e13_attributed_outer", (s, dir) => {
       val ev = Tables.events(s, dir)
       graft.streaming.EventStream.attributedJoinOuter(
@@ -331,10 +342,9 @@ object EventQueries extends Family("e") {
           AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 30 MINUTE
          ORDER BY l_event_id, r_event_id""")),
 
-    // ---- streaming near-dup batch replay: the StreamingNearDup operator's
-    // signature/banding/owning-band contract over a static corpus, so the
-    // streaming component gets a hash-verified CORRECTNESS row (the live
-    // stateful path is spec'd against this exact construction) ------------
+    // ---- near-dup pairs by owning band (StreamingNearDup.batchReplay):
+    // d8's md5-slice signature, band keys with a per-bucket cap, one row
+    // per pair from its owning band, over a static corpus --------------
     Query("e7_stream_neardup_replay", (s, dir) => {
       graft.streaming.StreamingNearDup.batchReplay(
           t(s, dir, "documents").select(col("doc_id"), col("text")))
@@ -380,9 +390,8 @@ object EventQueries extends Family("e") {
          WHERE agree >= 6 AND cnt.c <= 50
          ORDER BY doc_id, dup_of""")),
 
-    // ---- streaming exact-dedup batch replay: first event per content
-    // hash by (event time, id) — streamingExactDedup's closed-corpus
-    // contract (the live watermarked path is spec'd ≡ this replay) --------
+    // ---- first-seen exact dedup: first event per content hash by (event
+    // time, id) over a closed corpus (EventStream.exactDedupReplay) ------
     Query("e8_stream_dedup_replay", (s, dir) => {
       val ev = Tables.events(s, dir)
       graft.streaming.EventStream.exactDedupReplay(
@@ -402,13 +411,12 @@ object EventQueries extends Family("e") {
            FROM events)
          WHERE rn = 1 ORDER BY content_hash""")),
 
-    // ---- streaming CUSUM batch replay (e28): StreamingCusum's OWN fold
-    // (the shared foldBuckets recurrence) over the closed hourly-count
-    // corpus — bit-identical to any micro-batch split since the
-    // recurrence is per-bucket. The output additionally pins the final
-    // state against e15's ★ batch cusumDetect chain in-band
-    // (matches_e15); the oracle replays the doubled-unit reflection
-    // chain relationally. ------------------------------------------------
+    // ---- CUSUM as a per-key fold (e28): StreamingCusum's foldBuckets
+    // recurrence over the closed hourly-count corpus — equal to any
+    // consecutive split of the buckets since the recurrence is
+    // per-bucket. The output additionally pins the final state against
+    // e15's ★ batch cusumDetect chain in-band (matches_e15); the oracle
+    // replays the doubled-unit reflection chain relationally. ----------
     Query("e28_stream_cusum_replay", (s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
@@ -459,8 +467,8 @@ object EventQueries extends Family("e") {
                 TRUE AS matches_e15
          FROM st GROUP BY key ORDER BY key""")),
 
-    // ---- streaming Misra–Gries batch replay (e29): the live operator's
-    // OWN foldBatch step over the closed corpus as one batch, then the MG
+    // ---- Misra–Gries as a per-key fold (e29): StreamingHeavyHitters'
+    // foldBatch step over the closed corpus as one batch, then the MG
     // guarantee certified IN-BAND against the exact per-item truth: every
     // counter is a lower bound, counter+spilled an upper bound, the spill
     // mass respects processed/(k+1), and every provably-heavy item
@@ -473,10 +481,11 @@ object EventQueries extends Family("e") {
       // aggregate; the MG fold replays over the PRE-SUMMED truth cells
       // (batchReplay's first step is exactly that per-key item sum, so
       // the fold's input multiset — and the sketch — is bit-identical;
-      // StreamingHhSpec pins it). This drops the old second corpus-wide
-      // shuffle + typed-encoder pass into the fold. truth feeds five
-      // consumers (fold, perKey, heavy filter, bounds join, semi join) —
-      // pinned. mg is ≤ k rows per key: broadcast it explicitly.
+      // StreamingHeavyHittersSpec pins it). This drops the old second
+      // corpus-wide shuffle + typed-encoder pass into the fold. truth
+      // feeds five consumers (fold, perKey, heavy filter, bounds join,
+      // semi join) — pinned. mg is ≤ k rows per key: broadcast it
+      // explicitly.
       val keyed = t(s, dir, "lineitem").select(
         col("l_returnflag").as("key"),
         when(col("l_linenumber") <= 3,
@@ -541,12 +550,11 @@ object EventQueries extends Family("e") {
          FROM tot t JOIN tc c ON t.key = c.key
          GROUP BY t.key, t.processed ORDER BY t.key""")),
 
-    // ---- streaming SPRT batch replay (e30): StreamingSprt's OWN
-    // foldLook step once per day in look order — exactly the
-    // one-micro-batch-per-look schedule r70 models, so the latched
-    // crossing flags replay the sequential test's look path. Exact totals
-    // and the closed-form LLR (JVM constants interpolated) hash-certify
-    // against the relational look chain. ---------------------------------
+    // ---- SPRT as a per-key fold over looks (e30): StreamingSprt's
+    // foldLook step once per day in look order — the look schedule r70
+    // models, so the latched crossing flags replay the sequential test's
+    // look path. Exact totals and the closed-form LLR (JVM constants
+    // interpolated) hash-certify against the relational look chain. ----
     Query("e30_stream_sprt_replay", (s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
@@ -596,15 +604,13 @@ object EventQueries extends Family("e") {
          FROM ll GROUP BY key ORDER BY key"""
       }),
 
-    // ---- streaming materialized view, batch-replayed (the e7/e8
-    // doctrine): four deterministic TIME-ORDERED micro-batches (fixed
-    // quartile boundaries on unix_micros(ts), so equal timestamps never
-    // straddle batches) run rollupSink's exact per-batch path — newest
-    // event per user upserted with capture, captured slice folded into
-    // the per-event-type rollup. Time-ordered batches make sequential
-    // last-write-wins ≡ global newest-per-user, which is what the oracle
-    // replays relationally; the in-query require additionally pins
-    // summary == fresh batch recompute engine-side. --------------------
+    // ---- materialized view over four batches: four deterministic
+    // TIME-ORDERED slices (timeSlices) run EventStream.rollupBatch —
+    // newest event per user upserted with capture, captured slice folded
+    // into the per-event-type rollup. Time-ordered batches make
+    // sequential last-write-wins ≡ global newest-per-user, which is what
+    // the oracle replays relationally; the in-query require additionally
+    // pins summary == fresh batch recompute engine-side. ---------------
     Query("e10_stream_rollup", (s, dir) => {
       val root = scratch("e10", "base", dir)
       val sroot = scratch("e10", "sum", dir)
@@ -615,27 +621,10 @@ object EventQueries extends Family("e") {
         .select(col("user_id"), col("ts"), col("event_type"),
           col("value").cast("double").as("value"))
       if (S.latestVersion(root) == 0) {
-        val mm = ev.agg(min(unix_micros(col("ts"))),
-          max(unix_micros(col("ts")))).head
-        val lo = mm.getLong(0)
-        val step = (mm.getLong(1) - lo) / 4 + 1
-        (0 until 4).foreach { b =>
-          val batch = ev.where(
-            expr(s"(unix_micros(ts) - ${lo}L) div ${step}L") === b)
-          if (!batch.isEmpty) {
-            val others = Seq("ts", "event_type", "value")
-            val latest = batch.groupBy(col("user_id"))
-              .agg(max(struct(others.map(col): _*)).as("__l"))
-              .select(col("user_id") +: others.map(c => col(s"__l.$c").as(c)): _*)
-            val pre = S.latestVersion(root)
-            S.merge(latest, root, Seq("user_id"), changeCapture = true)
-            if (S.latestVersion(sroot) == 0)
-              S.write(IA.summarize(S.read(s, root), Seq("event_type"),
-                Seq("value" -> "total")).coalesce(1), sroot)
-            else
-              IA.applyChanges(s, root, sroot, fromVersion = pre,
-                Seq("event_type"), Seq("value" -> "total"))
-          }
+        timeSlices(ev, 4).zipWithIndex.foreach { case (batch, b) =>
+          graft.streaming.EventStream.rollupBatch(batch, root, sroot,
+            Seq("user_id"), "ts", Seq("event_type"), Seq("value" -> "total"),
+            root, b)
         }
         val inc = S.read(s, sroot).collect().map(r =>
           (r.getString(0), r.getLong(1), r.getDecimal(2).toPlainString)).toSet
@@ -667,9 +656,9 @@ object EventQueries extends Family("e") {
                   AS total
          FROM last GROUP BY 1 ORDER BY 1""")),
 
-    // ---- streaming partition overwrite, batch-replayed (e12): three
-    // day-sliced recompute batches with OVERLAPPING coverage run
-    // replaceSink's per-batch path — each batch atomically replaces the
+    // ---- partition overwrite over batches (e12): three day-sliced
+    // recompute batches with OVERLAPPING coverage run
+    // EventStream.replaceBatch — each batch atomically replaces the
     // days it covers, so the final owner of a day is the LAST batch that
     // recomputed it. Batch 3 is then redelivered under a new batchId
     // (executes; content-idempotent by construction) and replayed under
@@ -731,14 +720,14 @@ object EventQueries extends Family("e") {
          FROM tagged GROUP BY day, loaded_by
          ORDER BY day""")),
 
-    // ---- streaming materialized view WITH exact COUNT(DISTINCT),
-    // batch-replayed: rollupDistinctSink's per-batch path — newest event
-    // per user upserted with capture, captured slice folded through the
-    // two-level distinct protocol, windows driven by the foldedThrough
-    // watermarks exactly as the sink runs them (not a hand-carried
-    // fromVersion). `cohort` = user_id % 10 retracts from a group when a
-    // user's newest event changes type, so distinct counts move in both
-    // directions; the in-query require pins summary == batch recompute.
+    // ---- materialized view WITH exact COUNT(DISTINCT) over four
+    // batches: EventStream.rollupDistinctBatch on e10's time slices —
+    // newest event per user upserted with capture, captured slice folded
+    // through the two-level distinct protocol, windows driven by the
+    // foldedThrough watermarks. `cohort` = user_id % 10 retracts from a
+    // group when a user's newest event changes type, so distinct counts
+    // move in both directions; the in-query require pins summary == batch
+    // recompute.
     Query("e11_stream_distinct", (s, dir) => {
       val root = scratch("e11", "base", dir)
       val sroot = scratch("e11", "sum", dir)
@@ -755,26 +744,10 @@ object EventQueries extends Family("e") {
         (r.getString(0), r.getLong(1), r.getDecimal(2).toPlainString,
           r.getLong(3))).toSet
       if (S.latestVersion(root) == 0) {
-        val mm = ev.agg(min(unix_micros(col("ts"))),
-          max(unix_micros(col("ts")))).head
-        val lo = mm.getLong(0)
-        val step = (mm.getLong(1) - lo) / 4 + 1
-        (0 until 4).foreach { b =>
-          val batch = ev.where(
-            expr(s"(unix_micros(ts) - ${lo}L) div ${step}L") === b)
-          if (!batch.isEmpty) {
-            val others = Seq("ts", "event_type", "value", "cohort")
-            val latest = batch.groupBy(col("user_id"))
-              .agg(max(struct(others.map(col): _*)).as("__l"))
-              .select(col("user_id") +: others.map(c => col(s"__l.$c").as(c)): _*)
-            S.merge(latest, root, Seq("user_id"), changeCapture = true)
-            if (S.lastTxn(sroot, IA.foldedThroughKey).isEmpty)
-              IA.seedSummaryWithDistinct(s, root, sroot, droot,
-                Seq("event_type"), Seq("value" -> "total"), dc)
-            else
-              IA.foldOnceWithDistinct(s, root, sroot, droot,
-                Seq("event_type"), Seq("value" -> "total"), dc)
-          }
+        timeSlices(ev, 4).zipWithIndex.foreach { case (batch, b) =>
+          graft.streaming.EventStream.rollupDistinctBatch(batch, root, sroot,
+            droot, Seq("user_id"), "ts", Seq("event_type"),
+            Seq("value" -> "total"), dc, root, b)
         }
         val inc = rows(S.read(s, sroot))
         val batchRe = rows(IA.summarizeWithDistinct(S.read(s, root),
@@ -787,7 +760,7 @@ object EventQueries extends Family("e") {
           round(col("total").cast("double"), 2).as("total"), col("cohorts"))
         .orderBy(col("event_type"))
     },
-      // e11: the distinct-carrying streaming view — global newest-per-user
+      // e11: the distinct-carrying view — global newest-per-user
       // (time-ordered batches make sequential LWW ≡ global), per-type
       // count/sum plus distinct active cohorts
       Sql("""WITH ev AS (

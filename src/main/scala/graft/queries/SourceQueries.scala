@@ -832,7 +832,7 @@ object SourceQueries extends Family("s") {
          WHERE lang = 'en' ORDER BY doc_id""")),
 
     // ---- S5 extension: bin-packing compaction (the OPTIMIZE story for
-    // the CDC sink's one-version-per-micro-batch layout). Eight 1-file
+    // the CDC writer's one-version-per-batch layout). Eight 1-file
     // appends, then compact packs them into target-size files as a NEW
     // committed version with identical content — the oracle reads the
     // same slice relationally, so the hash match certifies the whole

@@ -886,8 +886,8 @@ object SnapshotTable {
     * preserved bin-locally), into bins of ≤ `targetBytes` and rewritten as
     * one file per bin; the result commits as a NEW version whose content
     * is IDENTICAL to the base snapshot (only the file layout changes).
-    * Needed because every streaming MERGE micro-batch ([[graft.streaming
-    * .EventStream.upsertSink]]) commits a version of small files — at
+    * Needed because every per-batch MERGE ([[graft.streaming
+    * .EventStream.upsertBatch]]) commits a version of small files — at
     * 100 TB unbounded file count is the scan killer.
     *
     * Stats: untouched files keep their manifest envelopes; packed files
@@ -904,8 +904,8 @@ object SnapshotTable {
     * [[graft.ops.Layout.zorder]] into ~`totalBytes / targetBytes` files,
     * each covering a tight hyper-rectangle of the named key space, and
     * the re-derived manifest envelopes make [[readPruned]] skip again.
-    * This is the maintenance command for a CDC table: every streaming
-    * MERGE rewrites in shuffle order, so after enough micro-batches every
+    * This is the maintenance command for a CDC table: every per-batch
+    * MERGE rewrites in shuffle order, so after enough batches every
     * file spans the whole key range and stats-pruning is dead — plain
     * packing would fossilize that; the z-order rewrite restores it.
     * Content is identical either way (a permutation), so the commit stays

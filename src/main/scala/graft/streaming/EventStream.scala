@@ -1,107 +1,41 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface over the `events` table shape
-  * (NOT-IN-REFERENCE extension — the reference has no streaming at all,
-  * SURVEY §2.10; this is the engine's scale path for continuous ingest).
-  *
-  * Batch/stream parity: every transform is expressed on DataFrame so the
-  * identical code runs over `spark.read` (batch backfill) and
-  * `spark.readStream` (live) — the Structured Streaming model.
+/** Batch operators over the `events` table shape for the e-family
+  * queries (NOT-IN-REFERENCE extension — the reference has no streaming
+  * at all, SURVEY §2.10). Each is the closed-input form of a streaming
+  * pattern: per-user state, an interval attribution join, first-seen
+  * dedup, and idempotent per-batch writers into a
+  * [[graft.sources.SnapshotTable]] keyed by an `(appId, batchId)` stamp.
+  * No Structured Streaming query is started anywhere in the engine; the
+  * e10–e12 queries drive the per-batch writers over deterministic
+  * time-ordered slices of a closed table.
   */
 object EventStream {
 
-  /** Tumbling-window aggregation with a watermark: count + sum(value) per
-    * (window, event_type). Late rows beyond `lateness` are dropped and their
-    * state reclaimed — unbounded-state-safe at any scale. */
-  def hourlyRollup(events: DataFrame, lateness: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("total"))
-
   final case class SessionUpdate(user_id: Long, n_events: Long,
       total_value: Double, session_end: Boolean)
-  final case class SessionState(n: Long, total: Double)
 
-  /** Per-user sessionization via `mapGroupsWithState` with a processing-time
-    * gap timeout: custom state machine the windowed API can't express
-    * (KeyValueGroupedDataset state ops, SURVEY steering). State is one small
-    * struct per active user — shuffle is on user_id only. */
-  def sessionize(events: Dataset[(Long, Double)], gap: String = "30 minutes"): Dataset[SessionUpdate] = {
+  /** Per-user event count and value sum over a closed input (e2): one
+    * row per user, summed in the group iterator's order. `session_end`
+    * is always false — a closed input has no gap timeout to close a
+    * session on. Shuffle is on user_id only. */
+  def sessionize(events: Dataset[(Long, Double)]): Dataset[SessionUpdate] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.ProcessingTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, Double)], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            SessionUpdate(user, s.n, s.total, session_end = true)
-          } else {
-            val prev = state.getOption.getOrElse(SessionState(0L, 0.0))
-            val batch = rows.toSeq
-            val next = SessionState(prev.n + batch.size, prev.total + batch.map(_._2).sum)
-            state.update(next)
-            state.setTimeoutDuration(gap)
-            SessionUpdate(user, next.n, next.total, session_end = false)
-          }
-      }
+    events.groupByKey(_._1).mapGroups { (user, rows) =>
+      val (n, total) = rows.foldLeft((0L, 0.0)) { case ((c, t), (_, v)) =>
+        (c + 1, t + v) }
+      SessionUpdate(user, n, total, session_end = false)
+    }
   }
 
-  final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class ClosedSession(user_id: Long, n_events: Long, total_value: Double,
-      started: java.sql.Timestamp, ended: java.sql.Timestamp)
-  /** Open-session state (public: the state encoder's generated code must
-    * reach the accessors). */
-  final case class OpenSession(n: Long, total: Double, startMs: Long, endMs: Long)
-
-  /** Event-time sessionization via `flatMapGroupsWithState` + event-time
-    * timeout: sessions close `gapMs` of EVENT time after their last event
-    * (driven by the watermark, so results are replay-deterministic —
-    * processing-time timeouts are not). Emits one row per CLOSED session;
-    * state per open session is one small struct, reclaimed on timeout. */
-  def sessionizeEventTime(events: Dataset[SessionEvent],
-      gapMs: Long = 30 * 60 * 1000L): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OpenSession, ClosedSession](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[SessionEvent], state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(ClosedSession(user, s.n, s.total,
-              new java.sql.Timestamp(s.startMs), new java.sql.Timestamp(s.endMs)))
-          } else {
-            val batch = rows.toSeq
-            val times = batch.map(_.ts.getTime)
-            val prev = state.getOption
-            val next = OpenSession(
-              prev.map(_.n).getOrElse(0L) + batch.size,
-              prev.map(_.total).getOrElse(0.0) + batch.map(_.value).sum,
-              math.min(prev.map(_.startMs).getOrElse(Long.MaxValue), times.min),
-              math.max(prev.map(_.endMs).getOrElse(Long.MinValue), times.max))
-            state.update(next)
-            state.setTimeoutTimestamp(next.endMs + gapMs)
-            Iterator.empty
-          }
-      }
-  }
-
-  /** Stream-stream (or batch-batch — same code) attribution join: each
-    * `left` row pairs with `right` rows of the SAME user whose timestamp
-    * falls in [left.ts, left.ts + window]. The equi key (user_id) makes the
-    * batch plan a hash join + range filter (never a nested loop); in
-    * streaming, the time-range condition plus watermarks on BOTH inputs
-    * (callers attach them — lateness is a deployment choice) bound the join
-    * state Spark must retain. Columns: left as `l_*`, right as `r_*`. */
+  /** Attribution join: each `left` row pairs with `right` rows of the
+    * SAME user whose timestamp falls in [left.ts, left.ts + window]
+    * (boundaries inclusive). The equi key (user_id) makes the plan a hash
+    * join + range filter, never a nested loop. Columns: left as `l_*`,
+    * right as `r_*`. */
   def attributedJoin(left: DataFrame, right: DataFrame,
       window: String = "30 minutes"): DataFrame = {
     val l = left.select(col("event_id").as("l_event_id"), col("ts").as("l_ts"),
@@ -117,13 +51,8 @@ object EventStream {
 
   /** LEFT-OUTER attribution: like [[attributedJoin]], but a `left` row
     * with NO matching `right` row in its window still emits, with null
-    * `r_*` columns — the "unconverted view" row a funnel analysis needs.
-    * In streaming this is the semantics batch can't fake incrementally:
-    * the null row may only emit once the right-side WATERMARK has passed
-    * the window's end (before that a match could still arrive), which is
-    * exactly what Spark's watermarked outer stream-stream join does —
-    * callers attach watermarks to both inputs; the time-range condition
-    * bounds the buffered state AND decides when "no match" is final. */
+    * `r_*` columns — the "unconverted view" row a funnel analysis needs
+    * (e13). */
   def attributedJoinOuter(left: DataFrame, right: DataFrame,
       window: String = "30 minutes"): DataFrame = {
     val l = left.select(col("event_id").as("l_event_id"), col("ts").as("l_ts"),
@@ -138,30 +67,11 @@ object EventStream {
       .drop("r_user_id")
   }
 
-  /** Streaming exact dedup — the continuous-ingest counterpart of
-    * `Dedup.exactDedup` (d1): keep the FIRST document seen per content hash,
-    * with dedup state bounded by the event-time watermark
-    * (`dropDuplicatesWithinWatermark`: a duplicate arriving within
-    * `lateness` of the original is dropped; state older than the watermark
-    * is reclaimed, so memory is O(docs per lateness window), never O(corpus)).
-    * An unbounded-history exact dedup of a stream is a batch join against
-    * the corpus table by design — unbounded streaming state is the one
-    * thing a 100 TB pipeline must never hold.
-    *
-    * Shuffle is on the content hash only; the text column is dropped before
-    * the stateful exchange and only the (id, hash, ts) survivors flow on. */
-  def streamingExactDedup(docs: DataFrame, lateness: String = "1 hour"): DataFrame =
-    docs
-      .select(col("doc_id"), col("ts"), md5(col("text")).as("content_hash"))
-      .withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark("content_hash")
-
-  /** Batch replay of [[streamingExactDedup]] over a CLOSED corpus — the
-    * correctness bridge (e8): the first row per content hash by (event
-    * time, id tie-break), which is the survivor an ordered replay of the
-    * stream would keep. One shuffle keyed on the content hash; min(struct)
-    * aggregates map-side (no per-hash window sort). The watermark knob
-    * bounds state under continuous ingest and has no meaning here. */
+  /** First-seen exact dedup over a closed corpus (e8): the first row per
+    * content hash by (event time, id tie-break) — the survivor an
+    * in-order replay of the input would keep. One shuffle keyed on the
+    * content hash; min(struct) aggregates map-side (no per-hash window
+    * sort). */
   def exactDedupReplay(docs: DataFrame, idCol: String = "doc_id",
       tsCol: String = "ts", contentCol: String = "text"): DataFrame =
     docs.select(col(idCol), col(tsCol), md5(col(contentCol)).as("content_hash"))
@@ -170,40 +80,12 @@ object EventStream {
       .select(col("content_hash"), col(s"__f.$tsCol").as(tsCol),
         col(s"__f.$idCol").as(idCol))
 
-  /** A session whose streaming state lives in RocksDB instead of the
-    * default in-memory HDFSBackedStateStore — the scale path for the
-    * stateful ops here (sessionize, dedup, near-dup buckets): state spills
-    * to local disk with a bounded in-heap working set, so key cardinality
-    * is capped by executor DISK, not heap. `newSession()` shares the
-    * SparkContext but carries its own SQLConf, so the provider choice
-    * never leaks into other queries on the same cluster; queries capture
-    * the conf at start. Checkpoint compatibility: the provider is part of
-    * the checkpoint contract — restart a query under the SAME provider it
-    * began with. */
-  def withRocksDBStateStore(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
-
-  /** Wire a parquet-directory stream of events through the rollup to an
-    * in-memory (testing) or file sink. Returns the started query. */
-  def startFileStream(spark: SparkSession, inputDir: String, queryName: String,
-      schema: org.apache.spark.sql.types.StructType) = {
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    hourlyRollup(stream)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .start()
-  }
-
-  /** The txn key under which a sink records its last applied (appId,
+  /** The txn key under which a writer records its last applied (appId,
     * batchId) — the Delta idempotent-writes design: the stamp commits
     * atomically with the batch's merge, so "was this batch applied"
-    * survives any crash. `appId` scopes the counter to one checkpoint
-    * lineage (batch ids restart at 0 for a fresh checkpoint; a stable
-    * app id keeps old stamps from shadowing the new stream). */
+    * survives any crash. `appId` scopes the counter to one lineage of
+    * batch ids (ids restart at 0 for a fresh lineage; a stable app id
+    * keeps old stamps from shadowing the new one). */
   private[streaming] def batchKey(appId: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(appId.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
@@ -216,11 +98,13 @@ object EventStream {
     graft.sources.SnapshotTable.lastTxn(root, batchKey(appId))
       .exists(_._2.toLong >= batchId)
 
-  /** One upsert micro-batch, exposed for testing and for the replay-skip
-    * contract: newest change per key within the batch (max-struct — order
-    * independent), MERGEd with the `(appId, batchId)` stamp riding the
-    * same commit. An already-applied batch returns without touching the
-    * table at all — the replay costs a manifest read, not a merge. */
+  /** One keyed upsert batch into a [[graft.sources.SnapshotTable]]: the
+    * newest change per key within the batch (max-struct over `tsCol` then
+    * the other columns — order independent, ties break to the largest
+    * value tuple), MERGEd by `keyCols` with the `(appId, batchId)` stamp
+    * riding the same commit, so last write per key wins across batches.
+    * An already-applied batch returns without touching the table at all —
+    * a replay costs a manifest read, not a merge. */
   def upsertBatch(batch: DataFrame, root: String, keyCols: Seq[String],
       tsCol: String, appId: String, batchId: Long,
       changeCapture: Boolean = false): Unit = {
@@ -238,40 +122,12 @@ object EventStream {
     }
   }
 
-  /** Streaming CDC upsert into a [[graft.sources.SnapshotTable]]: each
-    * micro-batch MERGEs by `keyCols` (last write per key wins across
-    * batches — the Delta `foreachBatch` + MERGE pattern for keyed change
-    * streams). Within one micro-batch, `tsCol` picks the newest change per
-    * key BEFORE the merge, so intra-batch ordering is deterministic (ties
-    * break to the largest value tuple, deterministic because a max-struct
-    * is order-independent).
-    *
-    * EXACTLY-ONCE: foreachBatch is at-least-once on retries, and the
-    * merge content is idempotent for a replayed batch — but beyond that,
-    * the `(appId, batchId)` txn stamp ([[upsertBatch]]) makes a replay
-    * SKIP entirely: no table rewrite, no extra version. The checkpoint
-    * directory is the app id (stable across restarts of the same
-    * lineage). State: none held by the sink; the table's manifest chain
-    * is the recovery point. Returns the started query. */
-  def upsertSink(updates: DataFrame, root: String, keyCols: Seq[String],
-      tsCol: String, checkpointDir: String,
-      changeCapture: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    updates.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatch(batch, root, keyCols, tsCol, checkpointDir, batchId,
-          changeCapture)
-      }
-      .start()
-  }
-
-  /** One partition-overwrite micro-batch: the batch's rows atomically
+  /** One partition-overwrite batch (e12): the batch's rows atomically
     * REPLACE the slices (distinct non-null `sliceCol` values) they cover —
     * [[graft.sources.SnapshotTable.replaceWhere]] per batch, the Delta
-    * `foreachBatch` + replaceWhere pattern for recompute streams ("this
-    * hour/day arrived again, swap it"). The slice set is collected per
-    * batch (bounded: a micro-batch covers few slices by construction).
+    * replaceWhere pattern for recompute feeds ("this hour/day arrived
+    * again, swap it"). The slice set is collected per batch (bounded: a
+    * batch covers few slices by construction).
     *
     * EXACTLY-ONCE twice over: a redelivered batch carries the same slices
     * and the same content, so re-executing it is a no-op on the table
@@ -296,48 +152,24 @@ object EventStream {
     }
   }
 
-  /** Streaming partition-overwrite sink: each micro-batch replaces the
-    * slices it covers ([[replaceBatch]]) — the recompute-stream
-    * counterpart of [[upsertSink]]'s keyed CDC merge. Returns the started
-    * query. */
-  def replaceSink(updates: DataFrame, root: String, sliceCol: String,
-      checkpointDir: String, changeCapture: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    updates.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        replaceBatch(batch, root, sliceCol, checkpointDir, batchId,
-          changeCapture)
-      }
-      .start()
-  }
-
-  /** Streaming MATERIALIZED VIEW: each micro-batch upserts into the base
-    * [[graft.sources.SnapshotTable]] exactly like [[upsertSink]] (newest
-    * change per key wins, row-level capture ON), then folds the base's
-    * captured changes into a keyed count+sum summary table
+  /** One materialized-view batch (e10): [[upsertBatch]] into the base
+    * with row-level capture ON, then fold the base's captured changes
+    * into a keyed count+sum summary table
     * ([[graft.sources.IncrementalAgg.foldOnce]]) — base and rollup
     * advance in lockstep, and the rollup's refresh costs O(batch), never
     * O(table). The first batch seeds the summary from the base it just
     * wrote, stamping the initial watermark.
     *
-    * EXACTLY-ONCE, end to end: the fold window is derived from the
-    * summary's own durable `foldedThrough` watermark (a txn stamp
-    * committed atomically with each fold's merge — the Delta
-    * SetTransaction pattern), not from sink-local state. A crash between
-    * the base commit and its fold therefore costs nothing: the watermark
-    * did not advance, so the NEXT fold's window still contains the
-    * orphaned commit's events. A replayed batch stays exact through both
-    * defenses — its re-merge captures identical preimage/postimage pairs
-    * (net zero under the fold), and a fold that already committed
-    * advanced the watermark past its window, so it can never re-apply.
-    * StreamingRollupSpec pins the lockstep, replayed-batch, and
-    * crash-recovery cases. */
-  /** One rollup micro-batch: upsert (skipped when the `(appId, batchId)`
-    * stamp says it already committed — the replay's only remaining work
-    * is the fold, which the watermark makes a no-op when it too already
-    * ran; together the crash-anywhere matrix is covered), then fold. */
+    * EXACTLY-ONCE, end to end: the upsert is skipped when the `(appId,
+    * batchId)` stamp says it already committed, and the fold window is
+    * derived from the summary's own durable `foldedThrough` watermark (a
+    * txn stamp committed atomically with each fold's merge — the Delta
+    * SetTransaction pattern). A crash between the base commit and its
+    * fold therefore costs nothing: the watermark did not advance, so the
+    * NEXT fold's window still contains the orphaned commit's events. A
+    * fold that already committed advanced the watermark past its window,
+    * so it can never re-apply. StreamingRollupSpec pins the lockstep,
+    * replayed-batch, and crash-recovery cases. */
   def rollupBatch(batch: DataFrame, root: String, summaryRoot: String,
       keyCols: Seq[String], tsCol: String, groupCols: Seq[String],
       sumCols: Seq[(String, String)], appId: String, batchId: Long,
@@ -358,23 +190,9 @@ object EventStream {
     }
   }
 
-  def rollupSink(updates: DataFrame, root: String, summaryRoot: String,
-      keyCols: Seq[String], tsCol: String, groupCols: Seq[String],
-      sumCols: Seq[(String, String)], checkpointDir: String,
-      countName: String = "n"): org.apache.spark.sql.streaming.StreamingQuery = {
-    updates.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rollupBatch(batch, root, summaryRoot, keyCols, tsCol, groupCols,
-          sumCols, checkpointDir, batchId, countName)
-      }
-      .start()
-  }
-
-  /** [[rollupSink]] whose summary ALSO carries an exact COUNT(DISTINCT
-    * `distinctCol._1`) per group — the streaming materialized view with
-    * the aggregate a sketch cannot retract. Each batch folds the captured
+  /** [[rollupBatch]] whose summary ALSO carries an exact COUNT(DISTINCT
+    * `distinctCol._1`) per group (e11) — the materialized view with the
+    * aggregate a sketch cannot retract. Each batch folds the captured
     * change slice through [[graft.sources.IncrementalAgg
     * .applyChangesWithDistinct]]'s two-level protocol ((group, value)
     * multiplicity detail table + touched-group re-reads), and the
@@ -382,7 +200,6 @@ object EventStream {
     * detail and summary each advance their own `foldedThrough` watermark
     * atomically with their own commit: any crash point either refolds an
     * unfolded window or skips an already-folded one, never double-folds. */
-  /** [[rollupBatch]] for the distinct-carrying view. */
   def rollupDistinctBatch(batch: DataFrame, root: String,
       summaryRoot: String, detailRoot: String, keyCols: Seq[String],
       tsCol: String, groupCols: Seq[String],
@@ -402,22 +219,5 @@ object EventStream {
           groupCols, sumCols, distinctCol, countName)
       ()
     }
-  }
-
-  def rollupDistinctSink(updates: DataFrame, root: String,
-      summaryRoot: String, detailRoot: String, keyCols: Seq[String],
-      tsCol: String, groupCols: Seq[String],
-      sumCols: Seq[(String, String)], distinctCol: (String, String),
-      checkpointDir: String,
-      countName: String = "n"): org.apache.spark.sql.streaming.StreamingQuery = {
-    updates.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rollupDistinctBatch(batch, root, summaryRoot, detailRoot, keyCols,
-          tsCol, groupCols, sumCols, distinctCol, checkpointDir, batchId,
-          countName)
-      }
-      .start()
   }
 }

@@ -1,50 +1,44 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** State of one monitored key: the doubled-unit prefix sum `p` of
+/** Fold state of one monitored key: the doubled-unit prefix sum `p` of
   * Σ(2c − 2k), its running floor `pmin = min(0, min_j P_j)`, the bucket
-  * count, and the latched alarm. PUBLIC — the state encoder's generated
-  * Java cannot call accessors of Scala-private classes. */
+  * count, and the latched alarm. */
 case class CusumState(p: Long, pmin: Long, nBuckets: Long, alarmed: Boolean)
 
-/** One per-batch update: `cusum2` is the doubled one-sided CUSUM
-  * statistic after folding the batch's buckets; `alarm_now` reads the
-  * CURRENT statistic against the threshold, `alarmed_ever` latches. */
+/** Final state of one key: `cusum2` is the doubled one-sided CUSUM
+  * statistic after its last bucket; `alarm_now` reads that statistic
+  * against the threshold, `alarmed_ever` latches. */
 case class CusumUpdate(key: String, n_buckets: Long, cusum2: Long,
     alarm_now: Boolean, alarmed_ever: Boolean)
 
-/** Streaming one-sided CUSUM drift monitor — the live twin of
-  * `ops.Resample.cusumDetect` (e16): accumulate small sustained upward
-  * shifts of a keyed count stream, alarm when the statistic crosses 2h.
+/** One-sided CUSUM drift monitor as a per-key fold (e28) — the
+  * incremental form of `ops.Resample.cusumDetect` (e16): accumulate small
+  * sustained upward shifts of a keyed count sequence, alarm when the
+  * statistic crosses 2h.
   *
-  * Design for exactness: the batch twin computes
+  * Design for exactness: `cusumDetect` computes
   * `S_t = max(0, S_{t−1} + (c_t − k))` via the reflection identity
   * `S_t = P_t − min(0, min_j P_j)` over PARTITIONED windows; here the
-  * SAME doubled-unit LONG recurrence folds incrementally — `p`, `pmin`
-  * are two longs per key, so the streaming statistic is bit-identical
-  * to the batch replay on the same bucket sequence (integers: no FP
-  * drift, no association sensitivity). Within a batch, rows PRE-SUM per
-  * bucket_ts and then fold in timestamp order — duplicate (key,
-  * bucket_ts) rows (an un-pre-aggregated feed) collapse into ONE bucket
-  * exactly as the batch twin's groupBy(bucket) does, so the fold is
-  * deterministic regardless of arrival order. A bucket_ts must NOT
-  * recur across batches (late data for an already-folded bucket would
-  * fold as a new bucket — upstream watermark + pre-aggregation is the
-  * contract, same as StreamingHeavyHitters). The detector does NOT
-  * reset after an alarm — `alarm_now` mirrors the batch column; the
-  * latched `alarmed_ever` is what a pager reads.
-  *
-  * Scale: state is three longs + a bool per key; input should be the
-  * per-batch (key, bucket_ts, count) pre-aggregation, so the stateful
-  * operator sees bucket-count-sized traffic. */
+  * SAME doubled-unit LONG recurrence folds bucket by bucket — `p`, `pmin`
+  * are two longs per key, so the statistic is bit-identical to
+  * `cusumDetect` on the same bucket sequence (integers: no FP drift, no
+  * association sensitivity). Rows PRE-SUM per bucket_ts and then fold in
+  * timestamp order — duplicate (key, bucket_ts) rows (an
+  * un-pre-aggregated feed) collapse into ONE bucket exactly as
+  * `cusumDetect`'s groupBy(bucket) does. Because the recurrence is
+  * per-bucket, folding a bucket sequence in consecutive parts equals one
+  * whole fold (StreamingCusumSpec checks it for any split), which is why
+  * one closed-input fold stands in for an incremental monitor. The
+  * detector does NOT reset after an alarm — `alarm_now` mirrors
+  * `cusumDetect`'s column; the latched `alarmed_ever` is what a pager
+  * reads. */
 object StreamingCusum {
 
-  /** The per-bucket recurrence both the live operator and [[batchReplay]]
-    * share: pre-summed `(bucket_ts, count)` pairs fold in ts order into
-    * the doubled-unit (p, pmin, n, alarmed) state. Pure — the streaming
-    * twin IS this function applied per micro-batch. */
+  /** The per-bucket recurrence: pre-summed `(bucket_ts, count)` pairs
+    * fold in ts order into the doubled-unit (p, pmin, n, alarmed) state.
+    * Pure. */
   def foldBuckets(prev: CusumState, buckets: Seq[(Long, Long)],
       target2: Long, threshold2: Long): CusumState = {
     var p = prev.p; var pmin = prev.pmin; var n = prev.nBuckets
@@ -58,38 +52,10 @@ object StreamingCusum {
     CusumState(p, pmin, n, alarmed)
   }
 
-  /** Fold `(key, bucketTsMicros, count)` micro-batch rows into per-key
-    * CUSUM updates (OutputMode.Update). `target2` = 2k, `threshold2` =
-    * 2h — the e16 doubled-unit contract. */
-  def cusumUpdates(counts: Dataset[(String, Long, Long)],
-      target2: Long, threshold2: Long): Dataset[CusumUpdate] = {
-    require(threshold2 > 0, s"threshold2 must be positive, got $threshold2")
-    import counts.sparkSession.implicits._
-    counts.groupByKey(_._1)
-      .flatMapGroupsWithState[CusumState, CusumUpdate](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[CusumState]) =>
-          val prev = state.getOption.getOrElse(
-            CusumState(0L, 0L, 0L, alarmed = false))
-          // pre-sum per bucket_ts (collapses duplicate-ts rows like the
-          // batch groupBy does), then fold in deterministic ts order
-          val buckets = rows.toSeq.groupBy(_._2).view
-            .mapValues(_.map(_._3).sum).toSeq
-          val next = foldBuckets(prev, buckets, target2, threshold2)
-          state.update(next)
-          Iterator.single(CusumUpdate(key, next.nBuckets,
-            next.p - next.pmin, next.p - next.pmin >= threshold2,
-            next.alarmed))
-      }
-  }
-
-  /** Batch replay of the live fold (the e7/e8 doctrine): the SAME
-    * [[foldBuckets]] recurrence over the closed corpus's per-key bucket
-    * sequence — because the recurrence is per-bucket, one whole-history
-    * fold is bit-identical to any micro-batch split of it. One row per
-    * key: the final streaming state `(key, n_buckets, cusum2, alarm_now,
-    * alarmed_ever)`. Input: pre-aggregated `(key, bucket_ts, count)`. */
+  /** [[foldBuckets]] over each key's whole bucket sequence of a closed
+    * input. One row per key: the final state `(key, n_buckets, cusum2,
+    * alarm_now, alarmed_ever)`. Input: `(key, bucket_ts, count)` rows,
+    * duplicate bucket_ts rows summed first. */
   def batchReplay(counts: Dataset[(String, Long, Long)],
       target2: Long, threshold2: Long): Dataset[CusumUpdate] = {
     require(threshold2 > 0, s"threshold2 must be positive, got $threshold2")

@@ -1,50 +1,41 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** State of one monitored stream: the Misra–Gries counter table (≤ k
-  * entries), the exact processed weight, and the exact total decrement
-  * mass. PUBLIC — the state encoder's generated Java cannot call
-  * accessors of Scala-private classes. */
+/** Fold state of one key: the Misra–Gries counter table (≤ k entries),
+  * the exact processed weight, and the exact total decrement mass. */
 case class MgState(counters: Map[String, Long], processed: Long,
     spilled: Long)
 
-/** One reported heavy-hitter candidate after a micro-batch: `count_lb`
-  * is the MG counter (a LOWER bound on the item's true weight;
-  * `count_lb + spilled` upper-bounds it), `processed` the exact total
-  * weight seen, `spilled` the exact decrement mass (≤ processed/(k+1) —
-  * the MG guarantee, reported exactly rather than as the bound). */
+/** One reported heavy-hitter candidate: `count_lb` is the MG counter (a
+  * LOWER bound on the item's true weight; `count_lb + spilled`
+  * upper-bounds it), `processed` the exact total weight seen, `spilled`
+  * the exact decrement mass (≤ processed/(k+1) — the MG guarantee,
+  * reported exactly rather than as the bound). */
 case class MgUpdate(key: String, item: String, count_lb: Long,
     processed: Long, spilled: Long)
 
-/** Streaming Misra–Gries heavy hitters — the live twin of the
-  * `MisraGriesSketch` aggregate (a2_heavy_hitters): track the top items
-  * of an unbounded stream in k counters per key, with exact
-  * deterministic error accounting.
+/** Misra–Gries heavy hitters as a per-key fold (e29) — the incremental
+  * form of the `MisraGriesSketch` aggregate (a2_heavy_hitters): track the
+  * top items of a keyed weighted multiset in k counters per key, with
+  * exact deterministic error accounting.
   *
-  * Design: input is PRE-AGGREGATED `(key, item, weight)` micro-batch
-  * counts (one groupBy upstream — the stateful operator sees
-  * distinct-item-sized traffic, never raw events). The state folds each
-  * batch with the WEIGHTED MG step: add the item's weight; when the
+  * Design: input is PRE-AGGREGATED `(key, item, weight)` counts. Each
+  * batch folds with the WEIGHTED MG step: add the item's weight; when the
   * table exceeds k entries, subtract the minimum counter from every
   * entry and drop the zeros (≥ 1 entry always drops, so the table is
-  * back to ≤ k). Batch items fold in sorted order, so a replay of the
+  * back to ≤ k). Batch items fold in sorted order, so a refold of the
   * same batch sequence is bit-identical; across DIFFERENT batchings the
   * counters may differ but the sketch guarantee never does:
   * `true − spilled ≤ counter ≤ true`, with `spilled ≤ processed/(k+1)` —
   * any item heavier than processed/(k+1) is guaranteed present.
-  *
-  * Scale: state is ≤ k (item, long) pairs + two longs per key; with
-  * thousands of keys the state store holds MBs. Emission is the full
-  * counter table per batch (OutputMode.Update) — k rows per touched
-  * key. */
+  * StreamingHeavyHittersSpec checks the guarantee against exact counts,
+  * for one batch and for any split into batches. */
 object StreamingHeavyHitters {
 
-  /** The weighted Misra–Gries step both the live operator and
-    * [[batchReplay]] share: a pre-summed batch multiset folds in sorted
-    * item order into the ≤ k counter table with exact spill accounting.
-    * Pure — the streaming twin IS this function applied per micro-batch. */
+  /** The weighted Misra–Gries step: a pre-summed batch multiset folds in
+    * sorted item order into the ≤ k counter table with exact spill
+    * accounting. Pure. */
   def foldBatch(prev: MgState, batch: Seq[(String, Long)], k: Int): MgState = {
     val m = scala.collection.mutable.HashMap[String, Long](
       prev.counters.toSeq: _*)
@@ -66,32 +57,10 @@ object StreamingHeavyHitters {
     MgState(m.toMap, processed, spilled)
   }
 
-  def mgUpdates(counts: Dataset[(String, String, Long)], k: Int): Dataset[MgUpdate] = {
-    require(k >= 1, s"need a positive counter budget, got $k")
-    import counts.sparkSession.implicits._
-    counts.groupByKey(_._1)
-      .flatMapGroupsWithState[MgState, MgUpdate](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[(String, String, Long)],
-         state: GroupState[MgState]) =>
-          val prev = state.getOption.getOrElse(MgState(Map.empty, 0L, 0L))
-          // batch-local pre-sum, then the SORTED shared fold: the update
-          // is a pure function of the batch multiset, replay-stable
-          val batch = rows.toSeq.groupBy(_._2).view
-            .mapValues(_.map(_._3).sum).toSeq
-          val next = foldBatch(prev, batch, k)
-          state.update(next)
-          next.counters.toSeq.sortBy { case (i, c) => (-c, i) }.iterator
-            .map { case (i, c) => MgUpdate(key, i, c,
-              next.processed, next.spilled) }
-      }
-  }
-
-  /** Batch replay of the live fold (the e7/e8 doctrine): the SAME
-    * [[foldBatch]] step over the closed corpus's per-key item multiset
-    * as ONE batch — the final counter table for that batching, with the
-    * exact `processed`/`spilled` accounting the MG guarantee reads.
-    * One row per surviving (key, item). */
+  /** [[foldBatch]] over each key's whole item multiset of a closed input
+    * as ONE batch — the final counter table, with the exact
+    * `processed`/`spilled` accounting the MG guarantee reads. One row per
+    * surviving (key, item). */
   def batchReplay(counts: Dataset[(String, String, Long)],
       k: Int): Dataset[MgUpdate] = {
     require(k >= 1, s"need a positive counter budget, got $k")

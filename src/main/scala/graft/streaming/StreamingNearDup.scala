@@ -1,127 +1,32 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming MinHash near-dup detection: the continuous-ingest counterpart
-  * of `Dedup.minHashMd5Pairs` (d8). Each arriving document computes its
-  * md5-slice MinHash signature ROW-LOCALLY (no aggregation — the signature
-  * is a per-row expression, so the only stateful operator in the stream is
-  * the bucket store), fans out into `bands` band-key rows, and each
-  * (band, key) bucket keeps the documents seen in it. A new arrival whose
-  * full signature agrees with a stored one on ≥ `minAgree` of `k` slots
-  * emits a (doc_id, dup_of, agree) match.
+/** MinHash near-dup pairs by owning band (e7): the pair contract of
+  * `Dedup.minHashMd5Pairs` (d8) with a per-bucket cap. Each document's
+  * md5-slice MinHash signature (slot j = the minimum of 4-hex slice j
+  * over the md5s of its word `n`-gram shingles) splits into `bands` band
+  * keys; two documents are a candidate pair when some band key collides,
+  * and a pair whose full signatures agree on ≥ `minAgree` of `k` slots
+  * emits a (doc_id, dup_of, agree) row with `dup_of` the lower doc_id.
   *
-  * State bounding (the 100 TB contract): buckets expire `lateness` of EVENT
-  * time after their last arrival (event-time timeout under the watermark),
-  * and each bucket holds at most `maxBucketSize` docs — the same mega-bucket
-  * cap as the batch path (an over-full bucket is a hash pileup with no
-  * near-dup signal). Unbounded-history near-dup of a stream belongs in the
-  * batch engine by design.
-  *
-  * The same banding S-curve as batch MinHash applies: a pair agreeing on
-  * `agree/k` of slots collides in some band with probability
+  * The banding S-curve applies: a pair agreeing on `agree/k` of slots
+  * collides in some band with probability
   * 1-(1-(agree/k)^rowsPerBand)^bands.
   *
-  * A pair colliding in SEVERAL bands is emitted exactly once, by its OWNING
-  * band — the lowest band index on which the two full signatures' band keys
-  * agree, recomputable locally in every colliding bucket from the stored
-  * signatures (matching the batch twin's one-row-per-pair contract). If the
-  * owning band's bucket dropped the earlier doc to the `maxBucketSize` cap,
-  * that pair is lost, as any capped bucket's pairs already are. */
+  * A pair colliding in SEVERAL bands is emitted exactly once, by its
+  * OWNING band — the lowest band index on which the two signatures' band
+  * keys agree. StreamingNearDupSpec checks the output against an
+  * exhaustive pairwise model of this contract. */
 object StreamingNearDup {
 
-  final case class DocArrival(doc_id: Long, ts: java.sql.Timestamp,
-      band: Int, key: String, sig: Seq[String])
-  final case class Match(doc_id: Long, dup_of: Long, agree: Int)
-  /** Bucket store (public: the state encoder's generated code must reach
-    * the accessors). */
-  final case class Bucket(ids: Seq[Long], sigs: Seq[Seq[String]])
-
-  /** Row-local md5-slice MinHash signature (the d8 construction as a per-row
-    * expression): one md5 per word `n`-gram shingle, signature slot j = the
-    * minimum of 4-hex slice j over the document's shingles. */
-  def sliceSig(textCol: org.apache.spark.sql.Column, k: Int, n: Int): org.apache.spark.sql.Column = {
-    val h = transform(graft.dedup.Dedup.shingles(textCol, n), s => md5(s))
-    array((0 until k).map(j =>
-      array_min(transform(h, x => x.substr(j * 4 + 1, 4)))): _*)
-  }
-
-  /** The `bands` band keys of a signature: key b = concat of its band's
-    * slices. Shared by the streaming operator and its batch replay. */
-  def bandKeyArray(sigCol: org.apache.spark.sql.Column, k: Int, bands: Int): org.apache.spark.sql.Column = {
-    val rowsPerBand = k / bands
-    array((0 until bands).map(b => concat_ws("",
-      (0 until rowsPerBand).map(r => sigCol.getItem(b * rowsPerBand + r)): _*)): _*)
-  }
-
-  /** `docs` needs (doc_id: long, ts: timestamp, text: string). `k` md5
-    * slices grouped into `bands` bands of `k/bands` rows each. */
-  def matches(docs: DataFrame, k: Int = 8, bands: Int = 4, n: Int = 3,
-      minAgree: Int = 6, lateness: String = "1 hour",
-      maxBucketSize: Int = 50): Dataset[Match] = {
-    require(k % bands == 0, s"bands ($bands) must divide k ($k)")
-    require(k >= 1 && k <= 8, s"k 4-hex slices must fit one md5 digest, got $k")
-    import docs.sparkSession.implicits._
-    val rowsPerBand = k / bands
-    val banded = docs
-      .select(col("doc_id"), col("ts"), sliceSig(col("text"), k, n).as("sig"))
-      .select(col("doc_id"), col("ts"), col("sig"),
-        posexplode(bandKeyArray(col("sig"), k, bands)).as(Seq("band", "key")))
-      .withWatermark("ts", lateness)
-      .as[DocArrival]
-    // lowest band on which the two signatures' band keys agree — the band
-    // that OWNS (solely emits) the pair; defined whenever the pair collides
-    // anywhere, so `.get` is safe at every call site below
-    def owningBand(x: Seq[String], y: Seq[String]): Int =
-      (0 until bands).find(b => (0 until rowsPerBand)
-        .forall(r => x(b * rowsPerBand + r) == y(b * rowsPerBand + r))).get
-    banded
-      .groupByKey(a => (a.band, a.key))
-      .flatMapGroupsWithState[Bucket, Match](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (bandKey: (Int, String), rows: Iterator[DocArrival], state: GroupState[Bucket]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val arrivals = rows.toSeq.sortBy(a => (a.ts.getTime, a.doc_id))
-            var bucket = state.getOption.getOrElse(Bucket(Nil, Nil))
-            val out = Seq.newBuilder[Match]
-            arrivals.foreach { a =>
-              var i = 0
-              while (i < bucket.ids.size) {
-                if (bucket.ids(i) != a.doc_id &&
-                    owningBand(a.sig, bucket.sigs(i)) == bandKey._1) {
-                  val agree = bucket.sigs(i).zip(a.sig).count(p => p._1 == p._2)
-                  if (agree >= minAgree) out += Match(a.doc_id, bucket.ids(i), agree)
-                }
-                i += 1
-              }
-              if (bucket.ids.size < maxBucketSize && !bucket.ids.contains(a.doc_id))
-                bucket = Bucket(bucket.ids :+ a.doc_id, bucket.sigs :+ a.sig)
-            }
-            state.update(bucket)
-            // expire the bucket `lateness` past this batch's newest arrival;
-            // the timeout must sit beyond the current watermark, which the
-            // watermark delay on ts guarantees for in-order buckets
-            state.setTimeoutTimestamp(arrivals.map(_.ts.getTime).max, lateness)
-            out.result().iterator
-          }
-      }
-  }
-
-  /** Batch replay of [[matches]] over a STATIC corpus — the correctness
-    * bridge that lets the streaming operator's contract hash-verify against
-    * a SQL oracle (the e7 query): same row-local signature, same band keys,
-    * same owning-band single emission, `dup_of` = the lower doc_id (arrival
-    * order on a static frame). The watermark knob has no meaning on a
-    * closed corpus and is absent; the MEGA-BUCKET CAP is kept (batch form:
-    * drop oversized (band, key) buckets whole — a bucket of B docs is B²/2
-    * candidate pairs, and an over-full bucket is a hash pileup with no
-    * near-dup signal; cap-free, a templated corpus's candidate join
-    * explodes quadratically — measured 111 s vs ~1 s at sf0.1). A pair
-    * whose owning band was capped is dropped even if it collides
-    * elsewhere, matching the streaming contract.
+  /** The pairs of a static corpus. The MEGA-BUCKET CAP drops oversized
+    * (band, key) buckets whole — a bucket of B docs is B²/2 candidate
+    * pairs, and an over-full bucket is a hash pileup with no near-dup
+    * signal; cap-free, a templated corpus's candidate join explodes
+    * quadratically (measured 111 s vs ~1 s at sf0.1). A pair whose
+    * owning band was capped is dropped even if it collides elsewhere.
     *
     * Plan shape: one banded equi-join on (band, key) carrying the two
     * 8-slice signatures (tiny), agreement counted row-locally — the d2/d8
@@ -132,13 +37,11 @@ object StreamingNearDup {
     require(k >= 1 && k <= 8, s"k 4-hex slices must fit one md5 digest, got $k")
     // signature via explode + one grouped k-min aggregation (the proven d8
     // corpus shape: ONE md5 per shingle, map-side combining) and flat m0..mk
-    // / b0..b3 COLUMNS end to end — the row-local [[sliceSig]] HOF form
-    // inlines the md5 transform once per slot and walks interpreted lambdas
-    // k× per shingle (measured 55 s), and even array-typed plumbing keeps
-    // agreement/owning-band out of whole-stage codegen (7 s); the flat
-    // when-chain form runs ~2 s at sf0.1. sliceSig remains the right form
-    // for streams, where the signature must come from a single arriving
-    // row. Same contract (spec'd ≡ the live operator).
+    // / b0..b3 COLUMNS end to end — a row-local higher-order-function
+    // signature inlines the md5 transform once per slot and walks
+    // interpreted lambdas k× per shingle (measured 55 s), and even
+    // array-typed plumbing keeps agreement/owning-band out of whole-stage
+    // codegen (7 s); the flat when-chain form runs ~2 s at sf0.1.
     val rowsPerBand = k / bands
     val ex = docs
       .select(col("doc_id"), explode(graft.dedup.Dedup.shingles(col("text"), n)).as("s"))

@@ -2,151 +2,47 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+
+case class UpsertChange(k: Long, ts: java.sql.Timestamp, v: String)
 
 class EventStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private val schema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType)))
+  private def events(rows: (Long, String, Long, String, Double)*) =
+    rows.toDF("event_id", "ts_s", "user_id", "event_type", "value")
+      .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
 
-  private def batchEvents = Seq(
-    (1L, "2024-01-01 00:10:00", 1L, "click", 1.0),
-    (2L, "2024-01-01 00:40:00", 1L, "click", 2.0),
-    (3L, "2024-01-01 01:10:00", 2L, "view", 3.0),
-    (4L, "2024-01-01 01:20:00", 2L, "click", 4.0)
-  ).toDF("event_id", "ts_s", "user_id", "event_type", "value")
-    .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
-
-  test("hourlyRollup batch semantics: tumbling windows per event_type") {
-    val out = EventStream.hourlyRollup(batchEvents)
-      .orderBy($"window_start", $"event_type")
-      .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(out.toSeq == Seq(
-      ("2024-01-01 00:00:00.0", "click", 2L, 3.0),
-      ("2024-01-01 01:00:00.0", "click", 1L, 4.0),
-      ("2024-01-01 01:00:00.0", "view", 1L, 3.0)))
-  }
-
-  test("same rollup code runs as a real stream over a file source") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    batchEvents.select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .write.mode("overwrite").parquet(dir)
-    val q = EventStream.startFileStream(spark, dir, "rollup_test", schema)
-    try {
-      q.processAllAvailable()
-      // watermark append-mode: windows still open emit nothing yet — the
-      // stream surface is exercised; completeness is the batch twin above
-      assert(spark.table("rollup_test").columns.toSeq ==
-        Seq("window_start", "event_type", "n", "total"))
-    } finally q.stop()
-  }
-
-  test("event-time sessionization closes sessions after the gap, via a real stream") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[EventStream.SessionEvent]
-    val q = EventStream.sessionizeEventTime(input.toDS(), gapMs = 10 * 60 * 1000L)
-      .writeStream.format("memory").queryName("sessions_test")
-      .outputMode("append").start()
-    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    try {
-      input.addData(
-        EventStream.SessionEvent(1L, ts(0), 2.0),
-        EventStream.SessionEvent(1L, ts(5), 3.0))
-      q.processAllAvailable()
-      // advance event time far past gap + watermark → session 1 closes
-      input.addData(EventStream.SessionEvent(2L, java.sql.Timestamp.valueOf("2024-01-01 13:00:00"), 1.0))
-      q.processAllAvailable()
-      input.addData(EventStream.SessionEvent(2L, java.sql.Timestamp.valueOf("2024-01-01 16:00:00"), 1.0))
-      q.processAllAvailable()
-      val closed = spark.table("sessions_test")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(closed.contains((1L, 2L, 5.0)), closed.mkString(","))
-    } finally q.stop()
-  }
+  private def ev(id: Long, m: Int, u: Long, t: String, v: Double) =
+    (id, f"2024-01-01 10:$m%02d:00", u, t, v)
 
   test("attributedJoin batch semantics: same user within window, boundaries inclusive") {
-    def ev(id: Long, m: Int, u: Long, t: String, v: Double) =
-      (id, f"2024-01-01 10:$m%02d:00", u, t, v)
-    val events = Seq(
+    val e = events(
       ev(1, 0, 1, "view", 1.0),
       ev(2, 15, 1, "purchase", 10.0),  // in window of view 1
       ev(3, 30, 1, "purchase", 20.0),  // boundary: exactly +30 min → included
       ev(4, 45, 1, "purchase", 30.0),  // outside window
-      ev(5, 10, 2, "purchase", 40.0)   // other user
-    ).toDF("event_id", "ts_s", "user_id", "event_type", "value")
-      .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
+      ev(5, 10, 2, "purchase", 40.0))  // other user
     val got = EventStream.attributedJoin(
-        events.where($"event_type" === "view"),
-        events.where($"event_type" === "purchase"), "30 minutes")
+        e.where($"event_type" === "view"),
+        e.where($"event_type" === "purchase"), "30 minutes")
       .select($"l_event_id", $"r_event_id").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 2L), (1L, 3L)))
   }
 
-  test("attributedJoin runs as a real stream-stream join with watermarks") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[EventStream.SessionEvent]
-    val purchases = MemoryStream[EventStream.SessionEvent]
-    def frame(ds: org.apache.spark.sql.Dataset[EventStream.SessionEvent]) =
-      ds.toDF().select($"user_id".as("event_id"), $"ts", $"user_id", $"value")
-        .withWatermark("ts", "1 hour")
-    val joined = EventStream.attributedJoin(
-      frame(views.toDS()), frame(purchases.toDS()), "30 minutes")
-    val q = joined.writeStream.format("memory").queryName("attr_test")
-      .outputMode("append").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    try {
-      views.addData(EventStream.SessionEvent(1L, ts("2024-01-01 10:00:00"), 1.0))
-      purchases.addData(EventStream.SessionEvent(1L, ts("2024-01-01 10:15:00"), 9.0))
-      q.processAllAvailable()
-      // advance both watermarks well past the join window so results emit
-      views.addData(EventStream.SessionEvent(9L, ts("2024-01-01 14:00:00"), 0.0))
-      purchases.addData(EventStream.SessionEvent(9L, ts("2024-01-01 15:00:00"), 0.0))
-      q.processAllAvailable()
-      val got = spark.table("attr_test")
-        .select($"user_id", $"l_value", $"r_value")
-        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-      assert(got.contains((1L, 1.0, 9.0)), got.mkString(","))
-    } finally q.stop()
-  }
-
-  test("attributedJoinOuter emits unconverted views with null purchase " +
-      "columns only after the watermark passes the window") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[EventStream.SessionEvent]
-    val purchases = MemoryStream[EventStream.SessionEvent]
-    def frame(ds: org.apache.spark.sql.Dataset[EventStream.SessionEvent]) =
-      ds.toDF().select($"user_id".as("event_id"), $"ts", $"user_id", $"value")
-        .withWatermark("ts", "1 hour")
-    val joined = EventStream.attributedJoinOuter(
-      frame(views.toDS()), frame(purchases.toDS()), "30 minutes")
-    val q = joined.writeStream.format("memory").queryName("attr_outer_test")
-      .outputMode("append").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    try {
-      // user 1 converts; user 2 views and never purchases
-      views.addData(EventStream.SessionEvent(1L, ts("2024-01-01 10:00:00"), 1.0))
-      views.addData(EventStream.SessionEvent(2L, ts("2024-01-01 10:05:00"), 2.0))
-      purchases.addData(EventStream.SessionEvent(1L, ts("2024-01-01 10:15:00"), 9.0))
-      q.processAllAvailable()
-      // before the watermark closes user 2's window, its null row may NOT
-      // have emitted as final — advance both watermarks far past it
-      views.addData(EventStream.SessionEvent(9L, ts("2024-01-01 14:00:00"), 0.0))
-      purchases.addData(EventStream.SessionEvent(9L, ts("2024-01-01 15:00:00"), 0.0))
-      q.processAllAvailable()
-      val got = spark.table("attr_outer_test")
-        .select($"user_id", $"l_value", $"r_value")
-        .collect().map(r => (r.getLong(0), r.getDouble(1),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
-      assert(got.contains((1L, 1.0, Some(9.0))), got.mkString(","))
-      assert(got.contains((2L, 2.0, None)),
-        s"unconverted view must emit with null attribution: ${got.mkString(",")}")
-    } finally q.stop()
+  test("attributedJoinOuter keeps unconverted views with null r_* columns") {
+    val e = events(
+      ev(1, 0, 1, "view", 1.0),
+      ev(2, 15, 1, "purchase", 9.0),   // converts view 1
+      ev(3, 5, 2, "view", 2.0),        // user 2 never purchases
+      ev(4, 0, 3, "view", 3.0),
+      ev(5, 45, 3, "purchase", 4.0))   // user 3 purchases outside the window
+    val got = EventStream.attributedJoinOuter(
+        e.where($"event_type" === "view"),
+        e.where($"event_type" === "purchase"), "30 minutes")
+      .select($"user_id", $"l_value", $"r_value")
+      .collect().map(r => (r.getLong(0), r.getDouble(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
+    assert(got == Set((1L, 1.0, Some(9.0)), (2L, 2.0, None), (3L, 3.0, None)))
   }
 
   test("sessionize maintains per-user state and counts") {
@@ -157,70 +53,38 @@ class EventStreamSpec extends SparkSpec {
     assert(updates(2L) == ((1L, 5.0)))
   }
 
-  case class Doc(doc_id: Long, ts: java.sql.Timestamp, text: String)
-  case class Change(k: Long, ts: java.sql.Timestamp, v: String)
-
-  test("streamingExactDedup keeps first-seen content across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val q = EventStream.streamingExactDedup(input.toDF(), lateness = "1 hour")
-      .writeStream.format("memory").queryName("dedup_test")
-      .outputMode("append").start()
+  test("exactDedupReplay keeps the first row per content hash by (ts, id)") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    try {
-      input.addData(
-        Doc(1L, ts("2024-01-01 10:00:00"), "the same text"),
-        Doc(2L, ts("2024-01-01 10:01:00"), "the same text"),
-        Doc(3L, ts("2024-01-01 10:02:00"), "something else"))
-      q.processAllAvailable()
-      // a later micro-batch duplicate within the watermark is also dropped
-      input.addData(Doc(4L, ts("2024-01-01 10:30:00"), "the same text"))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_test").select($"doc_id")
-        .as[Long].collect().toSet
-      assert(ids == Set(1L, 3L), ids.mkString(","))
-      // the batch replay on the same closed corpus keeps the same survivors
-      val replay = EventStream.exactDedupReplay(Seq(
-          (1L, ts("2024-01-01 10:00:00"), "the same text"),
-          (2L, ts("2024-01-01 10:01:00"), "the same text"),
-          (3L, ts("2024-01-01 10:02:00"), "something else"),
-          (4L, ts("2024-01-01 10:30:00"), "the same text"))
-          .toDF("doc_id", "ts", "text"))
-        .select($"doc_id").as[Long].collect().toSet
-      assert(replay == ids, s"replay $replay vs live $ids")
-    } finally q.stop()
+    val got = EventStream.exactDedupReplay(Seq(
+        (1L, ts("2024-01-01 10:00:00"), "the same text"),
+        (2L, ts("2024-01-01 10:01:00"), "the same text"),
+        (3L, ts("2024-01-01 10:02:00"), "something else"),
+        (4L, ts("2024-01-01 10:30:00"), "the same text"),
+        (5L, ts("2024-01-01 10:02:00"), "something else")) // ts tie: id 3 wins
+        .toDF("doc_id", "ts", "text"))
+      .select($"doc_id").as[Long].collect().toSet
+    assert(got == Set(1L, 3L))
   }
 
-  test("upsertSink merges each micro-batch into a SnapshotTable (last write per key wins)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+  test("upsertBatch: last write per key wins within and across batches") {
     def ts(sec: Int) = new java.sql.Timestamp(1700000000000L + sec * 1000L)
+    val S = graft.sources.SnapshotTable
     val root = java.nio.file.Files.createTempDirectory("graft-upsert")
       .resolve("tbl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-upsert-ckpt").toString
-    val input = MemoryStream[Change]
-    val q = EventStream.upsertSink(input.toDF(), root, Seq("k"), "ts", ckpt)
-    try {
-      // batch 1: two keys, plus an intra-batch duplicate for k=1 where the
-      // NEWER ts must win inside the same micro-batch
-      input.addData(Change(1L, ts(1), "a1"), Change(1L, ts(5), "a2"),
-        Change(2L, ts(2), "b1"))
-      q.processAllAvailable()
-      assert(graft.sources.SnapshotTable.read(spark, root)
-        .select($"k", $"v").as[(Long, String)].collect().toSet
-        == Set((1L, "a2"), (2L, "b1")))
-      // batch 2: update one key, insert another — cross-batch last write wins
-      input.addData(Change(2L, ts(9), "b2"), Change(3L, ts(3), "c1"))
-      q.processAllAvailable()
-      assert(graft.sources.SnapshotTable.read(spark, root)
-        .select($"k", $"v").as[(Long, String)].collect().toSet
-        == Set((1L, "a2"), (2L, "b2"), (3L, "c1")))
-      // two committed versions, both time-travelable
-      assert(graft.sources.SnapshotTable.latestVersion(root) == 2)
-      assert(graft.sources.SnapshotTable.read(spark, root, Some(1))
-        .select($"k", $"v").as[(Long, String)].collect().toSet
-        == Set((1L, "a2"), (2L, "b1")))
-    } finally q.stop()
+    def content(v: Option[Int] = None) = S.read(spark, root, v)
+      .select($"k", $"v").as[(Long, String)].collect().toSet
+    // batch 0: two keys, plus an intra-batch duplicate for k=1 where the
+    // NEWER ts must win inside the same batch
+    EventStream.upsertBatch(Seq(UpsertChange(1L, ts(1), "a1"),
+      UpsertChange(1L, ts(5), "a2"), UpsertChange(2L, ts(2), "b1")).toDF(),
+      root, Seq("k"), "ts", "app", 0L)
+    assert(content() == Set((1L, "a2"), (2L, "b1")))
+    // batch 1: update one key, insert another — cross-batch last write wins
+    EventStream.upsertBatch(Seq(UpsertChange(2L, ts(9), "b2"),
+      UpsertChange(3L, ts(3), "c1")).toDF(), root, Seq("k"), "ts", "app", 1L)
+    assert(content() == Set((1L, "a2"), (2L, "b2"), (3L, "c1")))
+    // two committed versions, both time-travelable
+    assert(S.latestVersion(root) == 2)
+    assert(content(Some(1)) == Set((1L, "a2"), (2L, "b1")))
   }
 }

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 class StreamingHeavyHittersSpec extends SparkSpec {
   import spark.implicits._
@@ -12,93 +14,36 @@ class StreamingHeavyHittersSpec extends SparkSpec {
       (1 to 40).map(i => (s"warm${i % 4}", 3L)) ++
       (1 to 120).map(i => (s"cold$i", 1L))
 
+  private val truth: Map[String, Long] =
+    workload.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
+  private val total = workload.map(_._2).sum
+
+  /** The Misra–Gries guarantee of one key's final counter table
+    * `(item, count_lb, processed, spilled)` against exact counts. */
+  private def assertGuarantee(finals: Seq[(String, Long, Long, Long)],
+      scale: Long, k: Int, who: String): Unit = {
+    assert(finals.nonEmpty && finals.length <= k, s"$who: counter budget")
+    val (_, _, processed, spilled) = finals.head
+    assert(finals.forall(f => f._3 == processed && f._4 == spilled), who)
+    assert(processed == total * scale, s"$who: exact processed weight")
+    assert(spilled * (k + 1) <= processed, s"$who: spill bound processed/(k+1)")
+    finals.foreach { case (item, lb, _, sp) =>
+      assert(lb <= truth(item) * scale, s"$who/$item counter must lower-bound truth")
+      assert(lb >= truth(item) * scale - sp, s"$who/$item within the spill band")
+    }
+    // the dominant item is guaranteed present and top-ranked
+    assert(finals.maxBy(_._2)._1 == "hot", s"$who keeps the hot item")
+  }
+
   test("streaming MG: lower-bound counters, exact spill accounting, k cap") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, String, Long)]
-    val q = StreamingHeavyHitters.mgUpdates(input.toDS(), k = 8)
-      .writeStream.format("memory").queryName("mg_test")
-      .outputMode("update").start()
-    try {
-      val batches = workload.grouped(50).toSeq
-      batches.foreach { b =>
-        input.addData(b.map { case (i, w) => ("s", i, w) }: _*)
-        q.processAllAvailable()
-      }
-      val rows = spark.table("mg_test")
-        .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3),
-          r.getLong(4)))
-      val processedMax = rows.map(_._3).max
-      val finals = rows.filter(_._3 == processedMax)
-      val total = workload.map(_._2).sum
-      assert(processedMax == total, "exact processed weight")
-      assert(finals.length <= 8, "counter budget respected")
-      val spilled = finals.head._4
-      assert(spilled <= total / 9, "MG spill bound: processed/(k+1)")
-      val truth = workload.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-      finals.foreach { case (item, lb, _, sp) =>
-        assert(lb <= truth(item), s"$item counter must lower-bound truth")
-        assert(lb >= truth(item) - sp, s"$item within the spill band")
-      }
-      // the dominant item is guaranteed present and top-ranked
-      assert(finals.maxBy(_._2)._1 == "hot")
-    } finally q.stop()
-  }
-
-  test("streaming MG: guarantee holds under a different batch split; keys independent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, String, Long)]
-    val q = StreamingHeavyHitters.mgUpdates(input.toDS(), k = 8)
-      .writeStream.format("memory").queryName("mg_split_test")
-      .outputMode("update").start()
-    try {
-      // one giant batch for key a, item-at-a-time for key b — same data
-      input.addData(workload.map { case (i, w) => ("a", i, w) }: _*)
-      q.processAllAvailable()
-      workload.grouped(7).foreach { b =>
-        input.addData(b.map { case (i, w) => ("b", i, w) }: _*)
-        q.processAllAvailable()
-      }
-      val truth = workload.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-      val total = workload.map(_._2).sum
-      Seq("a", "b").foreach { key =>
-        val rows = spark.table("mg_split_test")
-          .collect().filter(_.getString(0) == key)
-          .map(r => (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-        val processedMax = rows.map(_._3).max
-        assert(processedMax == total, s"key $key processed")
-        val finals = rows.filter(_._3 == processedMax)
-        assert(finals.length <= 8)
-        finals.foreach { case (item, lb, _, sp) =>
-          assert(lb <= truth(item) && lb >= truth(item) - sp, s"$key/$item")
-        }
-        assert(finals.maxBy(_._2)._1 == "hot", s"key $key keeps the hot item")
-      }
-    } finally q.stop()
-  }
-
-  test("batchReplay equals the live single-batch fold (shared foldBatch)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val replay = StreamingHeavyHitters.batchReplay(
-      workload.map { case (i, w) => ("s", i, w) }.toDS(), k = 8)
-      .collect().map(u => (u.item, u.count_lb, u.processed, u.spilled)).toSet
-    val input = MemoryStream[(String, String, Long)]
-    val q = StreamingHeavyHitters.mgUpdates(input.toDS(), k = 8)
-      .writeStream.format("memory").queryName("mg_br_test")
-      .outputMode("update").start()
-    try {
-      // ONE batch: the live fold sees the same multiset as batchReplay,
-      // so the table is bit-identical (across different batchings only
-      // the guarantee holds, not table equality — the split test above)
-      input.addData(workload.map { case (i, w) => ("s", i, w) }: _*)
-      q.processAllAvailable()
-      val live = spark.table("mg_br_test")
-        .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3),
-          r.getLong(4))).toSet
-      assert(replay == live)
-    } finally q.stop()
+    // batchReplay against exact counts, two keys at different weights
+    val rows = workload.map { case (i, w) => ("s", i, w) } ++
+      workload.map { case (i, w) => ("t", i, w * 3) }
+    val got = StreamingHeavyHitters.batchReplay(rows.toDS(), k = 8).collect()
+    Seq("s" -> 1L, "t" -> 3L).foreach { case (key, scale) =>
+      assertGuarantee(got.filter(_.key == key).toSeq
+        .map(u => (u.item, u.count_lb, u.processed, u.spilled)), scale, 8, key)
+    }
   }
 
   test("batchReplay over pre-summed (key,item) cells equals raw-row replay") {
@@ -115,5 +60,29 @@ class StreamingHeavyHittersSpec extends SparkSpec {
         .collect().map(u => (u.key, u.item, u.count_lb, u.processed,
           u.spilled)).toSet
     assert(run(raw) == run(summed))
+  }
+
+  private def samples[T](g: Gen[T], n: Int): Seq[T] =
+    (1 to n).map(i => g.pureApply(Gen.Parameters.default, Seed(i.toLong)))
+
+  test("foldBatch keeps the MG guarantee under any batch split of the workload") {
+    // across batchings the counters may differ; the guarantee may not
+    val gen = for {
+      order <- Gen.long
+      cuts <- Gen.listOf(Gen.choose(0, workload.length))
+      k <- Gen.choose(4, 12)
+    } yield (order, cuts.distinct.sorted, k)
+    samples(gen, 100).foreach { case (order, cuts, k) =>
+      val arrival = new scala.util.Random(order).shuffle(workload)
+      val st = (0 +: cuts).zip(cuts :+ arrival.length)
+        .foldLeft(MgState(Map.empty, 0L, 0L)) { case (s, (a, b)) =>
+          // the batch-local pre-sum batchReplay does before folding
+          val batch = arrival.slice(a, b).groupBy(_._1).view
+            .mapValues(_.map(_._2).sum).toSeq
+          StreamingHeavyHitters.foldBatch(s, batch, k)
+        }
+      assertGuarantee(st.counters.toSeq.map { case (i, c) =>
+        (i, c, st.processed, st.spilled) }, 1L, k, s"k=$k cuts=$cuts")
+    }
   }
 }

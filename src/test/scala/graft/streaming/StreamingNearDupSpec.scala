@@ -6,111 +6,74 @@ import org.apache.spark.sql.functions._
 class StreamingNearDupSpec extends SparkSpec {
   import spark.implicits._
 
-  case class Doc(doc_id: Long, ts: java.sql.Timestamp, text: String)
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
-
   private val base = "the quick brown fox jumps over the lazy dog and then " +
     "runs far away into the deep dark forest tonight"
+  private val unrelated = "completely unrelated content about spark catalyst " +
+    "plans and shuffle exchanges in distributed queries"
 
-  test("near-identical docs match across micro-batches; unrelated do not") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val q = StreamingNearDup.matches(input.toDF(), minAgree = 6)
-      .writeStream.format("memory").queryName("neardup_test")
-      .outputMode("append").start()
-    try {
-      input.addData(Doc(1L, ts("2024-01-01 10:00:00"), base))
-      q.processAllAvailable()
-      input.addData(
-        // one word changed -> most shingles shared -> high slot agreement
-        Doc(2L, ts("2024-01-01 10:05:00"), base.replace("dark", "damp")),
-        Doc(3L, ts("2024-01-01 10:06:00"),
-          "completely unrelated content about spark catalyst plans and "
-            + "shuffle exchanges in distributed queries"))
-      q.processAllAvailable()
-      // one row per PAIR (not per colliding band): no .distinct needed
-      val got = spark.table("neardup_test").as[StreamingNearDup.Match]
-        .collect().map(m => (m.doc_id, m.dup_of)).toSeq
-      assert(got == Seq((2L, 1L)), got.toString)
-    } finally q.stop()
+  private def pairs(docs: Seq[(Long, String)], minAgree: Int): Set[(Long, Long, Int)] =
+    StreamingNearDup.batchReplay(docs.toDF("doc_id", "text"), minAgree = minAgree)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+
+  /** The d8 signature computed driver-side: md5 per word 3-gram shingle
+    * (the whole text when it has fewer than 3 words), slot j = the minimum
+    * of 4-hex slice j over the shingles. */
+  private def signature(text: String): Seq[String] = {
+    val toks = text.trim.split("\\s+").filter(_.nonEmpty).toSeq
+    val sh = if (toks.length < 3) Seq(toks.mkString(" "))
+      else toks.sliding(3).map(_.mkString(" ")).toSeq
+    val hex = sh.map { s =>
+      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString }
+    (0 until 8).map(j => hex.map(_.substring(j * 4, j * 4 + 4)).min)
   }
 
-  test("exact duplicate agrees on all k slots in every band") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val q = StreamingNearDup.matches(input.toDF(), minAgree = 8)
-      .writeStream.format("memory").queryName("neardup_exact")
-      .outputMode("append").start()
-    try {
-      input.addData(Doc(1L, ts("2024-01-01 10:00:00"), base))
-      q.processAllAvailable()
-      input.addData(Doc(2L, ts("2024-01-01 10:01:00"), base))
-      q.processAllAvailable()
-      val got = spark.table("neardup_exact").as[StreamingNearDup.Match].collect()
-      // all 4 bands collide, but band 0 OWNS the pair -> exactly one emission
-      assert(got.toSeq == Seq(StreamingNearDup.Match(2L, 1L, 8)), got.mkString(","))
-    } finally q.stop()
+  /** Exhaustive pairwise model of the e7 contract (k = 8, 4 bands of 2
+    * slots, cap 50): every pair of docs, its owning band = the lowest band
+    * whose keys agree, kept when that (band, key) bucket holds ≤ 50 docs
+    * and ≥ `minAgree` slots agree; `dup_of` is the lower id. */
+  private def model(docs: Seq[(Long, String)], minAgree: Int): Set[(Long, Long, Int)] = {
+    val sigs = docs.map { case (id, t) => id -> signature(t) }
+    def keys(sig: Seq[String]) = sig.grouped(2).map(_.mkString).toSeq
+    val bucketSize = sigs.flatMap { case (_, s) => keys(s).zipWithIndex }
+      .groupBy(identity).view.mapValues(_.size).toMap
+    (for {
+      (a, sa) <- sigs; (b, sb) <- sigs if a < b
+      owning <- (0 until 4).find(bd => keys(sa)(bd) == keys(sb)(bd))
+      if bucketSize((keys(sa)(owning), owning)) <= 50
+      agree = sa.zip(sb).count(p => p._1 == p._2)
+      if agree >= minAgree
+    } yield (b, a, agree)).toSet
   }
 
-  test("batchReplay equals the streaming operator's emissions on the same corpus") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+  test("batchReplay equals an exhaustive pairwise model on the same corpus") {
     val docs = Seq(
       (1L, base),
       (2L, base.replace("dark", "damp")),
-      (3L, "completely unrelated content about spark catalyst plans and " +
-        "shuffle exchanges in distributed queries"),
+      (3L, unrelated),
       (4L, base), // exact dup of 1 (and near-dup of 2)
       (5L, "another unrelated short text"))
-    val input = MemoryStream[Doc]
-    val q = StreamingNearDup.matches(input.toDF(), minAgree = 6)
-      .writeStream.format("memory").queryName("neardup_replay")
-      .outputMode("append").start()
-    try {
-      // arrival order = doc_id order, one batch per doc (worst-case state churn)
-      docs.zipWithIndex.foreach { case ((id, text), i) =>
-        input.addData(Doc(id, ts(f"2024-01-01 10:${i}%02d:00"), text))
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("neardup_replay").as[StreamingNearDup.Match]
-        .collect().map(m => (m.doc_id, m.dup_of, m.agree)).toSet
-      val replayed = StreamingNearDup.batchReplay(
-          docs.toDF("doc_id", "text"), minAgree = 6)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(streamed == replayed, s"stream $streamed vs replay $replayed")
-      assert(replayed.nonEmpty)
-    } finally q.stop()
+    val expected = model(docs, minAgree = 6)
+    assert(pairs(docs, minAgree = 6) == expected)
+    assert(expected.contains((4L, 1L, 8)) && expected.exists(_._1 == 2L),
+      s"the corpus must exercise exact and near duplicates: $expected")
   }
 
-  test("bucket state expires past the watermark: an old doc stops matching") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val q = StreamingNearDup.matches(input.toDF(), minAgree = 6, lateness = "1 hour")
-      .writeStream.format("memory").queryName("neardup_expiry")
-      .outputMode("append").start()
-    try {
-      input.addData(Doc(1L, ts("2024-01-01 10:00:00"), base))
-      q.processAllAvailable()
-      // an unrelated doc 3h later pushes the watermark to ~12:00 — past
-      // doc 1's bucket timeout (10:00 + 1h), so its state is reclaimed
-      input.addData(Doc(2L, ts("2024-01-01 13:00:00"),
-        "completely unrelated content about spark catalyst plans and " +
-          "shuffle exchanges in distributed queries"))
-      q.processAllAvailable()
-      // an exact duplicate of doc 1 arriving now finds NO stored signature:
-      // bounded state means old near-dups are a batch job, not stream state
-      input.addData(Doc(3L, ts("2024-01-01 13:30:00"), base))
-      q.processAllAvailable()
-      val got = spark.table("neardup_expiry").as[StreamingNearDup.Match].collect()
-      assert(got.isEmpty, got.mkString(","))
-    } finally q.stop()
+  test("batchReplay: near-identical docs match; unrelated do not") {
+    // one word changed -> most shingles shared -> high slot agreement
+    val got = pairs(Seq((1L, base), (2L, base.replace("dark", "damp")),
+      (3L, unrelated)), minAgree = 6)
+    assert(got.map(p => (p._1, p._2)) == Set((2L, 1L)), got.toString)
+  }
+
+  test("exact duplicate agrees on all k slots in every band") {
+    // all 4 bands collide, but band 0 OWNS the pair -> exactly one row
+    val got = pairs(Seq((1L, base), (2L, base)), minAgree = 8)
+    assert(got == Set((2L, 1L, 8)), got.toString)
   }
 
   test("signature agreement matches the batch d8 operator on the same docs") {
-    // the streaming signature (row-local) must equal the batch signature
+    // the row-local signature must equal the batch signature
     // (aggregation-based) — same shingles, same md5 slices
     val docs = Seq((1L, base), (2L, base.replace("dark", "damp")))
       .toDF("doc_id", "text")
@@ -123,5 +86,7 @@ class StreamingNearDupSpec extends SparkSpec {
     val sigs = docs.select(sig.as("sig")).as[Seq[String]].collect()
     val streamAgree = sigs(0).zip(sigs(1)).count(p => p._1 == p._2)
     assert(streamAgree == batchAgree)
+    // and the driver-side model signature the pairwise check relies on
+    assert(sigs.toSeq == Seq(signature(base), signature(base.replace("dark", "damp"))))
   }
 }

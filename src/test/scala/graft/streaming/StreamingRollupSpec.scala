@@ -25,59 +25,47 @@ class StreamingRollupSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2).toPlainString))
       .toSet
 
-  test("rollupSink keeps the summary in lockstep with the upserted base") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+  test("rollupBatch keeps the summary in lockstep with the base over 4 batch ids") {
     val dir = java.nio.file.Files.createTempDirectory("graft-rollup")
     val root = dir.resolve("base").toString
     val sroot = dir.resolve("sum").toString
-    val ckpt = dir.resolve("ckpt").toString
-    val input = MemoryStream[RollupChange]
-    val q = EventStream.rollupSink(input.toDF(), root, sroot,
-      Seq("k"), "ts", Seq("grp"), Seq("amt" -> "total"), ckpt)
-    try {
-      // batch 1: seeds base AND summary (intra-batch dup: newer ts wins)
-      input.addData(RollupChange(1L, ts(1), "a", 10.00),
-        RollupChange(1L, ts(5), "a", 12.00), RollupChange(2L, ts(2), "b", 3.00))
-      q.processAllAvailable()
-      assert(summaryRows(sroot) == Set(("a", 1L, "12.00"), ("b", 1L, "3.00")))
-      // batch 2: key 1 MOVES group a→b (preimage −a, postimage +b), key 3
+    val batches = Seq(
+      // batch 0 seeds base AND summary (intra-batch dup: newer ts wins)
+      Seq(RollupChange(1L, ts(1), "a", 10.00), RollupChange(1L, ts(5), "a", 12.00),
+        RollupChange(2L, ts(2), "b", 3.00)),
+      // batch 1: key 1 MOVES group a→b (preimage −a, postimage +b), key 3
       // inserts into a
-      input.addData(RollupChange(1L, ts(9), "b", 7.00),
-        RollupChange(3L, ts(8), "a", 1.50))
-      q.processAllAvailable()
-      assert(summaryRows(sroot) == Set(("a", 1L, "1.50"), ("b", 2L, "10.00")))
-      assert(summaryRows(sroot) == batchRecompute(root))
-      // batch 3: pure update within a group
-      input.addData(RollupChange(2L, ts(12), "b", 4.00))
-      q.processAllAvailable()
-      assert(summaryRows(sroot) == Set(("a", 1L, "1.50"), ("b", 2L, "11.00")))
-      assert(summaryRows(sroot) == batchRecompute(root))
-    } finally q.stop()
+      Seq(RollupChange(1L, ts(9), "b", 7.00), RollupChange(3L, ts(8), "a", 1.50)),
+      // batch 2: pure update within a group
+      Seq(RollupChange(2L, ts(12), "b", 4.00)),
+      // batch 3: key 3 leaves a, which empties the group
+      Seq(RollupChange(3L, ts(14), "b", 0.50)))
+    val expected = Seq(
+      Set(("a", 1L, "12.00"), ("b", 1L, "3.00")),
+      Set(("a", 1L, "1.50"), ("b", 2L, "10.00")),
+      Set(("a", 1L, "1.50"), ("b", 2L, "11.00")),
+      Set(("b", 3L, "11.50")))
+    batches.zip(expected).zipWithIndex.foreach { case ((b, want), id) =>
+      EventStream.rollupBatch(b.toDF(), root, sroot, Seq("k"), "ts",
+        Seq("grp"), Seq("amt" -> "total"), "app", id.toLong)
+      assert(summaryRows(sroot) == want, s"after batch $id")
+      assert(summaryRows(sroot) == batchRecompute(root), s"after batch $id")
+    }
   }
 
-  test("replaceSink: each micro-batch atomically owns the slices it covers") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-replace-sink")
+  test("replaceBatch: each batch atomically owns the slices it covers") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-replace-own")
     val root = dir.resolve("tbl").toString
-    val ckpt = dir.resolve("ckpt").toString
-    val input = MemoryStream[SliceRow]
-    val q = EventStream.replaceSink(input.toDF(), root, "day", ckpt)
-    try {
-      // batch 1 seeds days d1+d2
-      input.addData(SliceRow("d1", 1, 1.0), SliceRow("d1", 2, 2.0),
-        SliceRow("d2", 3, 3.0))
-      q.processAllAvailable()
-      // batch 2 RECOMPUTES d2 (row 3 gone, rows 4-5 arrive) and adds d3
-      input.addData(SliceRow("d2", 4, 4.0), SliceRow("d2", 5, 5.0),
-        SliceRow("d3", 6, 6.0))
-      q.processAllAvailable()
-      val got = SnapshotTable.read(spark, root)
-        .select("day", "id").as[(String, Long)].collect().toSet
-      assert(got == Set(("d1", 1L), ("d1", 2L), ("d2", 4L), ("d2", 5L),
-        ("d3", 6L)), s"slice ownership broke: $got")
-    } finally q.stop()
+    // batch 0 seeds days d1+d2
+    EventStream.replaceBatch(Seq(SliceRow("d1", 1, 1.0), SliceRow("d1", 2, 2.0),
+      SliceRow("d2", 3, 3.0)).toDF(), root, "day", "app", 0L)
+    // batch 1 RECOMPUTES d2 (row 3 gone, rows 4-5 arrive) and adds d3
+    EventStream.replaceBatch(Seq(SliceRow("d2", 4, 4.0), SliceRow("d2", 5, 5.0),
+      SliceRow("d3", 6, 6.0)).toDF(), root, "day", "app", 1L)
+    val got = SnapshotTable.read(spark, root)
+      .select("day", "id").as[(String, Long)].collect().toSet
+    assert(got == Set(("d1", 1L), ("d1", 2L), ("d2", 4L), ("d2", 5L),
+      ("d3", 6L)), s"slice ownership broke: $got")
   }
 
   test("replaceBatch: redelivery is content-idempotent, same-id replay skips entirely") {
@@ -135,37 +123,38 @@ class StreamingRollupSpec extends SparkSpec {
         r.getLong(3)))
       .toSet
 
-  test("rollupDistinctSink keeps count/sum/distinct in lockstep with the " +
-      "base across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
+  test("rollupDistinctBatch keeps count/sum/distinct in lockstep with the " +
+      "base over 4 batch ids") {
     val dir = java.nio.file.Files.createTempDirectory("graft-rollup-dist")
     val root = dir.resolve("base").toString
     val sroot = dir.resolve("sum").toString
     val droot = dir.resolve("det").toString
-    val ckpt = dir.resolve("ckpt").toString
-    val input = MemoryStream[RollupDistinctChange]
-    val q = EventStream.rollupDistinctSink(input.toDF(), root, sroot, droot,
-      Seq("k"), "ts", Seq("grp"), Seq("amt" -> "total"), ("cust", "custs"),
-      ckpt)
-    try {
-      // batch 1 seeds all three tables: group a has custs {7, 8}
-      input.addData(RollupDistinctChange(1L, ts(1), "a", 7L, 10.00),
+    val batches = Seq(
+      // batch 0 seeds all three tables: group a has custs {7, 8}
+      Seq(RollupDistinctChange(1L, ts(1), "a", 7L, 10.00),
         RollupDistinctChange(2L, ts(2), "a", 8L, 3.00),
-        RollupDistinctChange(3L, ts(3), "b", 7L, 1.00))
-      q.processAllAvailable()
-      assert(distinctRows(sroot) == Set(("a", 2L, "13.00", 2L),
-        ("b", 1L, "1.00", 1L)))
-      // batch 2: key 1 moves its cust 7 row a→b (7 leaves a entirely, b
+        RollupDistinctChange(3L, ts(3), "b", 7L, 1.00)),
+      // batch 1: key 1 moves its cust 7 row a→b (7 leaves a entirely, b
       // already had 7 so b's distinct must NOT grow), key 4 brings a NEW
       // cust 9 to a
-      input.addData(RollupDistinctChange(1L, ts(9), "b", 7L, 2.00),
-        RollupDistinctChange(4L, ts(8), "a", 9L, 4.00))
-      q.processAllAvailable()
-      assert(distinctRows(sroot) == Set(("a", 2L, "7.00", 2L),
-        ("b", 2L, "3.00", 1L)))
-      assert(distinctRows(sroot) == distinctBatch(root))
-    } finally q.stop()
+      Seq(RollupDistinctChange(1L, ts(9), "b", 7L, 2.00),
+        RollupDistinctChange(4L, ts(8), "a", 9L, 4.00)),
+      // batch 2: key 3 changes cust within b — 7 survives via key 1
+      Seq(RollupDistinctChange(3L, ts(10), "b", 8L, 1.00)),
+      // batch 3: key 1 leaves b, taking b's last cust-7 row with it
+      Seq(RollupDistinctChange(1L, ts(12), "a", 9L, 0.50)))
+    val expected = Seq(
+      Set(("a", 2L, "13.00", 2L), ("b", 1L, "1.00", 1L)),
+      Set(("a", 2L, "7.00", 2L), ("b", 2L, "3.00", 1L)),
+      Set(("a", 2L, "7.00", 2L), ("b", 2L, "3.00", 2L)),
+      Set(("a", 3L, "7.50", 2L), ("b", 1L, "1.00", 1L)))
+    batches.zip(expected).zipWithIndex.foreach { case ((b, want), id) =>
+      EventStream.rollupDistinctBatch(b.toDF(), root, sroot, droot, Seq("k"),
+        "ts", Seq("grp"), Seq("amt" -> "total"), ("cust", "custs"), "app",
+        id.toLong)
+      assert(distinctRows(sroot) == want, s"after batch $id")
+      assert(distinctRows(sroot) == distinctBatch(root), s"after batch $id")
+    }
   }
 
   test("crash between the detail fold and the summary fold never " +

@@ -2,103 +2,43 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.sources.SnapshotChainProbe
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** State-growth soak: the 100 TB streaming claim is that WATERMARKS BOUND
-  * STATE — dedup hashes and LSH band buckets must expire as event time
-  * advances, so state plateaus under continuous ingest instead of growing
-  * with stream length. A 100+-micro-batch replay with ever-fresh content
-  * is the direct test: if expiry is broken, state grows linearly with
-  * batches and the late-window ceiling blows past the early-window one. */
+case class SoakUpd(k: Long, ts: java.sql.Timestamp, v: Double)
+
+/** Storage soak of the per-batch CDC writer: one MERGE version per batch
+  * means file count and manifest count grow with the number of batches,
+  * and the maintenance pair (compact, then vacuum) must pin them while
+  * the captured change feed stays replayable. Batches are driven through
+  * [[EventStream.upsertBatch]] directly, one batch id each. */
 class StreamingSoakSpec extends SparkSpec {
   import spark.implicits._
 
-  case class Doc(doc_id: Long, ts: java.sql.Timestamp, text: String)
-
-  private val batches = 100
   private def tsAt(minute: Int) =
     new java.sql.Timestamp(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
       .getTime + minute * 60000L)
 
-  /** Drive `batches` micro-batches (1 event-time minute apart, `perBatch`
-    * UNIQUE docs each) through `query`, returning per-batch state rows. */
-  private def soak(input: MemoryStream[Doc], q: org.apache.spark.sql.streaming.StreamingQuery,
-      perBatch: Int): Seq[Long] = {
-    val sizes = Seq.newBuilder[Long]
-    (0 until batches).foreach { b =>
-      input.addData((0 until perBatch).map { i =>
-        // fresh content every batch: worst case for state growth — every
-        // doc inserts new state; only expiry can keep the store bounded
-        Doc(b.toLong * perBatch + i, tsAt(b),
-          s"soak batch $b doc $i " + (0 to 8).map(j => s"w${b * 31 + i * 7 + j}").mkString(" "))
-      })
-      q.processAllAvailable()
-      val p = q.lastProgress
-      if (p != null && p.stateOperators.nonEmpty)
-        sizes += p.stateOperators.map(_.numRowsTotal).sum
-    }
-    sizes.result()
-  }
-
-  /** Plateau assertion: the ceiling over the LAST quarter of the soak must
-    * not exceed the ceiling over the second quarter (post-warmup) by more
-    * than 50% — linear growth would roughly double it — and stays under an
-    * absolute bound derived from the watermark window. */
-  private def assertPlateau(sizes: Seq[Long], hardBound: Long, who: String): Unit = {
-    assert(sizes.size >= batches * 3 / 4, s"$who: too few progress samples")
-    val early = sizes.slice(sizes.size / 4, sizes.size / 2).max
-    val late = sizes.slice(sizes.size * 3 / 4, sizes.size).max
-    assert(late <= early * 3 / 2 + 10,
-      s"$who state grows: early-window max $early, late-window max $late\n$sizes")
-    assert(sizes.max <= hardBound,
-      s"$who state ${sizes.max} exceeds watermark-window bound $hardBound\n$sizes")
-  }
-
-  test("streamingExactDedup state plateaus under the watermark across 100 batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val q = EventStream.streamingExactDedup(input.toDF(), lateness = "5 minutes")
-      .writeStream.format("memory").queryName("dedup_soak")
-      .outputMode("append").start()
-    try {
-      val sizes = soak(input, q, perBatch = 3)
-      // ~3 docs/minute alive for (5 min lateness + watermark lag) ⇒ ~20-30
-      // rows steady-state; 120 is 4× headroom, far under the 300 rows of
-      // unbounded accumulation
-      assertPlateau(sizes, hardBound = 120L, "streamingExactDedup")
-    } finally q.stop()
-  }
-
-  case class Upd(k: Long, ts: java.sql.Timestamp, v: Double)
-
-  test("upsertSink + periodic compact/vacuum bounds the CDC table's file count") {
-    // the round-8 verdict's storage gap: one MERGE version per micro-batch
-    // means file count and manifest count grow with stream length — the
-    // maintenance pair (compact, then vacuum) must pin them to a constant,
-    // independent of how many batches have flowed
-    implicit val sqlCtx = spark.sqlContext
+  test("upsertBatch + periodic compact/vacuum bounds the CDC table's file count") {
+    // one MERGE version per batch means file count and manifest count grow
+    // with the number of batches — the maintenance pair (compact, then
+    // vacuum) must pin them to a constant, independent of how many
+    // batches have flowed
     import java.nio.file.{Files, Paths}
-    val input = MemoryStream[Upd]
     val root = Files.createTempDirectory("graft-cdc-soak").resolve("tbl").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt").toString
-    val q = EventStream.upsertSink(input.toDF(), root, Seq("k"), "ts", ckpt)
     val counts = Seq.newBuilder[Long]
-    try {
-      (0 until 30).foreach { b =>
-        input.addData((0 until 20).map(i =>
-          Upd((b * 20 + i) % 50, tsAt(b), b + i * 0.5)))
-        q.processAllAvailable()
-        if ((b + 1) % 10 == 0) {
-          // maintenance cycle: pack the head version's small files, then
-          // drop superseded versions + race orphans (no writer in flight
-          // here, so the age gate is safely disarmed)
-          graft.sources.SnapshotTable.compact(spark, root, targetBytes = 1L << 20)
-          graft.sources.SnapshotTable.vacuum(root, keepVersions = 1,
-            orphanRetentionMs = 0L)
-          counts += Files.list(Paths.get(root, "data")).count()
-        }
+    (0 until 30).foreach { b =>
+      EventStream.upsertBatch((0 until 20).map(i =>
+        SoakUpd((b * 20 + i) % 50, tsAt(b), b + i * 0.5)).toDF(), root,
+        Seq("k"), "ts", "app", b.toLong)
+      if ((b + 1) % 10 == 0) {
+        // maintenance cycle: pack the head version's small files, then
+        // drop superseded versions + race orphans (no writer in flight
+        // here, so the age gate is safely disarmed)
+        graft.sources.SnapshotTable.compact(spark, root, targetBytes = 1L << 20)
+        graft.sources.SnapshotTable.vacuum(root, keepVersions = 1,
+          orphanRetentionMs = 0L)
+        counts += Files.list(Paths.get(root, "data")).count()
       }
-    } finally q.stop()
+    }
     val cs = counts.result()
     assert(cs.size == 3)
     assert(cs.last <= cs.head,
@@ -110,32 +50,25 @@ class StreamingSoakSpec extends SparkSpec {
 
   test("100-batch captured-CDC sink + compact/vacuum: files and chains stay " +
       "bounded, the surviving change window replays to the exact head state") {
-    // the round-9 verdict's depth soak: maintenance (compact+vacuum) and
-    // the change feed must COEXIST — compaction packs files without
-    // polluting the feed (dataChange=false), vacuum drops superseded
-    // versions without breaking the surviving window, and the row-level
-    // captured feed replayed over that window must reconstruct the head
-    // snapshot exactly. 100 micro-batches, maintenance every 10/25.
-    implicit val sqlCtx = spark.sqlContext
+    // maintenance (compact+vacuum) and the change feed must COEXIST —
+    // compaction packs files without polluting the feed (dataChange=false),
+    // vacuum drops superseded versions without breaking the surviving
+    // window, and the row-level captured feed replayed over that window
+    // must reconstruct the head snapshot exactly. 100 batches,
+    // maintenance every 10/25.
     import java.nio.file.{Files, Paths}
     val S = graft.sources.SnapshotTable
-    val input = MemoryStream[Upd]
     val root = Files.createTempDirectory("graft-cdc-soak2").resolve("tbl").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt2").toString
-    val q = EventStream.upsertSink(input.toDF(), root, Seq("k"), "ts", ckpt,
-      changeCapture = true)
     val batches = 100
-    try {
-      (0 until batches).foreach { b =>
-        input.addData((0 until 5).map(i =>
-          Upd((b * 5 + i) % 40, tsAt(b), b + i * 0.25)))
-        q.processAllAvailable()
-        if ((b + 1) % 10 == 0)
-          S.compact(spark, root, targetBytes = 1L << 20)
-        if ((b + 1) % 25 == 0)
-          S.vacuum(root, keepVersions = 30, orphanRetentionMs = 0L)
-      }
-    } finally q.stop()
+    (0 until batches).foreach { b =>
+      EventStream.upsertBatch((0 until 5).map(i =>
+        SoakUpd((b * 5 + i) % 40, tsAt(b), b + i * 0.25)).toDF(), root,
+        Seq("k"), "ts", "app", b.toLong, changeCapture = true)
+      if ((b + 1) % 10 == 0)
+        S.compact(spark, root, targetBytes = 1L << 20)
+      if ((b + 1) % 25 == 0)
+        S.vacuum(root, keepVersions = 30, orphanRetentionMs = 0L)
+    }
     val head = S.latestVersion(root)
     assert(head > batches, s"expected >$batches commits, got $head")
     // 1. BOUNDED LAYOUT: live files pinned by compaction; on-disk data +
@@ -189,19 +122,5 @@ class StreamingSoakSpec extends SparkSpec {
     assert(replayed.keySet == headState,
       "replaying the captured window does not reconstruct the head snapshot")
     assert(headState.size == 40, s"upsert table should hold 40 keys")
-  }
-
-  test("StreamingNearDup bucket state plateaus under the watermark across 100 batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val q = StreamingNearDup.matches(input.toDF(), lateness = "5 minutes")
-      .writeStream.format("memory").queryName("neardup_soak")
-      .outputMode("append").start()
-    try {
-      val sizes = soak(input, q, perBatch = 2)
-      // 2 docs × 4 band keys per minute alive ~7 minutes ⇒ ~56 buckets
-      // steady-state; 250 is >4× headroom vs the ~800 of unbounded growth
-      assertPlateau(sizes, hardBound = 250L, "StreamingNearDup")
-    } finally q.stop()
   }
 }
