@@ -17,7 +17,8 @@ import graft.stats.{AssociationRules, FDR, Fisher, PermutationTest, Roc}
   * exercising exact-name quoting is part of parity (SURVEY §1.3).
   *
   * The two driver-bound stages do one pass per input: [[summaries]] is
-  * three aggregation collects (one per cohort) plus local tables, and
+  * three concurrent aggregation collects (one per cohort) plus local
+  * tables built on the driver, and
   * [[statsStage]] is two collects plus driver-side tests.
   */
 object MedicalPipeline {
@@ -166,9 +167,10 @@ object MedicalPipeline {
   /** The summary-table corpus (SURVEY §2.5 table): every
     * `createTableCategorized` instantiation from `dataSummaries1.scala`,
     * keyed by the reference's table name. Each cohort's tables come from
-    * ONE grouping-sets pass collected once (`Summarize.summarizeAll`):
-    * three collects in all, and 18 local tables of one partition each,
-    * instead of the reference's per-category window+distinct. */
+    * ONE grouping-sets pass collected once (`Summarize.summarizeAll`), the
+    * three cohorts' passes running concurrently: three collects in all,
+    * and 18 local relations of one partition each, unpivoted on the
+    * driver, instead of the reference's per-category window+distinct. */
   def summaries(study: DataFrame, control: DataFrame, twoPoint: DataFrame): Map[String, DataFrame] = {
     val s = study
       .withColumn("ageInYearsWhenSurgery",
@@ -286,9 +288,11 @@ object MedicalPipeline {
     val studyTotals = crossCohort.flatMap(_._2._1).map { case (a, in, out) => (a, col(in), out) }
     val controlTotals = crossCohort.flatMap(_._2._2).map { case (a, in, out) => (a, col(in), out) }
 
-    val studyAll = Summarize.summarizeAll(s, studyTables.map(_._2), studyTotals)
-    val controlAll = Summarize.summarizeAll(c, controlTables.map(_._2), controlTotals)
-    val twoPointAll = Summarize.summarizeAll(twoPoint, twoPointTables.map(_._2))
+    // the three cohorts' aggregations are independent jobs: run them together
+    val Seq(studyAll, controlAll, twoPointAll) = graft.Tables.concurrently(Seq(
+      () => Summarize.summarizeAll(s, studyTables.map(_._2), studyTotals),
+      () => Summarize.summarizeAll(c, controlTables.map(_._2), controlTotals),
+      () => Summarize.summarizeAll(twoPoint, twoPointTables.map(_._2))))
     val cross = crossCohort.map { case (name, (left, right)) =>
       val names = (left ++ right).map(_._3)
       val values = left.map(t => studyAll.all.getAs[Any](t._3)) ++

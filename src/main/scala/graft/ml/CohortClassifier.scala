@@ -1,6 +1,7 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.classification.{DecisionTreeClassificationModel, DecisionTreeClassifier}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.{Imputer, MinMaxScaler, VectorAssembler}
@@ -16,6 +17,13 @@ import org.apache.spark.sql.functions._
   * (`README.md:785-792`). Bayesian *ordering* of the sweep is an Azure
   * HyperDrive service feature, not a semantic one — the search space and
   * objective (maximize AUC) are what parity requires.
+  *
+  * The single fit the medical DAG runs ([[trainEvaluate]]) leaves the
+  * min-max scaler out: a per-feature monotone map moves no tree split, so
+  * the scaler's fit job buys nothing there. The tune paths keep it, because
+  * m2/m24 export the fitted scaler with the winning tree. Every tree fit
+  * reads its two classes from the label's metadata ([[binaryLabel]]), so
+  * none runs a `max(label)` job.
   */
 object CohortClassifier {
 
@@ -50,16 +58,19 @@ object CohortClassifier {
   /** The hyperparameter-independent feature stages: Imputer(mean) over
     * numerics → assemble (numerics + 0/1 binaries) → MinMaxScaler. Split out
     * so a tuning loop can fit them ONCE and refit only the tree per trial. */
-  def featureStages(cfg: Config): Array[org.apache.spark.ml.PipelineStage] = {
-    val imputed = cfg.numericCols.map(_ + "__imp")
-    val imputer = new Imputer().setStrategy("mean")
-      .setInputCols(cfg.numericCols.toArray).setOutputCols(imputed.toArray)
-    val assembler = new VectorAssembler()
-      .setInputCols((imputed ++ cfg.binaryCols).toArray)
-      .setOutputCol("features_raw").setHandleInvalid("keep")
+  def featureStages(cfg: Config): Array[PipelineStage] = {
     val scaler = new MinMaxScaler().setInputCol("features_raw").setOutputCol("features")
-    Array(imputer, assembler, scaler)
+    Array(imputer(cfg), assembler(imputed(cfg) ++ cfg.binaryCols, "features_raw"), scaler)
   }
+
+  private def imputed(cfg: Config): Seq[String] = cfg.numericCols.map(_ + "__imp")
+
+  private def imputer(cfg: Config): Imputer = new Imputer().setStrategy("mean")
+    .setInputCols(cfg.numericCols.toArray).setOutputCols(imputed(cfg).toArray)
+
+  private def assembler(inputs: Seq[String], out: String): VectorAssembler =
+    new VectorAssembler().setInputCols(inputs.toArray).setOutputCol(out)
+      .setHandleInvalid("keep")
 
   /** The tunable stage. */
   def treeEstimator(cfg: Config): DecisionTreeClassifier =
@@ -70,54 +81,48 @@ object CohortClassifier {
       .setMinInfoGain(cfg.minInfoGain)
       .setSeed(cfg.seed)
 
-  /** M1-M5: feature stages → DecisionTreeClassifier. */
+  /** M1-M5: feature stages → DecisionTreeClassifier. The reference's full
+    * pipeline, min-max scaler included; the spec holds [[trainEvaluate]] to
+    * it bit for bit. */
   def pipeline(cfg: Config): Pipeline =
     new Pipeline().setStages(featureStages(cfg) :+ treeEstimator(cfg))
 
   /** M4+M6: 70/30 split (reference: `train_test_split(test_size=0.30)`),
-    * fit, report accuracy + areaUnderROC + per-feature importances. */
-  def trainEvaluate(df: DataFrame, cfg: Config): Result = {
-    // the tree fit + two scaler/imputer aggregations make ~8 passes over the
-    // training data; cache it, and coalesce so per-pass task-scheduling
-    // overhead doesn't dominate when the cohort is small relative to the
-    // session's parallelism (tree stats collect per partition per depth)
-    val prepared = prepare(df, cfg)
-    val data =
-      (if (cfg.fitPartitions > 0) prepared.coalesce(cfg.fitPartitions) else prepared).cache()
-    try {
-      val Array(train, test) = data.randomSplit(Array(0.7, 0.3), cfg.seed)
-      val model = pipeline(cfg).fit(train)
-      evaluate(model, test, cfg, Map(
-        "maxDepth" -> cfg.maxDepth,
-        "minInstancesPerNode" -> cfg.minInstancesPerNode,
-        "minInfoGain" -> cfg.minInfoGain))
-    } finally data.unpersist(blocking = false)
-  }
+    * fit Imputer(mean) → assemble → tree, report accuracy + areaUnderROC +
+    * per-feature importances. `Result.model` is that
+    * `PipelineModel(imputer, assembler, tree)`.
+    *
+    * This is [[pipeline]] without its MinMaxScaler, and gives the same
+    * `Result` to the bit: scaling is a per-feature monotone map, so
+    * spark.ml's split candidates (midpoints between sorted distinct values,
+    * chosen by count), the row partitions they induce, the gain-based
+    * importances, every prediction, accuracy and AUC are unchanged by it.
+    * Dropping it saves the scaler's fit job and a vector transform per
+    * pass. The imputer stays: it changes a cohort whose numerics are null. */
+  def trainEvaluate(df: DataFrame, cfg: Config): Result =
+    splitFitEvaluate(df, cfg,
+      Array(imputer(cfg), assembler(imputed(cfg) ++ cfg.binaryCols, "features"), treeEstimator(cfg)))
 
-  /** [[trainEvaluate]] on the m4 fit path (assemble once, fit the tree
-    * directly): identical `Result` on null-free cohorts for ~1/3 the jobs.
-    * Mean imputation is a no-op without nulls, and min-max scaling is a
-    * per-feature monotone map — spark.ml's quantile-binned split candidates,
-    * the row partitions they induce, gain-based importances, predictions,
-    * accuracy and AUC are all invariant under it (the spec asserts equality
-    * against the pipeline fit) — so the imputer/scaler fit jobs are pure
-    * overhead here. Cohorts whose numerics may be null should keep
-    * [[trainEvaluate]]: there the imputer changes the data. */
-  def trainEvaluateDirect(df: DataFrame, cfg: Config): Result = {
+  /** [[trainEvaluate]] without the imputer, the m4 fit path: the same
+    * `Result` on null-free cohorts, where mean imputation is a no-op, for
+    * one job fewer. Cohorts whose numerics may be null should keep
+    * [[trainEvaluate]]. */
+  def trainEvaluateDirect(df: DataFrame, cfg: Config): Result =
+    splitFitEvaluate(df, cfg,
+      Array(assembler(cfg.numericCols ++ cfg.binaryCols, "features"), treeEstimator(cfg)))
+
+  /** 70/30 `randomSplit` of the prepared cohort, fit `stages` on the 70,
+    * evaluate on the 30. The tree fit makes several passes over the
+    * training data (tree stats collect per partition per depth): cache it,
+    * and coalesce so per-pass task-scheduling overhead doesn't dominate
+    * when the cohort is small relative to the session's parallelism. */
+  private def splitFitEvaluate(df: DataFrame, cfg: Config, stages: Array[PipelineStage]): Result = {
     val prepared = prepare(df, cfg)
     val data =
       (if (cfg.fitPartitions > 0) prepared.coalesce(cfg.fitPartitions) else prepared).cache()
     try {
       val Array(train, test) = data.randomSplit(Array(0.7, 0.3), cfg.seed)
-      val assembler = new VectorAssembler()
-        .setInputCols((cfg.numericCols ++ cfg.binaryCols).toArray)
-        .setOutputCol("features").setHandleInvalid("keep")
-      val treeModel = treeEstimator(cfg).fit(assembler.transform(train))
-      // assembler + fitted tree are both transformers: this fit runs no jobs
-      val model = new Pipeline()
-        .setStages(Array[org.apache.spark.ml.PipelineStage](assembler, treeModel))
-        .fit(train)
-      evaluate(model, test, cfg, Map(
+      evaluate(new Pipeline().setStages(stages).fit(train), test, cfg, Map(
         "maxDepth" -> cfg.maxDepth,
         "minInstancesPerNode" -> cfg.minInstancesPerNode,
         "minInfoGain" -> cfg.minInfoGain))
@@ -137,13 +142,8 @@ object CohortClassifier {
     val train =
       (if (cfg.fitPartitions > 0) prepared.coalesce(cfg.fitPartitions) else prepared).cache()
     try {
-      val assembler = new VectorAssembler()
-        .setInputCols((cfg.numericCols ++ cfg.binaryCols).toArray)
-        .setOutputCol("features").setHandleInvalid("keep")
-      val treeModel = treeEstimator(cfg).fit(assembler.transform(train))
-      val model = new Pipeline()
-        .setStages(Array[org.apache.spark.ml.PipelineStage](assembler, treeModel))
-        .fit(train)
+      val model = new Pipeline().setStages(Array(
+        assembler(cfg.numericCols ++ cfg.binaryCols, "features"), treeEstimator(cfg))).fit(train)
       evaluate(model, prepare(testDf, cfg), cfg, Map(
         "maxDepth" -> cfg.maxDepth,
         "minInstancesPerNode" -> cfg.minInstancesPerNode,
@@ -274,7 +274,7 @@ object CohortClassifier {
     // recompose the fitted feature stages + winning tree into the full
     // PipelineModel (all stages are transformers, so this fit runs no jobs)
     val bestModel = new Pipeline()
-      .setStages(Array[org.apache.spark.ml.PipelineStage](featModel, bestTree))
+      .setStages(Array[PipelineStage](featModel, bestTree))
       .fit(trainFit)
     try (evaluate(bestModel, test, cfg, Map(
       "maxDepth" -> bestP._1,
@@ -341,11 +341,10 @@ object CohortClassifier {
       labelCol: String, budget: Int = 10, parallelism: Int = 4,
       nWarmup: Int = 5, seed: Long = 0L, gamma: Double = 0.25)
       : (TreeScorer.TreeSpec, Map[String, Any], Double) = {
-    val assembler = new VectorAssembler().setInputCols(features.toArray)
-      .setOutputCol("features").setHandleInvalid("keep")
-    def feat(df: DataFrame) = assembler.transform(
+    val assemble = assembler(features, "features")
+    def feat(df: DataFrame) = binaryLabel(assemble.transform(
         df.withColumn(labelCol, col(labelCol).cast("double")))
-      .select(col("features"), col(labelCol))
+      .select(col("features"), col(labelCol)), labelCol)
     val trainFeat = feat(train).cache()
     val validFeat = feat(valid).cache()
     try {
@@ -399,29 +398,33 @@ object CohortClassifier {
     * replays as SQL CASE on any engine). The fit→export→score bridge the
     * m4 query uses to oracle the FITTED tree's inference, not a fixed one. */
   def fitTreeSpec(train: DataFrame, features: Seq[String], labelCol: String,
-      maxDepth: Int = 4, seed: Long = 0L): TreeScorer.TreeSpec = {
-    val assembler = new VectorAssembler().setInputCols(features.toArray)
-      .setOutputCol("features").setHandleInvalid("keep")
-    val tree = new DecisionTreeClassifier().setLabelCol(labelCol)
-      .setFeaturesCol("features").setMaxDepth(maxDepth).setSeed(seed)
-    val model = tree.fit(assembler.transform(train))
-    TreeScorer.fromModel(model.rootNode, features)
-  }
+      maxDepth: Int = 4, seed: Long = 0L): TreeScorer.TreeSpec =
+    TreeScorer.fromModel(fitRawTree(train, features, labelCol, maxDepth, seed).rootNode, features)
 
   /** [[fitTreeSpec]] with leaf values = the class-1 POSTERIOR
     * ([[TreeScorer.fromModelProb]]) — the predicted probability a
     * calibration table bins on. */
   def fitTreeProbSpec(train: DataFrame, features: Seq[String], labelCol: String,
-      maxDepth: Int = 4, seed: Long = 0L): TreeScorer.TreeSpec = {
-    val assembler = new VectorAssembler().setInputCols(features.toArray)
-      .setOutputCol("features").setHandleInvalid("keep")
-    val tree = new DecisionTreeClassifier().setLabelCol(labelCol)
-      .setFeaturesCol("features").setMaxDepth(maxDepth).setSeed(seed)
-    val model = tree.fit(assembler.transform(train))
-    TreeScorer.fromModelProb(model, features)
-  }
+      maxDepth: Int = 4, seed: Long = 0L): TreeScorer.TreeSpec =
+    TreeScorer.fromModelProb(fitRawTree(train, features, labelCol, maxDepth, seed), features)
 
-  /** M3-ish input hygiene: cast binaries to double 0/1, label to double. */
+  private def fitRawTree(train: DataFrame, features: Seq[String], labelCol: String,
+      maxDepth: Int, seed: Long): DecisionTreeClassificationModel =
+    new DecisionTreeClassifier().setLabelCol(labelCol)
+      .setFeaturesCol("features").setMaxDepth(maxDepth).setSeed(seed)
+      .fit(binaryLabel(assembler(features, "features").transform(train), labelCol))
+
+  /** The label tagged as a binary nominal attribute. A spark.ml classifier
+    * reads its class count from this metadata instead of running a
+    * `max(label)` job, and a training set holding one class still fits a
+    * two-class tree (class 1 gets posterior 0). Every tree fit here takes
+    * 0/1 labels; a label outside {0, 1} fails the fit. */
+  private def binaryLabel(df: DataFrame, labelCol: String): DataFrame =
+    df.withMetadata(labelCol,
+      NominalAttribute.defaultAttr.withName(labelCol).withNumValues(2).toMetadata())
+
+  /** M3-ish input hygiene: cast binaries to double 0/1, label to double
+    * (carrying [[binaryLabel]]'s metadata). */
   private def prepare(df: DataFrame, cfg: Config): DataFrame = {
     val casts = df.columns.toSeq.map {
       case c if c == cfg.labelCol => col(c).cast("double").as(c)
@@ -429,7 +432,7 @@ object CohortClassifier {
       case c if cfg.numericCols.contains(c) => col(c).cast("double").as(c)
       case c => col(c)
     }
-    df.select(casts: _*).where(col(cfg.labelCol).isNotNull)
+    binaryLabel(df.select(casts: _*).where(col(cfg.labelCol).isNotNull), cfg.labelCol)
   }
 
   /** M6: AUC + accuracy fused into a single scan of the scored test set.
@@ -460,7 +463,7 @@ object CohortClassifier {
     * ≤ 2^maxDepth rows, so the cumulative trapezoid over them is bounded
     * driver math (exact LONG numerator, deterministic desc-score order) —
     * no global window, no second pass over the cohort. */
-  private def metricsOf(model: org.apache.spark.ml.Transformer, test: DataFrame,
+  private[ml] def metricsOf(model: org.apache.spark.ml.Transformer, test: DataFrame,
       labelCol: String): (Double, Double) = {
     import org.apache.spark.ml.functions.vector_to_array
     val scored = model.transform(test).select(

@@ -4,8 +4,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericRowWithSchema}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{array, col, explode, grouping, lit, struct, when}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 
 /** Named aggregation functions for the summary engine (SURVEY §2.5 A1-A6).
   *
@@ -53,7 +56,7 @@ object AggSpec {
   * and the aggregation-name dimension is unpivoted afterwards on the tiny
   * aggregated result. [[summarizeAll]] goes one step further for a cohort
   * with many tables: one pass and one collect for all of them, each table
-  * then the same unpivot over its own local rows.
+  * then the same unpivot done on the driver over its own collected rows.
   */
 object Summarize {
 
@@ -90,17 +93,20 @@ object Summarize {
     * `GROUPING SETS` pass over the union of the specs' category sets
     * computes every spec's cells, plus the `totals` cells (aggregation,
     * input, name), and is collected once. It has at most Σ category
-    * cardinalities + 1 rows. Each table is then [[summarize]]'s unpivot over
-    * the local rows of its own grouping sets, in one partition. A cell of a
-    * category group depends only on that group's rows, so every table
-    * holds what its own [[summarize]] gives. */
+    * cardinalities + 1 rows. Each table is then [[summarize]]'s unpivot of
+    * the rows of its own grouping sets, done on the driver
+    * ([[unpivotRows]]) and returned as a local relation in one partition:
+    * writing or collecting it plans no explode, struct or `when`, so it
+    * compiles no code of its own. A cell of a category group depends only
+    * on that group's rows, so every table holds what its own [[summarize]]
+    * gives. */
   def summarizeAll(df: DataFrame, specs: Seq[Spec],
       totals: Seq[(AggSpec, Column, String)] = Seq.empty): Summaries = {
     val catNames = specs.flatMap(_.cats.map(_._1)).distinct
     val cellCols = specs.zipWithIndex.flatMap { case (s, i) => cells(s, s"t${i}__") } ++
       totals.map { case (a, c, out) => a.fn(c).cast("double").as(out) }
     val grouped = aggregate(df, catNames, cellCols)
-    val rows = grouped.collect().toSeq
+    val rows = collectInterpreted(grouped)
     def outside(r: Row, c: String) = r.getAs[Number](flag(c)).intValue == 1
     // an empty input yields no grouping-sets row, but a table without
     // categories (and the totals) still gets the global aggregate's one
@@ -114,16 +120,69 @@ object Summarize {
       }, grouped.schema)
     }
     val spark = df.sparkSession
+    val timeZone = spark.sessionState.conf.sessionLocalTimeZone
     val tables = specs.zipWithIndex.map { case (s, i) =>
       val own = s.cats.map(_._1)
       val mine = if (own.isEmpty) Seq(all)
         else rows.filter(r => catNames.filterNot(own.contains).forall(outside(r, _)))
-      unpivot(spark.createDataFrame(mine.asJava, grouped.schema), s, s"t${i}__").coalesce(1)
+      val (out, schema) = unpivotRows(mine, grouped.schema, s, s"t${i}__", timeZone)
+      spark.createDataFrame(out.asJava, schema).coalesce(1)
     }
     Summaries(tables, all)
   }
 
-  private def flag(c: String) = s"__grouping__$c"
+  /** `df.collect()` without the encoder's generated deserializer: the plan
+    * runs under its own SQL execution, as `collect` runs it, and its
+    * `UnsafeRow`s become `Row`s through Catalyst's interpreted converters,
+    * so the collect compiles no projection class for the cohort's wide
+    * one-off row layout. */
+  private def collectInterpreted(df: DataFrame): Seq[Row] = {
+    val qe = df.queryExecution
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+      .map(r => toRow(r).asInstanceOf[Row]).toSeq
+  }
+
+  /** [[unpivot]] over collected rows of `schema`, on the driver: the same
+    * rows in the same order (each input row, then `spec.aggs` in order) and
+    * the same schema, nullability included. A category value becomes its
+    * string through Catalyst's own `Cast` in `timeZone`, as the plan casts
+    * it. */
+  private[ops] def unpivotRows(rows: Seq[Row], schema: StructType, spec: Spec,
+      prefix: String, timeZone: String): (Seq[Row], StructType) = {
+    val cats = spec.cats.map { case (c, label) =>
+      (schema.fieldIndex(flag(c)), label, schema.fieldIndex(c), castToString(schema(c).dataType, timeZone))
+    }
+    val cells = spec.aggs.map(a => a.name -> spec.metrics.map { case (_, out) =>
+      schema.fieldIndex(s"$prefix${a.name}__$out") })
+    val out = for {
+      r <- rows
+      (division, category) = cats.find { case (f, _, _, _) => r.getAs[Number](f).intValue == 0 }
+        .map { case (_, label, c, str) => (label, str(r.get(c))) }
+        .getOrElse(("All", "All"))
+      (agg, is) <- cells
+    } yield Row.fromSeq(division +: category +: agg +: is.map(r.get))
+    // the plan's nullability: its `when` chains are nullable only through a
+    // nullable category column, and the exploded struct array merges each
+    // metric's nullability over the aggregations
+    val metricFields = spec.metrics.map { case (_, out) =>
+      StructField(out, DoubleType,
+        spec.aggs.exists(a => schema(s"$prefix${a.name}__$out").nullable))
+    }
+    (out, StructType(
+      StructField("Division", StringType, nullable = false) +:
+      StructField("DivisionCategory", StringType, spec.cats.exists(c => schema(c._1).nullable)) +:
+      StructField("aggregation", StringType, nullable = false) +: metricFields))
+  }
+
+  /** An external value of type `dt` → `cast(value AS STRING)`. */
+  private def castToString(dt: DataType, timeZone: String): Any => String = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val cast = Cast(BoundReference(0, dt, nullable = true), StringType, Some(timeZone))
+    v => Option(cast.eval(InternalRow(toCatalyst(v)))).map(_.toString).orNull
+  }
+
+  private[ops] def flag(c: String) = s"__grouping__$c"
 
   /** Every (agg, metric) cell of `spec`, cast to double so the unpivot
     * unions type-uniform columns (count:Long vs sum:Double etc.). */
@@ -146,7 +205,7 @@ object Summarize {
 
   /** `Division, DivisionCategory, aggregation, <metrics>` over an aggregate
     * carrying `spec`'s cells under `prefix` and its categories' flags. */
-  private def unpivot(grouped: DataFrame, spec: Spec, prefix: String): DataFrame = {
+  private[ops] def unpivot(grouped: DataFrame, spec: Spec, prefix: String): DataFrame = {
     val division =
       spec.cats.foldRight(lit("All")) { case ((c, label), rest) =>
         when(col(flag(c)) === 0, lit(label)).otherwise(rest)

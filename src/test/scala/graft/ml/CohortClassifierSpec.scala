@@ -225,4 +225,55 @@ class CohortClassifierSpec extends SparkSpec {
       r1.bestParams("minInstancesPerNode").asInstanceOf[Int]))
     assert(r1.auc > 0.85, s"auc=${r1.auc}")
   }
+  test("trainEvaluate without the scaler equals the scaled pipeline bit for bit, numeric NULLs included") {
+    // the reference: the old trainEvaluate, Imputer → assemble → MinMaxScaler
+    // → tree over the same prepared, coalesced, cached 70/30 split
+    val withNulls = data
+      .withColumn("x", when(rand(5) < 0.15, lit(null)).otherwise($"x"))
+      .withColumn("noise", when(rand(6) < 0.15, lit(null)).otherwise($"noise"))
+    val cfg = CohortClassifier.Config(
+      labelCol = "label", numericCols = Seq("x", "noise"), binaryCols = Seq("flag"))
+    val prepared = withNulls.select($"label".cast("double").as("label"),
+      $"x".cast("double").as("x"), $"noise".cast("double").as("noise"),
+      $"flag".cast("double").as("flag")).where($"label".isNotNull)
+    val Array(train, test) = prepared.coalesce(8).cache().randomSplit(Array(0.7, 0.3), 0L)
+    assert(train.where($"x".isNull || $"noise".isNull).count() > 0)
+    val ref = CohortClassifier.pipeline(cfg).fit(train)
+    val (refAuc, refAcc) = CohortClassifier.metricsOf(ref, test, "label")
+    val refTree = ref.stages.last
+      .asInstanceOf[org.apache.spark.ml.classification.DecisionTreeClassificationModel]
+
+    val res = CohortClassifier.trainEvaluate(withNulls, cfg)
+    assert(res.model.stages.map(_.getClass.getSimpleName).toSeq ==
+      Seq("ImputerModel", "VectorAssembler", "DecisionTreeClassificationModel"))
+    assert(res.auc == refAuc && res.accuracy == refAcc, s"${(res.auc, res.accuracy)} vs ${(refAuc, refAcc)}")
+    assert(res.featureImportances.map(_._2) == refTree.featureImportances.toArray.toSeq)
+    def scored(m: org.apache.spark.ml.PipelineModel) = m.transform(test)
+      .select($"prediction", $"rawPrediction", $"probability").collect().toSeq
+    val rows = scored(res.model)
+    assert(rows.size == test.count() && rows.map(_.getDouble(0)).distinct.size == 2)
+    assert(rows == scored(ref)) // Row equality compares doubles and vectors exactly
+  }
+
+  test("trainEvaluate runs a bounded number of jobs") {
+    // read back from Parquet, so that every job the fit costs is counted
+    val dir = java.nio.file.Files.createTempDirectory("graft-cohort-jobs").toString + "/cohort"
+    data.write.parquet(dir)
+    val cfg = CohortClassifier.Config(
+      labelCol = "label", numericCols = Seq("x", "noise"), binaryCols = Seq("flag"))
+    val (jobs, res) = org.apache.spark.graftbridge.Listeners.jobs(spark)(
+      CohortClassifier.trainEvaluate(spark.read.parquet(dir), cfg))
+    // the imputer's means, the tree's per-depth statistics and the fused
+    // metrics: 10 jobs. The scaled pipeline, with its scaler fit and its
+    // max(label) scan, ran 14 on this input
+    assert(jobs <= 10, s"$jobs jobs")
+    assert(res.auc > 0.9)
+  }
+
+  test("a one-class training set still fits a two-class tree: class 1 gets posterior 0") {
+    val zeros = data.withColumn("label", lit(0.0))
+    val spec = CohortClassifier.fitTreeProbSpec(zeros, Seq("x", "noise", "flag"), "label")
+    val posteriors = zeros.select(TreeScorer.compile(spec)).as[Double].collect().distinct.toSeq
+    assert(posteriors == Seq(0.0))
+  }
 }

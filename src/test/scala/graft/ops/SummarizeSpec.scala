@@ -1,7 +1,9 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class SummarizeSpec extends SparkSpec {
   import spark.implicits._
@@ -99,5 +101,69 @@ class SummarizeSpec extends SparkSpec {
       Summarize.summarize(empty, Seq(AggSpec.count), Seq("v" -> "v"), Seq("cat1" -> "C1")).collect().toSeq))
     assert(out.tables.map(_.count()) == Seq(2L, 0L))
     assert(out.all.isNullAt(out.all.fieldIndex("vMax")))
+  }
+  test("the driver-side unpivot equals the Catalyst unpivot: rows, order, schema and nullability") {
+    // a hand-made grouping-sets result: one category column per type, each
+    // with a NULL value row, the flags `grouping()` gives (ByteType), a
+    // nullable and a non-nullable cell per aggregation
+    val date = java.sql.Date.valueOf("2021-03-04")
+    val ts = java.sql.Timestamp.valueOf("2021-03-04 05:06:07.089")
+    val cats = Seq(
+      ("s", StringType, "text"), ("i", IntegerType, 42), ("b", BooleanType, true),
+      ("d", DoubleType, 1.0e-7), ("dt", DateType, date), ("ts", TimestampType, ts),
+      ("k", StringType, "kept"))
+    val cells = Seq("sum", "count").flatMap(a => Seq(s"p__${a}__v", s"p__${a}__w"))
+    val schema = StructType(
+      cats.map { case (c, t, _) => StructField(c, t, nullable = c != "k") } ++
+      cats.map { case (c, _, _) => StructField(Summarize.flag(c), ByteType, nullable = false) } ++
+      cells.map(n => StructField(n, DoubleType, nullable = !n.endsWith("count__w"))))
+    // row j groups by category j (value, then NULL); the last row is All.
+    // A column outside a row's grouping set holds NULL, or "kept" where
+    // the column is not nullable
+    def outside(i: Int) = if (cats(i)._1 == "k") "kept" else null
+    val rows = (for {
+      ((_, _, v), j) <- cats.zipWithIndex
+      value <- if (cats(j)._1 == "k") Seq(v) else Seq(v, null)
+    } yield Row.fromSeq(cats.indices.map(i => if (i == j) value else outside(i)) ++
+      cats.indices.map(i => (if (i == j) 0 else 1).toByte) ++
+      cells.indices.map(k => if (value == null && k == 0) null else (10 * j + k).toDouble))) :+
+      Row.fromSeq(cats.indices.map(outside) ++ cats.map(_ => 1.toByte) ++ cells.indices.map(_.toDouble))
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+    def spec(c: Seq[String]) = Summarize.Spec(Seq(AggSpec.sum, AggSpec.count),
+      Seq(col("v") -> "v", col("w") -> "w"), c.map(n => n -> s"L$n"))
+    for (c <- cats.map(_._1).map(Seq(_)) ++ Seq(cats.map(_._1), Seq("k"), Seq.empty)) {
+      val (got, gotSchema) = Summarize.unpivotRows(rows, schema, spec(c), "p__", tz)
+      val want = Summarize.unpivot(local, spec(c), "p__")
+      assert(gotSchema == want.schema, s"cats $c") // StructType equality compares nullability
+      assert(got == want.collect().toSeq, s"cats $c")
+    }
+  }
+
+  test("summarizeAll's tables equal the Catalyst unpivot for every category type") {
+    val typed = Seq(
+      (Some("a"), Some(1), Some(true), Some(0.1), Some(java.sql.Date.valueOf("2020-01-02")), 1.0),
+      (Some("a"), Some(2), Some(false), Some(0.1), None, 2.0),
+      (None, None, None, None, Some(java.sql.Date.valueOf("2020-01-02")), 3.0),
+      (Some("b"), Some(2), Some(true), Some(1e21), Some(java.sql.Date.valueOf("1999-12-31")), 4.0))
+      .toDF("s", "i", "b", "d", "dt", "v")
+    val specs = Seq(
+      Summarize.Spec(Seq(AggSpec.sum, AggSpec.count, AggSpec.median), Seq($"v" -> "v"),
+        Seq("s" -> "S", "i" -> "I", "b" -> "B", "d" -> "D", "dt" -> "DT")),
+      Summarize.Spec(Seq(AggSpec.count), Seq($"v" -> "n"), Seq("dt" -> "DT")),
+      Summarize.Spec(Seq(AggSpec.min, AggSpec.max), Seq($"v" -> "v", $"v".cast("int") -> "vi")))
+    val out = Summarize.summarizeAll(typed, specs)
+    specs.zip(out.tables).foreach { case (s, table) =>
+      val want = Summarize.summarize(typed.select(typed.columns.map(col) ++
+        Seq($"v".as("n"), $"v".cast("int").as("vi")): _*), s.aggs,
+        s.metrics.map(m => m._2 -> m._2), s.cats)
+      assert(table.schema == want.schema)
+      assert(table.collect().toSeq.sortBy(_.toString) == want.collect().toSeq.sortBy(_.toString))
+      // collected-row order × aggregation order
+      assert(table.collect().map(_.getString(2)).grouped(s.aggs.size)
+        .forall(_.toSeq == s.aggs.map(_.name)))
+    }
+    assert(out.tables(2).schema("Division").nullable == false)
+    assert(out.tables(2).schema("DivisionCategory").nullable == false)
   }
 }
